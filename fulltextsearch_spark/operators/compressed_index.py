@@ -23,8 +23,9 @@ no per-row Python). Every block carries enough metadata for skip +
 block-max pruning in the MaxScore/WAND query path
 (:mod:`fulltextsearch_spark.operators.wand`).
 
-Scale notes: rows are per *term*, so the table partitions/buckets by term
-hash; a head term's row is large but bounded by the salted build upstream and
+Scale notes: rows are per *term*; saved tables are range-sorted by term
+(:func:`save_compressed_index`), so a term lookup reads one row group. A
+head term's row is large but bounded by the salted build upstream and
 by varint compression (~2-3 bytes/posting vs 24 raw). The format is
 streaming-friendly: blocks decode independently via byte offsets.
 """
@@ -1289,6 +1290,12 @@ def _reencode_postings(postings: DataFrame, block_size: int, codec: str) -> Data
 def save_compressed_index(index: CompressedIndex, root: str, codec: str | None = None) -> None:
     """Persist under ``root``: postings clustered by term, stats scalars.
 
+    Postings go through :func:`~fulltextsearch_spark.operators.util.
+    write_clustered` (global sort by term, small row groups), so the
+    footers' term ranges are sorted and disjoint: ``QueryServer.
+    search_local``'s footer pruning and the Spark scan's pushed ``term IN``
+    filter read only the row group that can hold each query term.
+
     ``codec`` re-encodes the posting streams at save time (``"pfor"`` for
     bit-packing, ~0.85x varint bytes measured; ``"ef"`` for Elias-Fano,
     whose cost tracks posting density — ~0.5x varint on dense head
@@ -1299,7 +1306,10 @@ def save_compressed_index(index: CompressedIndex, root: str, codec: str | None =
     ``{root}/_lineage.jsonl`` — the reference's footprint metric
     (``fts_engine.hpp:50-60``) re-expressed as durable storage size.
     """
-    from fulltextsearch_spark.operators.util import record_footprint  # noqa: PLC0415
+    from fulltextsearch_spark.operators.util import (  # noqa: PLC0415
+        record_footprint,
+        write_clustered,
+    )
 
     out_codec = codec or index.codec
     postings = index.postings
@@ -1307,9 +1317,9 @@ def save_compressed_index(index: CompressedIndex, root: str, codec: str | None =
         if index.codec != "varint" or out_codec not in ("pfor", "ef"):
             raise ValueError(f"unsupported re-encode {index.codec!r} -> {out_codec!r}")
         postings = _reencode_postings(postings, index.block_size, out_codec)
-    postings.repartition(F.col("term")).sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{root}/postings")
+    write_clustered(
+        postings, "term", f"{root}/postings", F.get("block_first_doc", 0)
+    )
     index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
     spark = index.postings.sparkSession
     spark.createDataFrame(

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from fulltextsearch_spark.functions.scoring import bm25_col
 from fulltextsearch_spark.functions.tokenizer import tokenize_udf
 from fulltextsearch_spark.operators.query import topk
+from fulltextsearch_spark.operators.util import write_clustered
 
 __all__ = [
     "PositionalIndex",
@@ -109,11 +110,10 @@ def build_positional_index(
 
 
 def save_positional_index(index: PositionalIndex, root: str) -> None:
-    """Term-clustered parquet, like io.save_index: a phrase probe touches
-    O(phrase-terms) files via footer min/max on ``term``."""
-    index.postings.repartition(F.col("term")).sortWithinPartitions(
-        "term"
-    ).write.mode("overwrite").parquet(f"{root}/postings")
+    """Term-clustered parquet (:func:`write_clustered`), like
+    io.save_index: a phrase probe reads O(phrase-terms) row groups via
+    footer min/max on ``term``."""
+    write_clustered(index.postings, "term", f"{root}/postings", F.col("doc_id"))
     index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
     index.postings.sparkSession.createDataFrame(
         [(index.n_docs, index.avgdl, index.stem)],

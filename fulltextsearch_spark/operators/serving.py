@@ -12,10 +12,12 @@ the serving path:
   reference reads one line at a time), so this is not a collect-style
   anti-pattern; it is what turns the term set into a *static* predicate;
 * the needed terms become a ``term IN (...)`` filter that *pushes into the
-  parquet scan* — the index writer clusters rows by term
-  (``save_compressed_index`` repartition+sortWithinPartitions), so footer
-  min/max statistics skip every row group without a matching term. The scan
-  reads O(query terms) row groups out of the whole index;
+  parquet scan*. ``save_compressed_index`` writes the postings globally
+  sorted by term in ~512 KB row groups (``util.write_clustered``), so the
+  footers' term [min, max] ranges are disjoint, and min/max statistics
+  skip every row group but the one that can hold each term. The
+  scan reads O(query terms) row groups out of the whole index. A hash
+  layout would put every term range in every file and prune nothing;
 * one job broadcast-joins the tiny (query_id, term, qtf) frame and runs the
   same block-max MaxScore kernel — results are byte-identical to
   ``search_wand`` (pinned by tests/test_serving.py).
@@ -95,10 +97,22 @@ class QueryServer:
     # never pay a full decode) and attached to the kernel entries, where
     # block "decode" becomes slicing so block-max pruning keeps skipping.
     decoded_cache_mb: int = 256
-    # lazy fast-path state: per-row-group (path, rg, term_min, term_max)
-    # manifest from the parquet footers + open file handles
+    # lazy fast-path state: per-row-group (path, rg, term_min, term_max,
+    # kernel-column bytes) manifest from the parquet footers + open file
+    # handles
     _rg_manifest: list | None = field(default=None, repr=False)
     _pf_cache: dict = field(default_factory=dict, repr=False)
+    # search_local fetch counters (read-only for callers): row groups read /
+    # skipped by the manifest, and compressed bytes of the columns read
+    # (footer column-chunk sizes)
+    counters: dict = field(
+        init=False,
+        repr=False,
+        compare=False,
+        default_factory=lambda: dict.fromkeys(
+            ("row_groups_read", "row_groups_pruned", "bytes_read"), 0
+        ),
+    )
     _dec_cache: dict = field(default_factory=dict, repr=False)  # key -> (d,t,l,nbytes)
     _dec_seen: dict = field(default_factory=dict, repr=False)
     _dec_bytes: int = field(default=0, repr=False)
@@ -186,10 +200,14 @@ class QueryServer:
 
     def _ensure_manifest(self) -> None:
         """One footer-metadata pass over the postings files: per row group,
-        record the term column's min/max statistics (the writer clusters
-        rows by term, so these prune exactly like the Spark scan's
-        PushedFilters do). O(row groups) driver memory — a few dozen bytes
-        per ~128 MB of index."""
+        record the term column's min/max statistics and the compressed
+        bytes of the kernel columns. The writer sorts the whole table by
+        term in small row groups, so the ranges are disjoint and each term
+        falls in one of them (or two, when a sharded term's rows straddle a
+        boundary); they prune exactly like the Spark scan's PushedFilters
+        do. A hash-partitioned index (older writers) still serves
+        correctly, its overlapping ranges just prune little. O(row groups)
+        driver memory — a few dozen bytes per ~512 KB of index."""
         if self._rg_manifest is not None:
             return
         import os  # noqa: PLC0415
@@ -197,7 +215,8 @@ class QueryServer:
         import pyarrow.parquet as pq  # noqa: PLC0415
 
         pdir = self._local_postings_dir()
-        manifest: list[tuple[str, int, str | None, str | None]] = []
+        kernel_cols = set(_KERNEL_COLS)
+        manifest: list[tuple[str, int, str | None, str | None, int]] = []
         for fn in sorted(os.listdir(pdir)):
             if not fn.endswith(".parquet"):
                 continue
@@ -211,18 +230,25 @@ class QueryServer:
                 i for i in range(len(pschema)) if pschema.column(i).path == "term"
             )
             for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(term_idx).statistics
+                md = pf.metadata.row_group(rg)
+                st = md.column(term_idx).statistics
                 mn = st.min if st is not None and st.has_min_max else None
                 mx = st.max if st is not None and st.has_min_max else None
-                manifest.append((path, rg, mn, mx))
+                nbytes = sum(
+                    md.column(c).total_compressed_size
+                    for c in range(md.num_columns)
+                    if md.column(c).path_in_schema.split(".")[0] in kernel_cols
+                )
+                manifest.append((path, rg, mn, mx, nbytes))
         self._rg_manifest = manifest
 
     def _matched_rows(self, terms: list[str]) -> dict[str, list[dict]]:
         """Kernel-ready base entries (qtf-free) for the given terms, grouped
-        by term. Warm terms come straight from the LRU row cache; only the
-        misses pay a parquet pass — read ONLY the row groups whose
-        [min, max] term range can contain a missing term, filter to exact
-        matches, convert once to (bytes, numpy) kernel form, cache."""
+        by term; ``terms`` must be sorted. Warm terms come straight from the
+        LRU row cache; only the misses pay a parquet pass — read ONLY the
+        row groups whose [min, max] term range can contain a missing term,
+        filter to exact matches, convert once to (bytes, numpy) kernel
+        form, cache. Updates :attr:`counters`."""
         import bisect  # noqa: PLC0415
 
         import pyarrow as pa  # noqa: PLC0415
@@ -240,13 +266,17 @@ class QueryServer:
         if not missing:
             return by_term
 
+        counters = self.counters
         term_set = pa.array(missing, type=pa.string())
         fetched: dict[str, list[dict]] = {}
-        for path, rg, mn, mx in self._rg_manifest:
+        for path, rg, mn, mx, nbytes in self._rg_manifest:
             if mn is not None and mx is not None:
                 i = bisect.bisect_left(missing, mn)
                 if i >= len(missing) or missing[i] > mx:
+                    counters["row_groups_pruned"] += 1
                     continue  # no missing term inside this row group's range
+            counters["row_groups_read"] += 1
+            counters["bytes_read"] += nbytes
             tbl = self._pf_cache[path].read_row_group(rg, columns=_KERNEL_COLS)
             tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=term_set))
             for row in tbl.to_pylist():  # O(missing terms x shards) rows

@@ -245,14 +245,18 @@ def save_trigram_index(index: TrigramIndex, root: str) -> None:
     The reference's store() writes a bespoke mmap-able binary snapshot
     (doc_count, avgdl, doc->len pairs, then the hash table —
     trigram_index_engine.cpp:95-127); here the durable form is columnar
-    parquet clustered by key so a reload scans exactly the probed rows via
-    footer min/max, and the scalar stats ride in a one-row table.
+    parquet range-clustered by key (:func:`write_clustered`) so a reload
+    scans exactly the probed row groups via footer min/max, and the scalar
+    stats ride in a one-row table.
     """
-    from fulltextsearch_spark.operators.util import record_footprint  # noqa: PLC0415
+    from fulltextsearch_spark.operators.util import (  # noqa: PLC0415
+        record_footprint,
+        write_clustered,
+    )
 
-    index.postings.repartition(F.col("key")).sortWithinPartitions("key").write.mode(
-        "overwrite"
-    ).parquet(f"{root}/postings")
+    write_clustered(
+        index.postings, "key", f"{root}/postings", F.get("postings", 0)["doc_id"]
+    )
     index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
     index.postings.sparkSession.createDataFrame(
         [(index.doc_count, index.avgdl, index.stop_threshold)],

@@ -11,9 +11,9 @@ are persisted as three tables under one root: ``postings``, ``doc_stats``,
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from fulltextsearch_spark.operators.index_build import IndexTables
+from fulltextsearch_spark.operators.util import write_clustered
 
 __all__ = ["iceberg_available", "read_table", "write_table", "save_index", "load_index"]
 
@@ -43,13 +43,12 @@ def write_table(df: DataFrame, location: str, fmt: str | None = None, mode: str 
 def save_index(index: IndexTables, root: str) -> None:
     """Persist the logical index as three tables under ``root``.
 
-    ``postings`` is written bucketed-by-term-hash via repartition so a term's
-    postings land in one file (point lookups touch one file; the query
-    broadcast-join prunes with min/max term statistics in the footer).
+    ``postings`` is written by :func:`write_clustered`: globally sorted by
+    term in small row groups, so the footers' term ranges are disjoint and a
+    pushed ``term IN (...)`` filter reads only the row groups that hold the
+    queried terms.
     """
-    index.postings.repartition(F.col("term")).sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{root}/postings")
+    write_clustered(index.postings, "term", f"{root}/postings")
     index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
     spark = index.postings.sparkSession
     spark.createDataFrame(

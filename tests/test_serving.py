@@ -6,7 +6,9 @@ results rank-identical to search_wand.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 import pytest
 
 from fulltextsearch_spark.config import EngineConfig
@@ -30,8 +32,47 @@ def index_root(spark, tmp_path_factory):
         generate_webpages(spark, 400, seed=23).select("url", "text"), order_col="url"
     )
     cidx = build_compressed_index(spark, docs, CFG)
-    save_compressed_index(cidx, path)
+    with _several_files(spark):
+        save_compressed_index(cidx, path)
     return path
+
+
+@contextmanager
+def _several_files(spark):
+    """Save with AQE partition coalescing off, so the session's 8 range
+    partitions stay 8 files and a tiny index still spans several term
+    ranges (coalescing would merge them into one file)."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _row_groups(root):
+    """(file, row group, term min, term max) of every postings row group,
+    in file-name (= range partition) order."""
+    pdir = os.path.join(root, "postings")
+    out = []
+    for fn in sorted(os.listdir(pdir)):
+        if not fn.endswith(".parquet"):
+            continue
+        pf = pq.ParquetFile(os.path.join(pdir, fn))
+        for rg in range(pf.metadata.num_row_groups):
+            col = pf.metadata.row_group(rg).column(0)
+            assert col.path_in_schema == "term"
+            out.append((pf, rg, col.statistics.min, col.statistics.max))
+    return out
+
+
+def _assert_term_clustered(root):
+    ranges = [(mn, mx) for _, _, mn, mx in _row_groups(root)]
+    assert len(ranges) > 1, ranges
+    assert all(mn <= mx for mn, mx in ranges)
+    # sorted and pairwise disjoint: each range ends before the next begins
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
 
 
 def _key(rows):
@@ -318,3 +359,101 @@ def test_search_local_parallel_workers_identical(spark, tmp_path):
     assert pooled.search_local(QUERY_SET, cfg, workers=4) == base_cold
     assert pooled.search_local(QUERY_SET, cfg, workers=4) == base_warm
     assert pooled.search_local(QUERY_SET, cfg, workers=4) == base_warm  # cached
+
+
+def test_saved_postings_are_term_range_clustered(index_root):
+    """The writer sorts the whole postings table by term: across all files
+    and row groups the footers' term [min, max] ranges are sorted and
+    disjoint, which is what lets search_local's footer pruning read only
+    the one row group that can hold a term."""
+    _assert_term_clustered(index_root)
+
+
+def test_search_local_reads_one_row_group_per_term(spark, index_root):
+    """Cold lookups read exactly the row group whose range holds the term
+    (counted by QueryServer.counters), and none for an unknown term that
+    falls between two ranges."""
+    from fulltextsearch_spark.functions.tokenizer import tokenize
+    from fulltextsearch_spark.operators.serving import _KERNEL_COLS
+
+    groups = _row_groups(index_root)
+    pf, rg, _, _ = groups[1]
+    terms = pf.read_row_group(rg, columns=["term"]).column("term").to_pylist()
+    known = next(t for t in terms if tokenize(t, CFG.stem) == [t])
+    meta = pf.metadata.row_group(rg)
+    want_bytes = sum(
+        meta.column(c).total_compressed_size
+        for c in range(meta.num_columns)
+        if meta.column(c).path_in_schema.split(".")[0] in _KERNEL_COLS
+    )
+
+    server = QueryServer.load(spark, index_root)
+    assert server.search_local([("k", known)], CFG)
+    assert server.counters == {
+        "row_groups_read": 1,
+        "row_groups_pruned": len(groups) - 1,
+        "bytes_read": want_bytes,
+    }
+    server.search_local([("k", known)], CFG)  # warm: row cache, no fetch
+    assert server.counters["row_groups_read"] == 1
+
+    gap = next(
+        c
+        for (_, _, _, a), (_, _, b, _) in zip(groups, groups[1:])
+        for c in (a + ch for ch in "abcdefghijklmnopqrstuvwxyz")
+        if a < c < b and tokenize(c, CFG.stem) == [c]
+    )
+    cold = QueryServer.load(spark, index_root)
+    assert cold.search_local([("u", gap)], CFG) == []
+    assert cold.counters == {
+        "row_groups_read": 0,
+        "row_groups_pruned": len(groups),
+        "bytes_read": 0,
+    }
+
+
+@pytest.mark.parametrize("codec", [None, "pfor"])
+def test_resaved_index_keeps_layout_and_answers(spark, index_root, tmp_path, codec):
+    """Load -> save again (plain, and through the pfor re-encode): the copy
+    keeps the term-clustered layout and search_local over it answers
+    QUERY_SET exactly as search_wand does, and as the original index."""
+    qdf = spark.createDataFrame(QUERY_SET, ["query_id", "content"])
+    want = _key(search_wand(load_compressed_index(spark, index_root), qdf, CFG).collect())
+
+    again = str(tmp_path / "resaved")
+    with _several_files(spark):
+        save_compressed_index(load_compressed_index(spark, index_root), again, codec=codec)
+    _assert_term_clustered(again)
+
+    resaved = load_compressed_index(spark, again)
+    assert resaved.codec == (codec or "varint")
+    server = QueryServer.load(spark, again)
+    got = sorted(
+        (q, r, d, round(s, 9)) for q, r, d, s in server.search_local(QUERY_SET, CFG)
+    )
+    assert got == _key(search_wand(resaved, qdf, CFG).collect()) == want
+    assert len(got) > 0
+
+
+def test_search_local_overlapping_ranges_still_identical(spark, index_root, tmp_path):
+    """Backward compatibility: an index whose row-group term ranges overlap
+    (a hash-partitioned layout, as older writers produced) still answers
+    identically through search_local."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    old = str(tmp_path / "hash_layout")
+    for table in ("doc_stats", "corpus_stats"):
+        shutil.copytree(os.path.join(index_root, table), os.path.join(old, table))
+    with _several_files(spark):
+        spark.read.parquet(f"{index_root}/postings").repartition(
+            F.col("term")
+        ).sortWithinPartitions("term").write.parquet(f"{old}/postings")
+    ranges = [(mn, mx) for _, _, mn, mx in _row_groups(old)]
+    assert any(a[1] >= b[0] for a, b in zip(ranges, ranges[1:]))  # overlapping
+
+    want = QueryServer.load(spark, index_root).search_local(QUERY_SET, CFG)
+    server = QueryServer.load(spark, old)
+    assert server.search_local(QUERY_SET, CFG) == want and want
+    assert server.counters["row_groups_read"] > 0
