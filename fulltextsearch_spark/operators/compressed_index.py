@@ -6,7 +6,7 @@ and dumps them verbatim, ``/root/reference/src/data-structures/
 hash_index.hpp:137-173`` — fine in one address space, untenable distributed).
 
 One row per term (or per (term, doc-range shard) when
-``cfg.shard_postings`` caps row size — see :func:`compress_doc_tf`)::
+``cfg.shard_postings`` caps row size — see :func:`_merge_partials`)::
 
     term STRING, df BIGINT, count BIGINT,
     doc_ids_enc BINARY,   -- block-restarting delta + LEB128 varint
@@ -17,16 +17,21 @@ One row per term (or per (term, doc-range shard) when
     block_max_tfpart ARRAY<DOUBLE>,  -- max BM25 tf-part per block (block-max)
     block_max_tfdl ARRAY<DOUBLE>     -- max tf/dl per block (TF-IDF block-max)
 
-Encoding runs in one Arrow-batched ``pandas_udf`` over the logical postings
-arrays (numpy kernels from :mod:`fulltextsearch_spark.operators.compression`;
-no per-row Python). Every block carries enough metadata for skip +
-block-max pruning in the MaxScore/WAND query path
+Every batch build runs one core: a ``mapInArrow`` pass tokenizes text and
+packs each task's postings into delta+varint byte partials
+(:func:`_pack_texts`), the partials shuffle by term, and
+:func:`_index_from_partials` concatenates them into the rows above and
+reduces corpus stats from per-task sentinel rows. Two entry points feed it:
+:func:`build_compressed_index` (a DataFrame with ``doc_id``) and
+:func:`build_compressed_index_pyfiles` (a parquet path, read by the workers
+with pyarrow). Every block carries enough metadata for skip + block-max
+pruning in the MaxScore/WAND query path
 (:mod:`fulltextsearch_spark.operators.wand`).
 
 Scale notes: rows are per *term*; saved tables are range-sorted by term
 (:func:`save_compressed_index`), so a term lookup reads one row group. A
-head term's row is large but bounded by the salted build upstream and
-by varint compression (~2-3 bytes/posting vs 24 raw). The format is
+head term's row size is bounded by ``cfg.shard_postings`` and by varint
+compression (~2-3 bytes/posting vs 24 raw). The format is
 streaming-friendly: blocks decode independently via byte offsets.
 """
 
@@ -47,18 +52,15 @@ from fulltextsearch_spark.operators.compression import (
     varint_encode,
     varint_nbytes,
 )
-from fulltextsearch_spark.operators.index_build import IndexTables, build_index
+from fulltextsearch_spark.operators.index_build import IndexTables
 
 __all__ = [
     "CompressedIndex",
     "COMPRESSED_POSTINGS_FIELDS",
     "compress_postings",
-    "compress_doc_tf",
-    "compress_tokenized",
     "decompress_postings",
     "build_compressed_index",
-    "build_compressed_index_raw",
-    "build_compressed_index_files",
+    "build_compressed_index_pyfiles",
     "save_compressed_index",
     "load_compressed_index",
 ]
@@ -490,77 +492,52 @@ def _docstats_sentinel(doc_parts: list[np.ndarray], dl_parts: list[np.ndarray]):
     )
 
 
-def _partial_rows_fused(
-    docs: DataFrame,
-    text_col: str,
-    stem: bool,
-    bucket_offsets: dict[int, int] | None = None,
-) -> DataFrame:
-    """text -> tokenize -> delta+varint partials in ONE Arrow pass.
+def _pack_texts(pairs, stem: bool):
+    """``(doc_ids, text_array)`` pairs -> this task's partial RecordBatches.
 
-    Fuses :func:`~fulltextsearch_spark.operators.index_build._tokenized` and
-    :func:`_partial_rows_tokenized`: the tokenized token arrays are never
-    materialized, cached, or re-serialized over Arrow IPC — the
-    ``term_counts_flat`` outputs (term ranks + counts) feed the partial
-    packer directly in the same Python worker (the IPC read-back of the
-    cached tokenized table was ~30% of the pack stage, measured via the UDF
-    profiler). Each task additionally emits ONE sentinel row
-    (``_DOCSTATS_TERM``) carrying its delta+varint (doc_id, dl) streams so
-    corpus stats and ``doc_stats`` come from the same single pass.
-
-    With ``bucket_offsets`` the input is the *arranged* frame of
-    :func:`~fulltextsearch_spark.sources.ingest.arranged_with_offsets`
-    (``_b`` bucket column, rows sorted (``_b``, order key)) and dense doc_ids
-    are assigned INSIDE this pass (offset + per-bucket running counter,
-    identical ids to ``assign_dense_doc_ids`` by construction) — the text
-    then crosses the Python boundary exactly once for the whole build and
-    never returns to the JVM.
+    The one text -> partials loop of every batch build: ``term_counts_flat``
+    outputs (term ranks + counts) feed the partial packer directly in the
+    same Python worker, so token arrays are never materialized or sent back
+    over Arrow IPC. After the term partials it yields the task's sentinel
+    rows (``_DOCSTATS_TERM``/``_DOCAGG_TERM``), so corpus stats and
+    ``doc_stats`` come from the same single pass.
     """
+    from fulltextsearch_spark.functions.tokenizer import term_counts_flat  # noqa: PLC0415
+
+    packer = _PartialAccumulator()
+    doc_parts: list[np.ndarray] = []
+    dl_parts: list[np.ndarray] = []
+    for doc_ids, text in pairs:
+        dl, sorted_terms, ud, uc, cnt = term_counts_flat(text, stem, order="term")
+        doc_parts.append(doc_ids)
+        dl_parts.append(dl)
+        if uc.size:
+            packer.add_buffer(sorted_terms, uc, doc_ids[ud], cnt, dl[ud], presorted=True)
+    yield from packer.emit_batches()
+    if doc_parts:
+        yield _docstats_sentinel(doc_parts, dl_parts)
+
+
+def _partial_rows_fused(docs: DataFrame, text_col: str, stem: bool) -> DataFrame:
+    """(doc_id, text) frame -> delta+varint partials in ONE Arrow pass
+    (:func:`_pack_texts` over the frame's Arrow batches)."""
 
     def _map(batches):
-        import pyarrow as pa  # noqa: PLC0415
-
-        from fulltextsearch_spark.functions.tokenizer import term_counts_flat  # noqa: PLC0415
-
-        packer = _PartialAccumulator()
-        doc_parts: list[np.ndarray] = []
-        dl_parts: list[np.ndarray] = []
-        used: dict[int, int] = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if bucket_offsets is None:
-                doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            else:
-                buckets = rb.column("_b").to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids = np.empty(buckets.size, dtype=np.int64)
-                # rows arrive sorted by bucket within the partition; running
-                # counters keep ids correct across Arrow batches
-                for b in np.unique(buckets):
-                    m = buckets == b
-                    start = bucket_offsets[int(b)] + used.get(int(b), 0)
-                    n_b = int(m.sum())
-                    doc_ids[m] = np.arange(start, start + n_b, dtype=np.int64)
-                    used[int(b)] = used.get(int(b), 0) + n_b
-            dl, sorted_terms, ud, uc, cnt = term_counts_flat(
-                rb.column("text"), stem, order="term"
-            )
-            doc_parts.append(doc_ids)
-            dl_parts.append(dl)
-            if uc.size:
-                packer.add_buffer(
-                    sorted_terms, uc, doc_ids[ud], cnt, dl[ud], presorted=True
+        yield from _pack_texts(
+            (
+                (
+                    rb.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64),
+                    rb.column("text"),
                 )
-        yield from packer.emit_batches()
-        if doc_parts:
-            yield _docstats_sentinel(doc_parts, dl_parts)
-
-    if bucket_offsets is None:
-        slim = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"), F.col(text_col).alias("text")
+                for rb in batches
+                if rb.num_rows
+            ),
+            stem,
         )
-    else:
-        slim = docs.select(F.col("_b"), F.col(text_col).alias("text"))
+
+    slim = docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"), F.col(text_col).alias("text")
+    )
     return slim.mapInArrow(_map, schema=_PARTIAL_FIELDS)
 
 
@@ -585,61 +562,25 @@ def _decode_doc_stats(sentinels: DataFrame) -> DataFrame:
     return sentinels.mapInArrow(_map, "doc_id long, dl long")
 
 
-def compress_doc_tf(
-    doc_tf: DataFrame,
-    avgdl: float,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """(doc_id, term, tf, dl) rows -> compressed per-term rows, directly.
-
-    THE scalable build path, classic MapReduce-indexer shape:
-
-    1. map-side combine (:func:`_partial_rows`): each input partition packs
-       its per-term postings into delta+varint byte partials — all heavy
-       encode CPU happens here, embarrassingly parallel, pre-shuffle;
-    2. shuffle the compact partials by term (bytes moved ≈ compressed index
-       size, not exploded-row size) and sort (term, first_doc) with Spark's
-       external shuffle sort;
-    3. streaming reduce: per term, concatenate the partial byte streams
-       (varint streams concatenate as-is; docID absolutes are restored with
-       one segmented-cumsum fixup), then emit the block-restarting encoded
-       row with block-max metadata via ``_encode_one``.
-
-    No ``collect_list``/``sort_array`` materializing multi-hundred-MB JVM
-    arrays per head term; reduce memory is bounded by one term's numpy
-    buffers. At 10^12 docs a head term's postings exceed one task:
-    ``cfg.shard_postings`` caps the per-row buffer by emitting multiple
-    self-contained doc-range rows per head term (each with its own
-    blocks/offsets/block-max); readers treat every row as an independent
-    posting slice and derive the term's df as the sum of row counts
-    (pinned by tests/test_skew.py::test_sharded_head_term*).
-    """
-    return _merge_partials(_partial_rows(doc_tf), avgdl, cfg, num_partitions)
-
-
-def compress_tokenized(
-    with_tc: DataFrame,
-    avgdl: float,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Tokenized (doc_id, dl, terms, tfs) frame -> compressed per-term rows.
-
-    Same pipeline as :func:`compress_doc_tf` but the map-side combine reads
-    the token arrays directly (:func:`_partial_rows_tokenized`) — no JVM
-    explode and ~3x less Arrow traffic per posting. Preferred whenever the
-    tokenized frame is at hand (build, checkpointed chunks, streaming merge).
-    """
-    return _merge_partials(_partial_rows_tokenized(with_tc), avgdl, cfg, num_partitions)
-
-
 def _merge_partials(
     partials: DataFrame,
     avgdl: float,
     cfg: EngineConfig,
     num_partitions: int | None = None,
 ) -> DataFrame:
+    """Partial rows (:data:`_PARTIAL_FIELDS`) -> compressed per-term rows.
+
+    Shuffles the compact partials by term (bytes moved ≈ compressed index
+    size, not exploded-row size), sorts (term, first_doc), then per term
+    concatenates the byte streams (varint streams concatenate as-is; docID
+    absolutes are restored with one segmented-cumsum fixup) and emits the
+    block-restarting encoded row with block-max metadata. Reduce memory is
+    bounded by one term's buffers: ``cfg.shard_postings`` caps it by
+    emitting several self-contained doc-range rows per head term (each with
+    its own blocks/offsets/block-max); readers treat every row as an
+    independent posting slice and derive the term's df as the sum of row
+    counts (pinned by tests/test_skew.py::test_sharded_head_term*).
+    """
     block_size, k1, b = cfg.block_size, cfg.k1, cfg.b
     spark = partials.sparkSession
     n_parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1015,86 +956,19 @@ def build_compressed_index(
     cfg: EngineConfig = DEFAULT_CONFIG,
     text_col: str = "text",
 ) -> CompressedIndex:
-    """Corpus -> compressed physical index in ONE fused map pass + shuffle.
+    """(doc_id, text) frame -> compressed physical index in ONE fused map
+    pass + shuffle.
 
     :func:`_partial_rows_fused` tokenizes and packs delta+varint partials in
-    the same Arrow worker pass (no tokenized-table materialization at all);
-    the small partials table is what gets persisted — roughly compressed-
-    index-sized, vs ~input-text-sized for the tokenized cache it replaces.
-    Corpus stats and ``doc_stats`` decode from the per-task sentinel rows.
+    the same Arrow worker pass; the persisted partials table is roughly
+    compressed-index-sized. Corpus stats and ``doc_stats`` come from the
+    per-task sentinel rows.
     """
     return _index_from_partials(_partial_rows_fused(docs, text_col, cfg.stem), cfg)
 
 
-def build_compressed_index_raw(
-    spark: SparkSession,
-    raw: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    order_col: str = "url",
-    text_col: str = "text",
-) -> CompressedIndex:
-    """RAW corpus (no doc_id yet) -> compressed index, maximally fused.
-
-    Composes :func:`~fulltextsearch_spark.sources.ingest.arranged_with_offsets`
-    with :func:`_partial_rows_fused`: dense id assignment, tokenization, and
-    partial packing all run inside ONE ``mapInArrow`` pass over the arranged
-    shuffle — the text moves through Python exactly once and only compact
-    binary partials come back (the separate ``assign_dense_doc_ids`` pass
-    was ~30% of wall-clock build time at 8 cores). Ids are identical to the
-    two-pass path by construction (pinned by tests/test_skew.py).
-
-    Note: this path does not materialize a (url, doc_id) map; ingest with
-    ``assign_dense_doc_ids`` first when a doc map is needed.
-    """
-    from fulltextsearch_spark.sources.ingest import arranged_with_offsets  # noqa: PLC0415
-
-    arranged, offsets = arranged_with_offsets(
-        raw.select(order_col, text_col), order_col
-    )
-    return _index_from_partials(
-        _partial_rows_fused(arranged, text_col, cfg.stem, bucket_offsets=offsets), cfg
-    )
-
-
-def build_compressed_index_files(
-    spark: SparkSession,
-    input_path: str,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    text_col: str = "text",
-) -> CompressedIndex:
-    """Parquet directory -> compressed index with ZERO ingest shuffle.
-
-    Ids come from :func:`~fulltextsearch_spark.sources.ingest.
-    assign_file_order_doc_ids` (sorted-file order — the reference's own
-    ingest semantic, parquet2parquet.py:8-56), a narrow expression over scan
-    metadata; the fused tokenize+pack map then runs directly on the scan
-    partitions. The build's ONLY wide operation is the term shuffle of
-    compressed partials. The fastest build path; pick
-    :func:`build_compressed_index_raw` when ids must follow a key order.
-    """
-    import os  # noqa: PLC0415
-
-    from fulltextsearch_spark.sources.ingest import assign_file_order_doc_ids  # noqa: PLC0415
-
-    # size scan partitions to the cluster: with no ingest shuffle the scan
-    # partitioning IS the build parallelism, and the 128 MB default packs a
-    # small-file corpus into a couple of tasks (observed: 2 tasks on 8
-    # cores). Target ~2 tasks/core, clamped to [4 MB, 128 MB].
-    total = sum(
-        os.path.getsize(f[7:] if f.startswith("file://") else f)
-        for f in spark.read.parquet(input_path).inputFiles()
-    )
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    target = min(max(total // (2 * par) + 1, 4 << 20), 128 << 20)
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-    try:
-        docs = assign_file_order_doc_ids(spark, input_path, columns=[text_col])
-        # stats collect inside materializes the partials cache, so the conf
-        # can be restored as soon as this returns
-        return _index_from_partials(_partial_rows_fused(docs, text_col, cfg.stem), cfg)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+# pyfiles build: manifest tasks per core (each task reads whole row groups)
+_TASKS_PER_CORE = 4
 
 
 def build_compressed_index_pyfiles(
@@ -1103,28 +977,27 @@ def build_compressed_index_pyfiles(
     cfg: EngineConfig = DEFAULT_CONFIG,
     text_col: str = "text",
     batch_rows: int = 10_000,
-    tasks_per_core: int = 4,
 ) -> CompressedIndex:
     """Parquet directory -> compressed index, workers reading parquet
     DIRECTLY with pyarrow (no JVM decode, no Arrow-IPC text hop).
 
-    :func:`build_compressed_index_files` routes text through the JVM scan:
-    parquet -> JVM column decode -> Arrow IPC -> Python worker. For this
-    build the text is opaque to every JVM operator (no filter, no join
-    touches it), so that decode+serialize hop is pure overhead — measured at
-    ~2.3x the map stage at 8 cores (600k docs: 11.2s via the JVM scan vs
+    The text is opaque to every JVM operator of this build (no filter, no
+    join touches it), so routing it through the JVM scan (parquet -> JVM
+    column decode -> Arrow IPC -> Python worker) is pure overhead — measured
+    at ~2.3x the map stage at 8 cores (600k docs: 11.2s via the JVM scan vs
     4.7s for the same tokenize+pack kernel over pyarrow file reads).
 
-    Here the driver makes one footer-metadata pass (the same listing the
-    scan planner performs) to build a (path, row_group, start_id) manifest —
+    The driver makes one footer-metadata pass (the same listing the scan
+    planner performs) to build a (path, row_group, start_id) manifest —
     doc_ids are identical to :func:`~fulltextsearch_spark.sources.ingest.
     assign_file_order_doc_ids` by construction (sorted-file order, offsets
-    from footer row counts; pinned by tests/test_compression.py). The
-    manifest round-robins across ``tasks_per_core x parallelism`` tasks
-    (row-group granularity — the same split limit the JVM scan has), and
-    each task reads its row groups with :mod:`pyarrow.parquet` and runs the
-    SAME fused tokenize+pack kernel. The build's only wide operation
-    remains the term shuffle of compressed partials.
+    from footer row counts; pinned by tests/test_sources.py). The manifest
+    round-robins across ``_TASKS_PER_CORE x parallelism`` tasks (row-group
+    granularity — the same split limit the JVM scan has), and each task
+    reads its row groups with :mod:`pyarrow.parquet` and feeds them, in
+    ``batch_rows`` slices, to the same :func:`_pack_texts` loop as
+    :func:`build_compressed_index`. The build's only wide operation remains
+    the term shuffle of compressed partials.
 
     Scale notes: pyarrow reads any ``pyarrow.fs``-supported store (local,
     S3, HDFS) so the manifest pattern holds on a cluster; a corpus of few
@@ -1132,8 +1005,6 @@ def build_compressed_index_pyfiles(
     first (also true for the JVM scan, which cannot split inside a row
     group either).
     """
-    stem = cfg.stem
-
     files = sorted(spark.read.parquet(input_path).inputFiles())
     manifest: list[tuple[str, int, int]] = []  # (path_or_uri, row_group, start_id)
     acc = 0
@@ -1146,15 +1017,9 @@ def build_compressed_index_pyfiles(
                 acc += n
 
     par = max(spark.sparkContext.defaultParallelism, 1)
-    n_tasks = max(1, min(len(manifest), tasks_per_core * par))
+    n_tasks = max(1, min(len(manifest), _TASKS_PER_CORE * par))
 
-    def _map(batches):
-        from fulltextsearch_spark.functions.tokenizer import term_counts_flat  # noqa: PLC0415
-        from fulltextsearch_spark.operators.compressed_index import _open_parquet  # noqa: PLC0415
-
-        packer = _PartialAccumulator()
-        doc_parts: list[np.ndarray] = []
-        dl_parts: list[np.ndarray] = []
+    def _pairs(batches):
         for rb in batches:
             for path, rg, start in zip(
                 rb.column("path").to_pylist(),
@@ -1169,22 +1034,10 @@ def build_compressed_index_pyfiles(
                 )
                 for i in range(0, len(col), batch_rows):
                     chunk = col.slice(i, batch_rows)
-                    doc_ids = np.arange(
-                        start + i, start + i + len(chunk), dtype=np.int64
-                    )
-                    dl, sorted_terms, ud, uc, cnt = term_counts_flat(
-                        chunk, stem, order="term"
-                    )
-                    doc_parts.append(doc_ids)
-                    dl_parts.append(dl)
-                    if uc.size:
-                        packer.add_buffer(
-                            sorted_terms, uc, doc_ids[ud], cnt, dl[ud],
-                            presorted=True,
-                        )
-        yield from packer.emit_batches()
-        if doc_parts:
-            yield _docstats_sentinel(doc_parts, dl_parts)
+                    yield np.arange(start + i, start + i + len(chunk), dtype=np.int64), chunk
+
+    def _map(batches):
+        yield from _pack_texts(_pairs(batches), cfg.stem)
 
     mdf = spark.createDataFrame(manifest, "path string, rg int, start_id long")
     partials = mdf.repartition(n_tasks).mapInArrow(_map, schema=_PARTIAL_FIELDS)
@@ -1196,8 +1049,8 @@ def _index_from_partials(raw_partials: DataFrame, cfg: EngineConfig) -> Compress
 
     partials = raw_partials.persist(StorageLevel.MEMORY_AND_DISK)
     doc_stats = _decode_doc_stats(partials.filter(F.col("term") == _DOCSTATS_TERM))
-    # scalar agg rows reduce JVM-side (no Python decode stage); partials
-    # checkpointed before the agg rows existed fall back to the decode path
+    # scalar agg rows reduce JVM-side (no Python decode stage); an empty
+    # corpus has no agg rows, so n_docs comes back null
     stats_row = (
         partials.filter(F.col("term") == _DOCAGG_TERM)
         .agg(
@@ -1206,11 +1059,6 @@ def _index_from_partials(raw_partials: DataFrame, cfg: EngineConfig) -> Compress
         )
         .collect()[0]
     )
-    if stats_row["n_docs"] is None:
-        stats_row = doc_stats.agg(
-            (F.max("doc_id") + F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("total_dl"),
-        ).collect()[0]
     n_docs = int(stats_row["n_docs"]) if stats_row["n_docs"] is not None else 0
     avgdl = float(stats_row["total_dl"]) / float(n_docs) if n_docs else 0.0
 

@@ -9,15 +9,20 @@ logged per stage.
 Mechanism — explicit idempotent stage writes, NOT ``df.checkpoint()``:
 
 * the input file list is split into **chunks**; each chunk is ingested
-  (deterministic dense doc_id), tokenized, and written to
-  ``{root}/tokenized/chunk=<i>/`` with a manifest JSON recording the input
-  fingerprint (file names + sizes + row counts), row count, duration and
-  docs/sec. A restart skips every chunk whose manifest matches its
-  fingerprint — the per-partition checkpoint.
-* the merge stage reads all tokenized chunks, builds the salted + compressed
-  postings, and writes ``postings`` / ``doc_stats`` / ``corpus_stats`` with
-  its own manifest fingerprinting the full chunk set, so an unchanged input
-  makes the whole build a no-op.
+  (deterministic dense doc_id), tokenized and packed into the compressed
+  build's delta+varint partial rows (the same map pass as
+  :func:`~fulltextsearch_spark.operators.compressed_index.
+  build_compressed_index`, so a chunk on disk is roughly index-sized), and
+  written to ``{root}/partials/chunk=<i>/`` with a manifest JSON recording
+  the input fingerprint (file names + sizes + row counts), row count,
+  duration and docs/sec. A restart skips every chunk whose manifest matches
+  its fingerprint and whose output is complete (``_SUCCESS``) — the
+  per-partition checkpoint.
+* the merge stage reads all partial chunks, runs the shared term shuffle +
+  merge of the compressed build, and writes ``postings`` / ``doc_stats`` /
+  ``corpus_stats`` with its own manifest fingerprinting the full chunk set
+  and the merge parameters, so an unchanged input makes the whole build a
+  no-op.
 * every completed unit appends one line to ``{root}/_lineage.jsonl``.
 
 doc_id determinism across resumes: chunk *offsets* come from parquet footer
@@ -36,20 +41,22 @@ explicit restriction, not a silent assumption.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
-from fulltextsearch_spark.operators.index_build import _tokenized
 from fulltextsearch_spark.operators.compressed_index import (
-    CompressedIndex,
-    compress_tokenized,
+    _index_from_partials,
+    _partial_rows_fused,
     load_compressed_index,
+    save_compressed_index,
 )
 from fulltextsearch_spark.sources.ingest import assign_dense_doc_ids
 
@@ -127,8 +134,15 @@ def resumable_build(
         fp = _fingerprint({"files": ch, "offset": offsets[i], "stem": cfg.stem})
         chunk_fps.append(fp)
         man_path = os.path.join(root, "_manifests", f"tokenize-chunk-{i:05d}.json")
+        out = os.path.join(root, "partials", f"chunk={i:05d}")
         man = _read_manifest(man_path)
-        if man is not None and man.get("fingerprint") == fp:
+        # the manifest alone is not enough: its chunk dir may be gone, or the
+        # root may predate the partials layout
+        if (
+            man is not None
+            and man.get("fingerprint") == fp
+            and os.path.exists(os.path.join(out, "_SUCCESS"))
+        ):
             skipped += 1
             continue
         t0 = time.perf_counter()
@@ -140,9 +154,7 @@ def resumable_build(
         if not has_doc_id:
             raw = assign_dense_doc_ids(raw, order_col=order_col)
             raw = raw.withColumn("doc_id", F.col("doc_id") + F.lit(offsets[i]))
-        tokenized = _tokenized(raw, text_col, cfg.stem)
-        out = os.path.join(root, "tokenized", f"chunk={i:05d}")
-        tokenized.write.mode("overwrite").parquet(out)
+        _partial_rows_fused(raw, text_col, cfg.stem).write.mode("overwrite").parquet(out)
         rows = sum(r for _, _, r in ch)
         secs = time.perf_counter() - t0
         record = {
@@ -165,7 +177,7 @@ def resumable_build(
             "k1": cfg.k1,
             "b": cfg.b,
             "block_size": cfg.block_size,
-            "salt": [cfg.salt_df_threshold, cfg.salt_buckets],
+            "shard_postings": cfg.shard_postings,
         }
     )
     merge_man_path = os.path.join(root, "_manifests", "merge.json")
@@ -174,31 +186,23 @@ def resumable_build(
     if merge_man is None or merge_man.get("fingerprint") != merge_fp:
         t0 = time.perf_counter()
         # read EXACTLY the current chunk paths — partition discovery over
-        # {root}/tokenized would silently merge stale chunk=NNNNN dirs left by
+        # {root}/partials would silently merge stale chunk=NNNNN dirs left by
         # a previous build with more chunks (resurrecting removed docs); also
         # drop those stale dirs and their manifests so a later resume cannot
         # trip over them either.
-        import shutil  # noqa: PLC0415
-
-        tok_root = os.path.join(root, "tokenized")
+        part_root = os.path.join(root, "partials")
         current = {f"chunk={i:05d}" for i in range(len(chunks))}
-        if os.path.isdir(tok_root):
-            for d in os.listdir(tok_root):
+        if os.path.isdir(part_root):
+            for d in os.listdir(part_root):
                 if d.startswith("chunk=") and d not in current:
-                    shutil.rmtree(os.path.join(tok_root, d), ignore_errors=True)
+                    shutil.rmtree(os.path.join(part_root, d), ignore_errors=True)
                     stale_man = os.path.join(
                         root, "_manifests", f"tokenize-{d.replace('=', '-')}.json"
                     )
                     if os.path.exists(stale_man):
                         os.remove(stale_man)
-        chunk_paths = [os.path.join(tok_root, f"chunk={i:05d}") for i in range(len(chunks))]
-        with_tc = spark.read.parquet(*chunk_paths)
-        doc_stats = with_tc.select("doc_id", "dl")
-        stats_row = doc_stats.agg(
-            (F.max("doc_id") + F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
-        ).collect()[0]
-        n_docs = int(stats_row["n_docs"])
-        avgdl = float(stats_row["total_dl"]) / float(n_docs) if n_docs else 0.0
+        chunk_paths = [os.path.join(part_root, f"chunk={i:05d}") for i in range(len(chunks))]
+        idx = _index_from_partials(spark.read.parquet(*chunk_paths), cfg)
 
         # A6: HLL distinct-term estimate as a build metric (the reference
         # keeps a HyperLogLog over terms during its build,
@@ -209,30 +213,22 @@ def resumable_build(
         from pyspark.sql import Observation  # noqa: PLC0415
 
         obs = Observation("index_metrics")
-        compressed = compress_tokenized(with_tc, avgdl, cfg).observe(
-            obs, F.approx_count_distinct("term").alias("n_terms_est")
+        idx = dataclasses.replace(
+            idx,
+            postings=idx.postings.observe(
+                obs, F.approx_count_distinct("term").alias("n_terms_est")
+            ),
         )
-        idx = CompressedIndex(
-            postings=compressed,
-            doc_stats=doc_stats,
-            n_docs=n_docs,
-            avgdl=avgdl,
-            block_size=cfg.block_size,
-            k1=cfg.k1,
-            b=cfg.b,
-        )
-        from fulltextsearch_spark.operators.compressed_index import save_compressed_index
-
         save_compressed_index(idx, os.path.join(root, "index"))
         secs = time.perf_counter() - t0
         record = {
             "stage": "merge",
             "fingerprint": merge_fp,
-            "n_docs": n_docs,
-            "avgdl": avgdl,
+            "n_docs": idx.n_docs,
+            "avgdl": idx.avgdl,
             "n_terms_est": int(obs.get["n_terms_est"]),
             "seconds": round(secs, 3),
-            "docs_per_sec": round(n_docs / secs, 1) if secs > 0 else None,
+            "docs_per_sec": round(idx.n_docs / secs, 1) if secs > 0 else None,
         }
         _write_manifest(merge_man_path, record)
         _lineage(root, record)

@@ -27,7 +27,6 @@ from pyspark.sql.pandas.functions import pandas_udf
 __all__ = [
     "assign_dense_doc_ids",
     "assign_file_order_doc_ids",
-    "arranged_with_offsets",
     "csv_to_corpus",
 ]
 
@@ -128,7 +127,7 @@ def _partition_exact_keys(n_buckets: int, n_parts: int) -> list[int]:
     return [key_for_partition[b % n_parts] for b in range(n_buckets)]
 
 
-def arranged_with_offsets(
+def _arranged_with_offsets(
     df: DataFrame, order_col: str = "url", num_partitions: int | None = None
 ) -> tuple[DataFrame, dict[int, int]]:
     """The id-assignment *arrangement* without the assignment pass.
@@ -136,11 +135,8 @@ def arranged_with_offsets(
     Returns ``(arranged, offsets)``: ``arranged`` is ``df`` plus a ``_b``
     bucket column, hash-partitioned so each bucket owns one partition and
     sorted ``(_b, order_col)`` within partitions; ``offsets[b]`` is the
-    global id offset of bucket ``b``. A consumer that walks a partition in
-    order and hands out ``offsets[b] + running_index`` reproduces
-    :func:`assign_dense_doc_ids` exactly — this is the fusion seam the
-    single-pass index build uses to assign ids inside its tokenize+pack
-    worker instead of paying a second Python round trip for the text.
+    global id offset of bucket ``b``. :func:`assign_dense_doc_ids` walks
+    each partition in order and hands out ``offsets[b] + running_index``.
 
     Two-phase (no global sort on one node), with every cross-job input a
     **pure function of the data**:
@@ -255,11 +251,11 @@ def assign_dense_doc_ids(
 ) -> DataFrame:
     """Add a dense 0-based ``doc_id`` ordered by ``order_col``, scalably.
 
-    See :func:`arranged_with_offsets` for the two-phase mechanism; this
+    See :func:`_arranged_with_offsets` for the two-phase mechanism; this
     wrapper runs the assignment pass (``mapInPandas`` running counter per
     bucket) and returns ``df`` with the ``doc_id`` column prepended.
     """
-    arranged, offsets = arranged_with_offsets(df, order_col, num_partitions)
+    arranged, offsets = _arranged_with_offsets(df, order_col, num_partitions)
     out_schema = T.StructType(
         [T.StructField("doc_id", T.LongType(), False)] + list(df.schema.fields)
     )

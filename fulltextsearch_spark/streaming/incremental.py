@@ -50,7 +50,6 @@ from fulltextsearch_spark.operators.compressed_index import (
     CompressedIndex,
     _merge_partials,
     _partial_rows_tokenized,
-    compress_tokenized,
     compressed_rows_as_partials as _compressed_rows_as_partials,
     load_compressed_index,
     save_compressed_index,
@@ -298,7 +297,7 @@ def refresh_index(
         ).collect()[0]
         n_docs = int(stats["n"])
         avgdl = float(stats["total"]) / n_docs if n_docs else 0.0
-        compressed = compress_tokenized(full, avgdl, cfg)
+        compressed = _merge_partials(_partial_rows_tokenized(full), avgdl, cfg)
         affected_count, delta_docs = -1, -1
     else:
         # batches already folded into version v satisfy offset < prev.n_docs

@@ -5,13 +5,20 @@ way, and lineage metrics are logged per stage.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import EngineConfig
-from fulltextsearch_spark.operators.compressed_index import load_compressed_index
+from fulltextsearch_spark.operators.compressed_index import (
+    COMPRESSED_POSTINGS_FIELDS,
+    build_compressed_index,
+    load_compressed_index,
+)
 from fulltextsearch_spark.operators.wand import search_wand
 from fulltextsearch_spark.plans.checkpoints import resumable_build
 from fulltextsearch_spark.sources.webpages import QUERY_SET, generate_webpages
@@ -82,6 +89,15 @@ def test_build_resume_and_identity(spark, input_dir, tmp_path):
     fp = fp_lines[-1]
     assert fp["postings_bytes"] > 0 and fp["doc_stats_bytes"] > 0
 
+    # a chunk dir lost while its manifest survived: the manifest alone must
+    # not skip it, or the next merge reads a missing path
+    shutil.rmtree(os.path.join(root, "partials", "chunk=00002"))
+    os.remove(os.path.join(root, "_manifests", "merge.json"))
+    s4 = resumable_build(spark, input_dir, root, CFG, files_per_chunk=2)
+    assert s4["chunks_built"] == 1 and s4["chunks_skipped"] == 2
+    assert s4["merge_built"] is True and s4["n_docs"] == N_DOCS
+    assert _results(spark, root) == res1
+
 
 def test_config_change_rebuilds_merge_only(spark, input_dir, tmp_path):
     root = str(tmp_path / "idx_root2")
@@ -92,11 +108,26 @@ def test_config_change_rebuilds_merge_only(spark, input_dir, tmp_path):
     assert s["chunks_built"] == 0 and s["merge_built"] is True
     assert load_compressed_index(spark, os.path.join(root, "index")).block_size == 64
 
+    # shard_postings changes the merge output (head terms split into
+    # doc-range rows), so it must invalidate the merge too
+    postings = load_compressed_index(spark, os.path.join(root, "index")).postings
+    head = postings.orderBy(F.desc("df")).first()["term"]
+    assert postings.filter(F.col("term") == head).count() == 1
+    s = resumable_build(
+        spark, input_dir, root, dataclasses.replace(cfg2, shard_postings=8),
+        files_per_chunk=3,
+    )
+    assert s["chunks_built"] == 0 and s["merge_built"] is True
+    postings = load_compressed_index(spark, os.path.join(root, "index")).postings
+    assert postings.filter(F.col("term") == head).count() > 1
+
 
 def test_resumable_ids_and_scores_match_oracle(spark, input_dir, tmp_path):
     """Recompute the documented doc_id assignment (sorted files -> chunks ->
     per-chunk url sort + row-count offsets) and check WAND results against
-    the pure-Python oracle on that mapping."""
+    the pure-Python oracle on that mapping, and the saved index against
+    ``build_compressed_index`` over the same ids: the checkpointed build
+    runs on the shared core, so its postings rows are byte-identical."""
     import pyarrow.parquet as pq
 
     root = str(tmp_path / "idx_root3")
@@ -129,13 +160,22 @@ def test_resumable_ids_and_scores_match_oracle(spark, input_dir, tmp_path):
         for (_, _, gs), (_, _, es) in zip(mine, expected):
             assert gs == pytest.approx(es, rel=1e-9, abs=1e-12)
 
+    shared = build_compressed_index(
+        spark, spark.createDataFrame(doc_rows, "doc_id long, text string"), CFG
+    )
+    assert (idx.n_docs, idx.avgdl) == (shared.n_docs, shared.avgdl)
+    cols = ["term", "df", *COMPRESSED_POSTINGS_FIELDS.fieldNames()]
+
+    def rows(i):
+        return sorted(tuple(r) for r in i.postings.select(*cols).collect())
+
+    assert rows(idx) == rows(shared)
+
 
 def test_shrunk_input_purges_stale_chunks(spark, input_dir, tmp_path):
     """Stale chunk=NNNNN dirs from a previous (larger) build must not be
     silently merged back in — the merge reads exactly the current chunk set
     and deletes leftovers (ADVICE r1, checkpoints.py merge stage)."""
-    import shutil
-
     root = str(tmp_path / "idx_root")
     resumable_build(spark, input_dir, root, CFG, files_per_chunk=2)  # 3 chunks
     full = _results(spark, root)
@@ -150,7 +190,7 @@ def test_shrunk_input_purges_stale_chunks(spark, input_dir, tmp_path):
     s = resumable_build(spark, small_in, root, CFG, files_per_chunk=2)
     assert s["chunks_total"] == 1
     # stale chunk dirs are gone and the doc count matches the small input only
-    left = sorted(os.listdir(os.path.join(root, "tokenized")))
+    left = sorted(os.listdir(os.path.join(root, "partials")))
     assert left == ["chunk=00000"]
     n_small = spark.read.parquet(*[os.path.join(small_in, f) for f in parts[:2]]).count()
     assert s["n_docs"] == n_small

@@ -117,42 +117,6 @@ def test_sharded_head_term_query_rank_identical(spark):
     assert len(wand) == 20
 
 
-def test_raw_fused_build_identical_to_two_pass(spark):
-    """build_compressed_index_raw (id assignment fused into the tokenize+pack
-    worker) must produce byte-identical compressed rows to the two-pass
-    assign_dense_doc_ids -> build_compressed_index path."""
-    from fulltextsearch_spark.operators.compressed_index import (
-        build_compressed_index_raw,
-    )
-    from fulltextsearch_spark.sources.ingest import assign_dense_doc_ids
-    from fulltextsearch_spark.sources.webpages import generate_webpages
-
-    raw = generate_webpages(spark, 300, seed=77).select("url", "text").repartition(5)
-    cfg = EngineConfig(stem=True, block_size=16)
-
-    two = build_compressed_index(
-        spark, assign_dense_doc_ids(raw, "url"), cfg
-    )
-    one = build_compressed_index_raw(spark, raw, cfg, order_col="url")
-    assert one.n_docs == two.n_docs == 300
-    assert abs(one.avgdl - two.avgdl) < 1e-12
-
-    def rows(idx):
-        return sorted(
-            (
-                r["term"], r["df"], r["count"], bytes(r["doc_ids_enc"]),
-                bytes(r["tfs_enc"]), bytes(r["dls_enc"]),
-                tuple(r["block_first_doc"]),
-            )
-            for r in idx.postings.collect()
-        )
-
-    assert rows(one) == rows(two)
-    stats_one = sorted((r["doc_id"], r["dl"]) for r in one.doc_stats.collect())
-    stats_two = sorted((r["doc_id"], r["dl"]) for r in two.doc_stats.collect())
-    assert stats_one == stats_two
-
-
 def test_sharded_trigram_key_rows_bounded(spark):
     """A head trigram key (df far above cfg.shard_postings) must build as
     MULTIPLE bounded doc-range rows — never one task holding the full posting

@@ -157,7 +157,7 @@ def test_build_compressed_index_files_matches_two_pass_scores(spark, tmp_path):
     from fulltextsearch_spark.config import EngineConfig
     from fulltextsearch_spark.operators.compressed_index import (
         build_compressed_index,
-        build_compressed_index_files,
+        build_compressed_index_pyfiles,
     )
     from fulltextsearch_spark.operators.wand import search_wand
     from fulltextsearch_spark.sources.ingest import assign_dense_doc_ids
@@ -167,7 +167,7 @@ def test_build_compressed_index_files_matches_two_pass_scores(spark, tmp_path):
     generate_webpages(spark, 300, seed=13).repartition(4).write.mode("overwrite").parquet(path)
     cfg = EngineConfig(k1=1.2, b=0.75, k=10, block_size=32)
 
-    by_files = build_compressed_index_files(spark, path, cfg)
+    by_files = build_compressed_index_pyfiles(spark, path, cfg)
     by_url = build_compressed_index(
         spark,
         assign_dense_doc_ids(spark.read.parquet(path).select("url", "text"), "url"),
@@ -188,21 +188,25 @@ def test_build_compressed_index_files_matches_two_pass_scores(spark, tmp_path):
 
 
 def test_build_compressed_index_pyfiles_identical(spark, tmp_path):
-    """The python-reader build must produce an index IDENTICAL to the JVM
-    scan build — same doc_ids (sorted-file order), same compressed posting
-    rows, same stats — not merely rank-identical."""
+    """The python-reader build must produce an index IDENTICAL to the
+    DataFrame build over the JVM scan with file-order ids — same doc_ids
+    (sorted-file order), same compressed posting rows, same stats — not
+    merely rank-identical."""
     from fulltextsearch_spark.config import EngineConfig
     from fulltextsearch_spark.operators.compressed_index import (
-        build_compressed_index_files,
+        build_compressed_index,
         build_compressed_index_pyfiles,
     )
+    from fulltextsearch_spark.sources.ingest import assign_file_order_doc_ids
     from fulltextsearch_spark.sources.webpages import generate_webpages
 
     path = str(tmp_path / "corpus")
     generate_webpages(spark, 300, seed=17).repartition(4).write.mode("overwrite").parquet(path)
     cfg = EngineConfig(k1=1.2, b=0.75, k=10, block_size=32)
 
-    jvm = build_compressed_index_files(spark, path, cfg)
+    jvm = build_compressed_index(
+        spark, assign_file_order_doc_ids(spark, path, columns=["text"]), cfg
+    )
     pyf = build_compressed_index_pyfiles(spark, path, cfg, batch_rows=97)
     assert pyf.n_docs == jvm.n_docs == 300
     assert abs(pyf.avgdl - jvm.avgdl) < 1e-12
@@ -220,6 +224,29 @@ def test_build_compressed_index_pyfiles_identical(spark, tmp_path):
         (r["doc_id"], r["dl"]) for r in idx.doc_stats.collect()
     )
     assert ds(pyf) == ds(jvm)
+
+
+def test_build_compressed_index_empty_corpus(spark, tmp_path):
+    """Zero input rows: both build entry points give n_docs 0, avgdl 0.0 and
+    no postings rows."""
+    from fulltextsearch_spark.config import EngineConfig
+    from fulltextsearch_spark.operators.compressed_index import (
+        build_compressed_index,
+        build_compressed_index_pyfiles,
+    )
+
+    cfg = EngineConfig(block_size=32)
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    path = str(tmp_path / "empty")
+    empty.select("text").write.mode("overwrite").parquet(path)
+
+    for idx in (
+        build_compressed_index(spark, empty, cfg),
+        build_compressed_index_pyfiles(spark, path, cfg),
+    ):
+        assert idx.n_docs == 0
+        assert idx.avgdl == 0.0
+        assert idx.postings.count() == 0
 
 
 # --- WARC source -------------------------------------------------------------
