@@ -17,11 +17,13 @@ One row per term (or per (term, doc-range shard) when
     block_max_tfpart ARRAY<DOUBLE>,  -- max BM25 tf-part per block (block-max)
     block_max_tfdl ARRAY<DOUBLE>     -- max tf/dl per block (TF-IDF block-max)
 
-Every batch build runs one core: a ``mapInArrow`` pass tokenizes text and
-packs each task's postings into delta+varint byte partials
-(:func:`_pack_texts`), the partials shuffle by term, and
-:func:`_index_from_partials` concatenates them into the rows above and
-reduces corpus stats from per-task sentinel rows. Two entry points feed it:
+Every batch build runs one core with two Python stages, both
+``mapInArrow``: the map stage tokenizes text and packs each task's postings
+into delta+varint byte partials (:func:`_pack_texts`); the partials shuffle
+by term, and the merge stage (:func:`_merge_partials`) concatenates them
+into the rows above with their block-max metadata.
+:func:`_index_from_partials` wires the two and reduces corpus stats from
+per-task sentinel rows. Two entry points feed it:
 :func:`build_compressed_index` (a DataFrame with ``doc_id``) and
 :func:`build_compressed_index_pyfiles` (a parquet path, read by the workers
 with pyarrow). Every block carries enough metadata for skip + block-max
@@ -116,16 +118,8 @@ def _encode_one(
     k1: float,
     b: float,
     avgdl: float,
-    tfs_enc: bytes | None = None,
-    dls_enc: bytes | None = None,
 ) -> dict:
-    """Encode one term's sorted postings into the compressed row dict.
-
-    ``tfs_enc``/``dls_enc`` let the streaming merge pass through already-
-    encoded streams (varint streams concatenate as-is, so when partials
-    arrive in doc order their joined tf/dl bytes ARE the output — only the
-    doc deltas need re-encoding for block restarts).
-    """
+    """Encode one term's sorted postings into the compressed row dict."""
     n = doc_ids.size
     block_starts = np.arange(0, n, block_size)
     # block-restarting deltas: first value of each block stored absolute, so
@@ -147,8 +141,8 @@ def _encode_one(
     return {
         "count": int(n),
         "doc_ids_enc": varint_encode(deltas, nb_d),
-        "tfs_enc": tfs_enc if tfs_enc is not None else varint_encode(tfs, nb_t),
-        "dls_enc": dls_enc if dls_enc is not None else varint_encode(dls, nb_l),
+        "tfs_enc": varint_encode(tfs, nb_t),
+        "dls_enc": varint_encode(dls, nb_l),
         "block_first_doc": doc_ids[block_starts].tolist(),
         "block_off_doc": _offsets_from_nbytes(nb_d, block_starts).tolist(),
         "block_off_tf": _offsets_from_nbytes(nb_t, block_starts).tolist(),
@@ -183,8 +177,47 @@ _PARTIAL_FIELDS = T.StructType(
 _BUFFER_ROWS = 1 << 21
 
 # reduce-side vectorized-encode sub-chunk: postings per _encode_chunk_vec
-# call (measured sweet spot; see _merge_partials._encode_chunk docstring)
+# call (measured sweet spot; see _merge_partials._encode_batch docstring)
 _MERGE_CHUNK_POSTINGS = 1 << 16
+
+
+def _binary_from_offsets(offsets: np.ndarray, buf):
+    """``len(offsets) - 1`` binary cells over one contiguous buffer, zero-copy:
+    cell ``i`` is ``buf[offsets[i]:offsets[i + 1]]``.
+
+    Arrow ``binary`` offsets are int32 and would wrap silently past 2 GiB,
+    so this raises first. Callers pass one pack's or one merge sub-chunk's
+    stream, so this is a tripwire, not a live path.
+    """
+    import pyarrow as pa  # noqa: PLC0415
+
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            "binary cells exceed 2 GiB; shrink the pack or merge chunk, or "
+            "switch these cells to pa.large_binary()"
+        )
+    offs = np.ascontiguousarray(offsets, dtype=np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), offs.size - 1, [None, pa.py_buffer(offs), pa.py_buffer(buf)]
+    )
+
+
+def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Binary Arrow array -> (int64 cell offsets from 0, its cells' bytes as
+    one contiguous uint8 view). Cells of an Arrow binary array are adjacent
+    in its data buffer, so no byte is copied; a sliced array is rebased."""
+    _, ob, db = arr.buffers()
+    off = np.frombuffer(ob, dtype=np.int32, count=len(arr) + 1, offset=arr.offset * 4)
+    off = off.astype(np.int64)
+    data = np.frombuffer(db, dtype=np.uint8) if db is not None else np.empty(0, np.uint8)
+    return off - off[0], data[off[0] : off[-1]]
+
+
+def _list_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """List Arrow array -> (int64 list offsets from 0, its values as numpy);
+    a sliced array is rebased."""
+    off = arr.offsets.to_numpy().astype(np.int64)
+    return off - off[0], arr.values.to_numpy()[off[0] : off[-1]]
 
 
 class _PartialAccumulator:
@@ -255,20 +288,6 @@ class _PartialAccumulator:
         n_runs = starts.size
         term_arr = uniq.take(pa.array(codes[starts]))
         bounds = np.append(starts, codes.size)
-
-        def _bin(off, enc):
-            # int32 BinaryArray offsets wrap silently past 2 GiB — packs are
-            # row-group-sized today so this is a tripwire, not a live path
-            if off[bounds][-1] > np.iinfo(np.int32).max:
-                raise OverflowError(
-                    "_pack_batch: encoded pack exceeds 2 GiB; shrink the pack "
-                    "(rows per pack) or switch this cell to pa.large_binary()"
-                )
-            offs = np.ascontiguousarray(off[bounds], dtype=np.int32)
-            return pa.Array.from_buffers(
-                pa.binary(), n_runs, [None, pa.py_buffer(offs), pa.py_buffer(enc)]
-            )
-
         seg_lens = pa.ListArray.from_arrays(
             np.arange(n_runs + 1, dtype=np.int32),
             pa.array(ends - starts, type=pa.int64()),
@@ -278,9 +297,9 @@ class _PartialAccumulator:
                 term_arr.cast(pa.string()),
                 pa.array(first_docs, type=pa.int64()),
                 seg_lens,
-                _bin(off_d, enc_d),
-                _bin(off_t, enc_t),
-                _bin(off_l, enc_l),
+                _binary_from_offsets(off_d[bounds], enc_d),
+                _binary_from_offsets(off_t[bounds], enc_t),
+                _binary_from_offsets(off_l[bounds], enc_l),
             ],
             names=["term", "first_doc", "seg_lens", "doc_bytes", "tf_bytes", "dl_bytes"],
         )
@@ -574,12 +593,15 @@ def _merge_partials(
     size, not exploded-row size), sorts (term, first_doc), then per term
     concatenates the byte streams (varint streams concatenate as-is; docID
     absolutes are restored with one segmented-cumsum fixup) and emits the
-    block-restarting encoded row with block-max metadata. Reduce memory is
-    bounded by one term's buffers: ``cfg.shard_postings`` caps it by
-    emitting several self-contained doc-range rows per head term (each with
-    its own blocks/offsets/block-max); readers treat every row as an
-    independent posting slice and derive the term's df as the sum of row
-    counts (pinned by tests/test_skew.py::test_sharded_head_term*).
+    block-restarting encoded row with block-max metadata. The reduce is
+    Arrow in, Arrow out (``mapInArrow``): input streams are read as buffer
+    views and every output column is built as one Arrow array, so no cell
+    is boxed into a Python object. Reduce memory is bounded by one term's
+    buffers: ``cfg.shard_postings`` caps it by emitting several
+    self-contained doc-range rows per head term (each with its own
+    blocks/offsets/block-max); readers treat every row as an independent
+    posting slice and derive the term's df as the sum of row counts
+    (pinned by tests/test_skew.py::test_sharded_head_term*).
     """
     block_size, k1, b = cfg.block_size, cfg.k1, cfg.b
     spark = partials.sparkSession
@@ -591,9 +613,8 @@ def _merge_partials(
     )
 
     shard_after = cfg.shard_postings  # None -> one row per term
-    out_cols = [f.name for f in out_schema.fields]
 
-    def _encode_chunk(pdf) -> list[dict]:
+    def _encode_batch(rb):
         """Vectorized encode in term-aligned sub-chunks of bounded postings.
 
         The cap keeps every scratch array ~0.5 MB: small enough that the
@@ -607,113 +628,117 @@ def _merge_partials(
         term up to ``shard_after``) still encodes in one piece — same
         bound the per-term path had.
         """
-        counts = np.fromiter(
-            (sum(s) for s in pdf["seg_lens"].to_numpy()),
-            dtype=np.int64,
-            count=len(pdf),
-        )
-        cum = np.cumsum(counts)
-        terms_a = pdf["term"].to_numpy()
-        tb_ends = np.concatenate(
-            (np.flatnonzero(terms_a[1:] != terms_a[:-1]) + 1, [len(pdf)])
-        )
-        out: list[dict] = []
+        import pyarrow.compute as pc  # noqa: PLC0415
+
+        seg_off, seg_all = _list_parts(rb.column("seg_lens"))
+        cum = np.concatenate(([0], np.cumsum(seg_all)))[seg_off[1:]]
+        terms = rb.column("term")
+        change = pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+        tb_ends = np.append(np.flatnonzero(change) + 1, rb.num_rows)
         start = 0
-        while start < len(pdf):
+        while start < rb.num_rows:
             base = cum[start - 1] if start else 0
             j = int(np.searchsorted(cum[tb_ends - 1], base + _MERGE_CHUNK_POSTINGS))
             end = int(tb_ends[min(j, len(tb_ends) - 1)])
-            out.extend(
-                _encode_chunk_vec(
-                    pdf.iloc[start:end], shard_after, block_size, k1, b, avgdl
-                )
+            out = _encode_chunk_vec(
+                rb.slice(start, end - start), shard_after, block_size, k1, b, avgdl
             )
+            if out is not None:
+                yield out
             start = end
-        return out
 
     def _merge_stream(batches):
-        import pandas as pd  # noqa: PLC0415
+        import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.compute as pc  # noqa: PLC0415
 
-        carry = None  # rows of the final (possibly incomplete) term
-        rows: list[dict] = []
-        for pdf in batches:
-            if len(pdf) == 0:
+        def one(rbs):  # single-chunk columns pass through uncopied
+            return pa.Table.from_batches(rbs).combine_chunks().to_batches()[0]
+
+        # rows since the last complete term: the tail of one batch, or more
+        # only for a term with more partial rows (one per (term, pack))
+        # than a batch holds — compact byte partials, not postings
+        pending: list = []
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            terms = pdf["term"].to_numpy()
-            not_last = np.flatnonzero(terms != terms[-1])
-            cut = int(not_last[-1]) + 1 if not_last.size else 0
+            terms = rb.column("term")
+            # rows arrive sorted by term: the last term's rows are the tail
+            cut = rb.num_rows - pc.sum(pc.equal(terms, terms[-1])).as_py()
             if cut == 0:
-                # whole batch is one term — hold it. Bound: a term has at
-                # most one partial row per map TASK from the dict-merge
-                # emit, or one per row-group pack from emit_batches — so
-                # the carry holds at most tasks x packs-per-task rows of
-                # ONE term's compact byte partials, not posting rows.
-                carry = pdf
+                pending.append(rb)
                 continue
-            rows.extend(_encode_chunk(pdf.iloc[:cut]))
-            carry = pdf.iloc[cut:]
-            if len(rows) >= 1024:
-                out, rows = rows, []
-                yield pd.DataFrame(out)[out_cols]
-        if carry is not None and len(carry):
-            rows.extend(_encode_chunk(carry))
-        if rows:
-            yield pd.DataFrame(rows)[out_cols]
+            yield from _encode_batch(one(pending + [rb.slice(0, cut)]))
+            pending = [rb.slice(cut)]
+        if pending:
+            yield from _encode_batch(one(pending))
 
     arranged = partials.repartition(n_parts, F.col("term")).sortWithinPartitions(
         "term", "first_doc"
     )
-    return arranged.mapInPandas(_merge_stream, schema=out_schema)
+    return arranged.mapInArrow(_merge_stream, schema=out_schema)
+
+
+def _spliced_cells(bounds: np.ndarray, buf: np.ndarray, repl: dict):
+    """Binary cells ``buf[bounds[u]:bounds[u + 1]]``, cell ``u`` replaced by
+    ``repl[u]`` bytes where given; zero-copy when ``repl`` is empty."""
+    if not repl:
+        return _binary_from_offsets(bounds - bounds[0], buf[bounds[0] : bounds[-1]])
+    lens = np.diff(bounds)
+    pieces: list = []
+    prev = 0
+    for u in sorted(repl):
+        pieces += [buf[bounds[prev] : bounds[u]], repl[u]]
+        lens[u] = len(repl[u])
+        prev = u + 1
+    pieces.append(buf[bounds[prev] : bounds[-1]])
+    return _binary_from_offsets(
+        np.concatenate(([0], np.cumsum(lens))), b"".join(pieces)
+    )
 
 
 def _encode_chunk_vec(
-    pdf,
+    rb,
     shard_after: int | None,
     block_size: int,
     k1: float,
     b: float,
     avgdl: float,
-) -> list[dict]:
-    """All rows of COMPLETE units -> output row dicts, batch-vectorized.
+):
+    """All partial rows of COMPLETE units -> one output RecordBatch (or
+    ``None`` when they hold no postings), batch-vectorized.
 
     The per-term streaming flush this replaces spent ~0.9 ms of numpy
     call overhead per term (10k-term corpus: 9s single-core merge, only
     a third of it byte work). Here every decode, delta/varint encode,
-    and block-max reduction runs ONCE over the whole pandas batch;
-    per-unit rows are byte/array slices (unit = term, or (term,
+    and block-max reduction runs ONCE over the whole batch; per-unit
+    cells are offsets into those arrays (unit = term, or (term,
     doc-range shard) when ``shard_after`` cuts a head term — cut points
     replicate the streaming rule: emit once the running posting count
     since the last cut reaches the threshold, at partial-row
-    granularity). Units whose concatenated partials are not already
-    doc-ascending (never the case under dense id assignment) fall back
-    to the per-unit sort+re-encode path.
+    granularity). Units are contiguous runs of rows and of postings, so
+    each enc column is one Arrow array over the re-encoded doc stream or
+    the passed-through tf/dl input buffer, and each block column one
+    list array over the per-block values. Units whose concatenated
+    partials are not already doc-ascending (never the case under dense
+    id assignment) fall back to a sort + :func:`_encode_one` re-encode
+    spliced into those columns.
     """
-    nrows = len(pdf)
-    if nrows == 0:
-        return []
-    terms = pdf["term"].to_numpy()
-    segs_list = pdf["seg_lens"].to_numpy()
-    db = pdf["doc_bytes"].to_numpy()
-    tb = pdf["tf_bytes"].to_numpy()
-    lb = pdf["dl_bytes"].to_numpy()
-    seg_all = (
-        np.concatenate([np.asarray(s, dtype=np.int64) for s in segs_list])
-        if nrows
-        else np.empty(0, dtype=np.int64)
-    )
-    row_nsegs = np.fromiter((len(s) for s in segs_list), dtype=np.int64, count=nrows)
-    seg_row_ends = np.cumsum(row_nsegs)
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    nrows = rb.num_rows
+    seg_off, seg_all = _list_parts(rb.column("seg_lens"))
     seg_cum = np.concatenate(([0], np.cumsum(seg_all)))
-    row_ppos = np.concatenate(([0], seg_cum[seg_row_ends]))  # postings before each row
+    row_ppos = seg_cum[seg_off]  # postings before each row
     row_counts = np.diff(row_ppos)
     total = int(row_ppos[-1])
     if total == 0:
-        return []
+        return None
 
-    change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+    terms = rb.column("term")
+    change = np.flatnonzero(
+        pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+    ) + 1
     t_starts = np.concatenate(([0], change))
     t_ends = np.concatenate((change, [nrows]))
     if shard_after is None:
@@ -745,9 +770,9 @@ def _encode_chunk_vec(
     u_pend = row_ppos[u_ends_rows]
     u_counts = u_pend - u_pstart
 
-    db_all = b"".join(db)
-    tb_all = b"".join(tb)
-    lb_all = b"".join(lb)
+    _, db_all = _binary_parts(rb.column("doc_bytes"))
+    tb_off, tb_all = _binary_parts(rb.column("tf_bytes"))
+    lb_off, lb_all = _binary_parts(rb.column("dl_bytes"))
     dec = varint_decode(db_all, total).astype(np.int64)
     tfs = varint_decode(tb_all, total).astype(np.int64)
     dls = varint_decode(lb_all, total).astype(np.int64)
@@ -758,12 +783,6 @@ def _encode_chunk_vec(
     # docs[i] = c[i] - (cumsum before the segment) within each segment
     offs = c[seg_starts] - dec[seg_starts]
     docs = c - np.repeat(offs, seg_lens_nz)
-
-    # per-row INPUT byte ranges (tf/dl streams pass through byte-exact)
-    tb_lens = np.fromiter((len(x) for x in tb), dtype=np.int64, count=nrows)
-    lb_lens = np.fromiter((len(x) for x in lb), dtype=np.int64, count=nrows)
-    tb_off = np.concatenate(([0], np.cumsum(tb_lens)))
-    lb_off = np.concatenate(([0], np.cumsum(lb_lens)))
 
     # global block starts: unit start + k*block_size
     nblocks_u = (u_counts + block_size - 1) // block_size
@@ -777,19 +796,15 @@ def _encode_chunk_vec(
     deltas[1:] = docs[1:] - docs[:-1]
     deltas[block_starts] = docs[block_starts]
 
-    # units whose docs are not strictly ascending need the sort fallback
-    bad_units: set[int] = set()
+    # units whose docs are not strictly ascending need the sort fallback: a
+    # violation at position p belongs to the unit covering p; it is real
+    # unless p is that unit's own start (units restart absolute)
     viol = np.flatnonzero(docs[1:] <= docs[:-1]) + 1
-    if viol.size:
-        # a violation at position p belongs to the unit covering p; it is
-        # real unless p is that unit's own start (units restart absolute)
-        unit_of = np.searchsorted(u_pend, viol, side="right")
-        real = viol != u_pstart[unit_of]
-        for q in np.unique(unit_of[real]):
-            bad_units.add(int(q))
+    unit_of = np.searchsorted(u_pend, viol, side="right")
+    bad_units = np.unique(unit_of[viol != u_pstart[unit_of]]).tolist()
 
     nb_d = varint_nbytes(deltas)
-    enc_all = varint_encode(deltas, nb_d)
+    enc_all = np.frombuffer(varint_encode(deltas, nb_d), dtype=np.uint8)
     cum_d = np.concatenate(([0], np.cumsum(nb_d)))
     cum_t = np.concatenate(([0], np.cumsum(varint_nbytes(tfs))))
     cum_l = np.concatenate(([0], np.cumsum(varint_nbytes(dls))))
@@ -798,43 +813,46 @@ def _encode_chunk_vec(
     dl_f = dls.astype(np.float64)
     tfpart = tf_f * (k1 + 1.0) / (tf_f + k1 * (1.0 - b + b * (dl_f / float(avgdl))))
     tfdl = np.divide(tf_f, dl_f, out=np.zeros_like(tf_f), where=dl_f > 0)
-    bmax_tf = np.maximum.reduceat(tfs, block_starts)
-    bmax_tfpart = np.maximum.reduceat(tfpart, block_starts)
-    bmax_tfdl = np.maximum.reduceat(tfdl, block_starts)
-    bfirst = docs[block_starts]
-    boff_d = cum_d[block_starts]
-    boff_t = cum_t[block_starts]
-    boff_l = cum_l[block_starts]
+    # per-block offsets are relative to their unit's first byte
+    blocks = {
+        "block_first_doc": docs[block_starts],
+        "block_off_doc": cum_d[block_starts] - np.repeat(cum_d[u_pstart], nblocks_u),
+        "block_off_tf": cum_t[block_starts] - np.repeat(cum_t[u_pstart], nblocks_u),
+        "block_off_dl": cum_l[block_starts] - np.repeat(cum_l[u_pstart], nblocks_u),
+        "block_max_tf": np.maximum.reduceat(tfs, block_starts),
+        "block_max_tfpart": np.maximum.reduceat(tfpart, block_starts),
+        "block_max_tfdl": np.maximum.reduceat(tfdl, block_starts),
+    }
 
-    rows_out: list[dict] = []
-    for u in range(len(u_counts)):
-        b0, b1 = int(bl_cum[u]), int(bl_cum[u + 1])
-        rs, re_ = int(u_starts_rows[u]), int(u_ends_rows[u])
+    # the fallback keeps each unit's posting (so block) count: only the
+    # block values and the three streams' cells change
+    repl: dict[str, dict[int, bytes]] = {"doc_ids_enc": {}, "tfs_enc": {}, "dls_enc": {}}
+    for u in bad_units:
         ps, pe = int(u_pstart[u]), int(u_pend[u])
-        if u in bad_units:
-            o = np.argsort(docs[ps:pe], kind="stable")
-            row = _encode_one(
-                docs[ps:pe][o], tfs[ps:pe][o], dls[ps:pe][o],
-                block_size, k1, b, avgdl,
-            )
-        else:
-            row = {
-                "count": pe - ps,
-                "doc_ids_enc": enc_all[cum_d[ps]:cum_d[pe]],
-                "tfs_enc": tb_all[tb_off[rs]:tb_off[re_]],
-                "dls_enc": lb_all[lb_off[rs]:lb_off[re_]],
-                "block_first_doc": bfirst[b0:b1].tolist(),
-                "block_off_doc": (boff_d[b0:b1] - cum_d[ps]).tolist(),
-                "block_off_tf": (boff_t[b0:b1] - cum_t[ps]).tolist(),
-                "block_off_dl": (boff_l[b0:b1] - cum_l[ps]).tolist(),
-                "block_max_tf": bmax_tf[b0:b1].tolist(),
-                "block_max_tfpart": bmax_tfpart[b0:b1].tolist(),
-                "block_max_tfdl": bmax_tfdl[b0:b1].tolist(),
-            }
-        row["term"] = terms[rs]
-        row["df"] = pe - ps
-        rows_out.append(row)
-    return rows_out
+        o = np.argsort(docs[ps:pe], kind="stable")
+        row = _encode_one(
+            docs[ps:pe][o], tfs[ps:pe][o], dls[ps:pe][o], block_size, k1, b, avgdl
+        )
+        for name, enc in repl.items():
+            enc[u] = row[name]
+        for name, vals in blocks.items():
+            vals[bl_cum[u] : bl_cum[u + 1]] = row[name]
+
+    u_rows = np.append(u_starts_rows, nrows)
+    list_offs = pa.array(bl_cum, type=pa.int32())
+    counts = pa.array(u_counts, type=pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            terms.take(pa.array(u_starts_rows)),
+            counts,
+            counts,
+            _spliced_cells(cum_d[np.append(u_pstart, total)], enc_all, repl["doc_ids_enc"]),
+            _spliced_cells(tb_off[u_rows], tb_all, repl["tfs_enc"]),
+            _spliced_cells(lb_off[u_rows], lb_all, repl["dls_enc"]),
+        ]
+        + [pa.ListArray.from_arrays(list_offs, pa.array(v)) for v in blocks.values()],
+        names=["term", "df", "count", "doc_ids_enc", "tfs_enc", "dls_enc", *blocks],
+    )
 
 
 def compressed_rows_as_partials(postings: DataFrame, block_size: int) -> DataFrame:
@@ -967,10 +985,6 @@ def build_compressed_index(
     return _index_from_partials(_partial_rows_fused(docs, text_col, cfg.stem), cfg)
 
 
-# pyfiles build: manifest tasks per core (each task reads whole row groups)
-_TASKS_PER_CORE = 4
-
-
 def build_compressed_index_pyfiles(
     spark: SparkSession,
     input_path: str,
@@ -992,10 +1006,13 @@ def build_compressed_index_pyfiles(
     doc_ids are identical to :func:`~fulltextsearch_spark.sources.ingest.
     assign_file_order_doc_ids` by construction (sorted-file order, offsets
     from footer row counts; pinned by tests/test_sources.py). The manifest
-    round-robins across ``_TASKS_PER_CORE x parallelism`` tasks (row-group
-    granularity — the same split limit the JVM scan has), and each task
-    reads its row groups with :mod:`pyarrow.parquet` and feeds them, in
-    ``batch_rows`` slices, to the same :func:`_pack_texts` loop as
+    is cut into contiguous row-group ranges, one per map task, with as many
+    tasks as Spark's own scan of ``input_path`` plans (its
+    ``maxPartitionBytes``/``openCostInBytes`` split rule: one task per core
+    on a small corpus, ~128 MB tasks at scale), capped at one row group per
+    task — the same split limit the JVM scan has. Each task reads its row
+    groups with :mod:`pyarrow.parquet` and feeds them, in ``batch_rows``
+    slices, to the same :func:`_pack_texts` loop as
     :func:`build_compressed_index`. The build's only wide operation remains
     the term shuffle of compressed partials.
 
@@ -1005,10 +1022,10 @@ def build_compressed_index_pyfiles(
     first (also true for the JVM scan, which cannot split inside a row
     group either).
     """
-    files = sorted(spark.read.parquet(input_path).inputFiles())
+    scan = spark.read.parquet(input_path)
     manifest: list[tuple[str, int, int]] = []  # (path_or_uri, row_group, start_id)
     acc = 0
-    for f in files:
+    for f in sorted(scan.inputFiles()):
         meta = _open_parquet(f).metadata
         for rg in range(meta.num_row_groups):
             n = meta.row_group(rg).num_rows
@@ -1016,8 +1033,7 @@ def build_compressed_index_pyfiles(
                 manifest.append((f, rg, acc))
                 acc += n
 
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    n_tasks = max(1, min(len(manifest), _TASKS_PER_CORE * par))
+    n_tasks = max(1, min(len(manifest), scan.rdd.getNumPartitions()))
 
     def _pairs(batches):
         for rb in batches:
@@ -1039,8 +1055,11 @@ def build_compressed_index_pyfiles(
     def _map(batches):
         yield from _pack_texts(_pairs(batches), cfg.stem)
 
-    mdf = spark.createDataFrame(manifest, "path string, rg int, start_id long")
-    partials = mdf.repartition(n_tasks).mapInArrow(_map, schema=_PARTIAL_FIELDS)
+    mdf = spark.createDataFrame(
+        spark.sparkContext.parallelize(manifest, n_tasks),
+        "path string, rg int, start_id long",
+    )
+    partials = mdf.mapInArrow(_map, schema=_PARTIAL_FIELDS)
     return _index_from_partials(partials, cfg)
 
 

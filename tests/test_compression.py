@@ -334,3 +334,14 @@ def test_partial_accumulator_emit_paths_equivalent():
     for t, v in single.items():
         if t not in only2:
             assert merged[t] == v
+
+
+def test_binary_from_offsets_overflow_raises():
+    """Binary cells past int32 offsets raise instead of wrapping silently;
+    in range, cells are the buffer slices the offsets name."""
+    from fulltextsearch_spark.operators.compressed_index import _binary_from_offsets
+
+    cells = _binary_from_offsets(np.array([0, 2, 2, 5]), b"abcde")
+    assert cells.to_pylist() == [b"ab", b"", b"cde"]
+    with pytest.raises(OverflowError):
+        _binary_from_offsets(np.array([0, 1, np.iinfo(np.int32).max + 1]), b"x")

@@ -9,11 +9,17 @@ from __future__ import annotations
 import pytest
 
 from fulltextsearch_spark.config import EngineConfig
-from fulltextsearch_spark.operators.compressed_index import build_compressed_index
+from fulltextsearch_spark.operators.compressed_index import (
+    build_compressed_index,
+    build_compressed_index_pyfiles,
+)
 from fulltextsearch_spark.operators.index_build import build_index, doc_term_frequencies
 from fulltextsearch_spark.operators.query import search
 from fulltextsearch_spark.operators.wand import search_wand
-from fulltextsearch_spark.sources.ingest import assign_dense_doc_ids
+from fulltextsearch_spark.sources.ingest import (
+    assign_dense_doc_ids,
+    assign_file_order_doc_ids,
+)
 from fulltextsearch_spark.sources.webpages import generate_webpages
 
 
@@ -82,6 +88,22 @@ def test_tokenize_is_arrow_batched(spark, web_dir):
     # a row-Python BatchEvalPython would mean someone snuck in a per-row UDF
     assert "ArrowEvalPython" in plan or "MapInArrow" in plan, plan
     assert "BatchEvalPython" not in plan, plan
+
+
+def test_compressed_build_python_stages_are_arrow_only(spark, web_dir):
+    """Both compressed-build entry points cross the Python boundary only
+    through mapInArrow (map pack and merge), never through pandas. The
+    DataFrame-in build gets file-order ids, whose assignment runs in the
+    JVM, so every Python stage in its plan is the build's own."""
+    docs = assign_file_order_doc_ids(spark, web_dir, columns=["text"])
+    cfg = EngineConfig()
+    for idx in (
+        build_compressed_index(spark, docs, cfg),
+        build_compressed_index_pyfiles(spark, web_dir, cfg),
+    ):
+        plan = _plan(idx.postings)
+        assert "MapInArrow" in plan, plan
+        assert "MapInPandas" not in plan, plan
 
 
 def test_vsm_query_plan_reuses_norms_and_joins_before_explode(spark, web_dir):

@@ -173,3 +173,155 @@ def test_sharded_trigram_key_rows_bounded(spark):
     assert key(search_trigram(idx_sharded, queries, sharded_cfg)) == key(
         search_trigram(idx_plain, queries, plain_cfg)
     )
+
+
+def _seeded_partials():
+    """Partial rows packed through ``_PartialAccumulator``, in three shapes:
+    one row per term over two ascending packs (``emit``: two segments per
+    row), one row per (term, pack) over two ascending packs
+    (``emit_batches``), and two packs whose doc ids interleave (odd/even
+    docs), so a term in both needs the merge's sort fallback. Every third
+    row gets a leading and every fifth a trailing zero-length segment."""
+    import numpy as np
+    import pyarrow as pa
+
+    from fulltextsearch_spark.operators.compressed_index import _PartialAccumulator
+
+    rng = np.random.default_rng(11)
+    vocab = pa.array([f"t{i:02d}" for i in range(24)])
+
+    def add(acc, docs):
+        codes, ds, tfs, dls = [], [], [], []
+        for d in docs:
+            # t00 is in every doc: a head term for the shard cut
+            ts = np.union1d([0], rng.choice(24, rng.integers(1, 6), replace=False))
+            codes += ts.tolist()
+            ds += [d] * ts.size
+            tfs += rng.integers(1, 6, ts.size).tolist()
+            dls += [int(rng.integers(5, 200))] * ts.size
+        codes, ds, tfs, dls = (np.asarray(x, dtype=np.int64) for x in (codes, ds, tfs, dls))
+        o = np.lexsort((ds, codes))
+        acc.add_buffer(vocab, codes[o], ds[o], tfs[o], dls[o], presorted=True)
+
+    two_seg = _PartialAccumulator()
+    add(two_seg, range(0, 120))
+    add(two_seg, range(120, 240))
+    per_pack = _PartialAccumulator()
+    add(per_pack, range(240, 360))
+    add(per_pack, range(360, 480))
+    interleaved = _PartialAccumulator()
+    add(interleaved, range(481, 600, 2))
+    add(interleaved, range(480, 600, 2))
+    batches = [two_seg.emit(), *per_pack.emit_batches(), *interleaved.emit_batches()]
+    rows = [r for rb in batches for r in rb.to_pylist()]
+    for i, r in enumerate(rows):
+        if i % 3 == 0:
+            r["seg_lens"] = [0] + r["seg_lens"]
+        if i % 5 == 0:
+            r["seg_lens"] = r["seg_lens"] + [0]
+    return rows
+
+
+def _decode_partial(row):
+    import numpy as np
+
+    from fulltextsearch_spark.operators.compression import varint_decode
+
+    deltas = varint_decode(row["doc_bytes"]).astype(np.int64)
+    bounds = np.cumsum([0] + row["seg_lens"])
+    docs = np.concatenate(
+        [np.cumsum(deltas[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
+    )
+    return (
+        docs,
+        varint_decode(row["tf_bytes"]).astype(np.int64),
+        varint_decode(row["dl_bytes"]).astype(np.int64),
+    )
+
+
+def test_merge_rows_equal_encode_one_over_sorted_postings(spark):
+    """Every merged row equals ``_encode_one`` over its unit's decoded,
+    doc-sorted postings — byte streams, block offsets, block-max arrays,
+    count and df — for ascending multi-pack terms, interleaved packs (the
+    sort fallback) and zero-length segments, with Arrow batches small
+    enough that terms straddle them. With ``shard_postings`` the rows of a
+    term follow the cut rule (cut after the partial row at which the
+    running count since the last cut reaches the cap; terms under the cap
+    stay whole) and decode to the term's postings."""
+    import numpy as np
+
+    from fulltextsearch_spark.operators.compressed_index import (
+        _PARTIAL_FIELDS,
+        _encode_one,
+        _merge_partials,
+    )
+
+    rows = _seeded_partials()
+    by_term: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: (r["term"], r["first_doc"])):
+        by_term.setdefault(r["term"], []).append((r, _decode_partial(r)))
+    partials = spark.createDataFrame(
+        [tuple(r[f] for f in _PARTIAL_FIELDS.fieldNames()) for r in rows],
+        _PARTIAL_FIELDS,
+    )
+    avgdl = 97.5
+    fields = ["count", "doc_ids_enc", "tfs_enc", "dls_enc", "block_first_doc",
+              "block_off_doc", "block_off_tf", "block_off_dl", "block_max_tf",
+              "block_max_tfpart", "block_max_tfdl"]
+
+    def expected(cfg):
+        out, fallback = [], 0
+        for term, parts in by_term.items():
+            units, cur, pending = [], [], 0
+            total = sum(len(d[0]) for _, d in parts)
+            for part in parts:
+                cur.append(part)
+                pending += len(part[1][0])
+                if cfg.shard_postings and total >= cfg.shard_postings and pending >= cfg.shard_postings:
+                    units.append(cur)
+                    cur, pending = [], 0
+            if cur:
+                units.append(cur)
+            for unit in units:
+                docs, tfs, dls = (np.concatenate([d[i] for _, d in unit]) for i in range(3))
+                fallback += bool(np.any(np.diff(docs) <= 0))
+                o = np.argsort(docs, kind="stable")
+                enc = _encode_one(docs[o], tfs[o], dls[o], cfg.block_size, cfg.k1, cfg.b, avgdl)
+                out.append((term, len(docs), *(enc[f] for f in fields)))
+        return sorted(out), fallback
+
+    def merged(cfg):
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "4")
+        try:
+            df = _merge_partials(partials, avgdl, cfg, num_partitions=3)
+            got = df.collect()
+        finally:
+            spark.conf.set(key, old)
+        return df, sorted(
+            (r["term"], r["df"], *(bytes(r[f]) if f.endswith("_enc") else r[f] for f in fields))
+            for r in got
+        )
+
+    whole = EngineConfig(block_size=8)
+    want, fallback = expected(whole)
+    assert fallback > 0  # the interleaved packs do reach the sort fallback
+    assert merged(whole)[1] == want
+    assert len(want) == len(by_term)
+
+    sharded = EngineConfig(block_size=8, shard_postings=70)
+    want, _ = expected(sharded)
+    df, got = merged(sharded)
+    assert got == want
+    assert len([r for r in got if r[0] == "t00"]) > 1  # the head term is cut
+    decoded = decompress_postings(df, sharded.block_size).collect()
+    for term, parts in by_term.items():
+        post = sorted(
+            (int(d), int(t), int(l))
+            for _, dec in parts for d, t, l in zip(*dec)
+        )
+        assert sorted(
+            (p["doc_id"], p["tf"], p["dl"])
+            for r in decoded if r["term"] == term for p in r["postings"]
+        ) == post

@@ -226,6 +226,54 @@ def test_build_compressed_index_pyfiles_identical(spark, tmp_path):
     assert ds(pyf) == ds(jvm)
 
 
+def test_pyfiles_map_tasks_follow_scan_partitions(spark, tmp_path):
+    """The path-in build plans one map task per partition of Spark's own
+    scan of the corpus, capped at one task per row group; the persisted
+    partials, and so ``doc_stats``, keep that partition count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fulltextsearch_spark.config import EngineConfig
+    from fulltextsearch_spark.operators.compressed_index import (
+        build_compressed_index_pyfiles,
+    )
+
+    path = tmp_path / "corpus"
+    path.mkdir()
+    n_row_groups = 0
+    for f in range(3):
+        texts = [f"alpha beta doc{f}x{i} gamma" for i in range(40)]
+        pq.write_table(
+            pa.table({"text": texts}), str(path / f"part-{f}.parquet"), row_group_size=10
+        )
+        n_row_groups += 4
+    cfg = EngineConfig(block_size=32)
+
+    def tasks_and_scan():
+        idx = build_compressed_index_pyfiles(spark, str(path), cfg)
+        assert idx.n_docs == 120
+        return (
+            idx.doc_stats.rdd.getNumPartitions(),
+            spark.read.parquet(str(path)).rdd.getNumPartitions(),
+        )
+
+    tasks, scan = tasks_and_scan()
+    assert scan < n_row_groups  # small files: the scan packs them per core
+    assert tasks == scan
+    # byte-sized splits finer than the row groups: one task per row group
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k) for k in keys]
+    try:
+        for k in keys:
+            spark.conf.set(k, "256")
+        tasks, scan = tasks_and_scan()
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
+    assert scan > n_row_groups
+    assert tasks == n_row_groups
+
+
 def test_build_compressed_index_empty_corpus(spark, tmp_path):
     """Zero input rows: both build entry points give n_docs 0, avgdl 0.0 and
     no postings rows."""
