@@ -26,11 +26,6 @@ class EngineConfig:
     stem: bool = True
     # posting-list block size for compression + block-max metadata.
     block_size: int = 128
-    # head-term salting: terms with df above this threshold are aggregated
-    # in two stages (groupBy(term, salt) then merge). 0 disables.
-    salt_df_threshold: int = 100_000
-    # number of salt buckets for head terms.
-    salt_buckets: int = 32
     # doc-range sharding of compressed posting rows (SCALE.md §3): a term
     # whose merged postings exceed this many entries is emitted as MULTIPLE
     # self-contained rows (each with its own blocks/offsets/block-max), so no
@@ -38,7 +33,9 @@ class EngineConfig:
     # Readers treat each shard as an independent posting slice with idf from
     # the term-total df (sum of per-row counts). None disables (sandbox
     # corpora never need it); a production cluster would set ~128M
-    # (~0.5 GB encoded at ~3-4 bytes/posting).
+    # (~0.5 GB encoded at ~3-4 bytes/posting). The logical build_index
+    # ignores it (one row per term). Head-term skew in the build's shuffle
+    # needs no knob: each map task packs its own partial run of every term.
     shard_postings: int | None = None
 
 

@@ -46,7 +46,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.operators.compression import (
@@ -54,12 +53,10 @@ from fulltextsearch_spark.operators.compression import (
     varint_encode,
     varint_nbytes,
 )
-from fulltextsearch_spark.operators.index_build import IndexTables
 
 __all__ = [
     "CompressedIndex",
     "COMPRESSED_POSTINGS_FIELDS",
-    "compress_postings",
     "decompress_postings",
     "build_compressed_index",
     "build_compressed_index_pyfiles",
@@ -883,88 +880,84 @@ def compressed_rows_as_partials(postings: DataFrame, block_size: int) -> DataFra
     )
 
 
-def compress_postings(index: IndexTables, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Logical postings arrays -> compressed block format (Arrow-batched)."""
-    block_size, k1, b, avgdl = cfg.block_size, cfg.k1, cfg.b, index.avgdl
-
-    @pandas_udf(COMPRESSED_POSTINGS_FIELDS)
-    def _encode(doc_ids: pd.Series, tfs: pd.Series, dls: pd.Series) -> pd.DataFrame:
-        rows = [
-            _encode_one(
-                np.asarray(d, dtype=np.int64),
-                np.asarray(t, dtype=np.int64),
-                np.asarray(l, dtype=np.int64),
-                block_size,
-                k1,
-                b,
-                avgdl,
-            )
-            for d, t, l in zip(doc_ids, tfs, dls)
-        ]
-        return pd.DataFrame(rows)
-
-    return index.postings.select(
-        "term",
-        F.col("df").cast("long").alias("df"),
-        _encode(
-            F.col("postings.doc_id"), F.col("postings.tf"), F.col("postings.dl")
-        ).alias("_c"),
-    ).select("term", "df", "_c.*")
-
-
 def decompress_postings(
     compressed: DataFrame, block_size: int, codec: str = "varint"
 ) -> DataFrame:
-    """Inverse transform, for round-trip tests and the exhaustive oracle path:
-    compressed rows -> (term, df, postings ARRAY<STRUCT<doc_id, tf, dl>>)."""
-    out_type = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("tf", T.LongType()),
-                T.StructField("dl", T.LongType()),
+    """Compressed rows -> (term, df, postings ARRAY<STRUCT<doc_id, tf, dl>>),
+    one output row per input row (a sharded term keeps its rows).
+
+    Arrow in, Arrow out (``mapInArrow``), no per-posting Python object:
+    varint streams of a whole batch are read as one buffer view each and
+    decoded with one ``varint_decode`` call (varints are self-delimiting,
+    so the concatenated cells decode to the concatenated values); pfor/ef
+    cells decode per row with their block offsets. One segmented cumsum
+    then undoes the block-restarting doc-id deltas of every row at once.
+    """
+    enc_cols = ["doc_ids_enc", "tfs_enc", "dls_enc"]
+    off_cols = ["block_off_doc", "block_off_tf", "block_off_dl"]
+
+    def _streams(rb, counts):
+        if codec == "varint":
+            n = int(counts.sum())
+            return [
+                varint_decode(_binary_parts(rb.column(c))[1], n).astype(np.int64)
+                for c in enc_cols
             ]
-        )
-    )
+        from fulltextsearch_spark.operators.wand import _decode_all  # noqa: PLC0415
 
-    @pandas_udf(out_type)
-    def _decode(count: pd.Series, enc_doc: pd.Series, enc_tf: pd.Series, enc_dl: pd.Series) -> pd.Series:
         out = []
-        dec = varint_decode
-        if codec == "pfor":
-            from fulltextsearch_spark.operators.compression import pfor_decode  # noqa: PLC0415
-
-            dec = pfor_decode
-        elif codec == "ef":
-            from fulltextsearch_spark.operators.compression import ef_decode  # noqa: PLC0415
-
-            dec = ef_decode
-        for n, ed, et, el in zip(count, enc_doc, enc_tf, enc_dl):
-            n = int(n)
-            deltas = dec(bytes(ed), n).astype(np.int64)
-            doc_ids = np.cumsum(deltas)
-            starts = np.arange(0, n, block_size)
-            if starts.size > 1:
-                doc_ids = deltas.copy()
-                for s in starts:
-                    e = min(s + block_size, n)
-                    doc_ids[s:e] = np.cumsum(deltas[s:e])
-            tfs = dec(bytes(et), n).astype(np.int64)
-            dls = dec(bytes(el), n).astype(np.int64)
+        for c, oc in zip(enc_cols, off_cols):
+            cell, buf = _binary_parts(rb.column(c))
+            boff, ball = _list_parts(rb.column(oc))
             out.append(
-                [
-                    {"doc_id": int(d), "tf": int(t), "dl": int(l)}
-                    for d, t, l in zip(doc_ids, tfs, dls)
-                ]
+                np.concatenate(
+                    [
+                        _decode_all(
+                            buf[cell[i] : cell[i + 1]],
+                            int(counts[i]),
+                            codec,
+                            ball[boff[i] : boff[i + 1]],
+                        )
+                        for i in range(rb.num_rows)
+                    ]
+                )
             )
-        return pd.Series(out)
+        return out
 
-    return compressed.select(
-        "term",
-        "df",
-        _decode(
-            F.col("count"), F.col("doc_ids_enc"), F.col("tfs_enc"), F.col("dls_enc")
-        ).alias("postings"),
+    def _decode(batches):
+        import pyarrow as pa  # noqa: PLC0415
+
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            counts = rb.column("count").to_numpy(zero_copy_only=False).astype(np.int64)
+            row_off = np.concatenate(([0], np.cumsum(counts)))
+            deltas, tfs, dls = _streams(rb, counts)
+            # a block starts every block_size postings of each row; its
+            # delta is absolute, so doc_id = cumsum - cumsum before the block
+            within = np.arange(row_off[-1]) - np.repeat(row_off[:-1], counts)
+            starts = np.flatnonzero(within % block_size == 0)
+            g = np.cumsum(deltas)
+            prev = np.zeros(starts.size, dtype=np.int64)
+            prev[1:] = g[starts[1:] - 1]
+            doc_ids = g - np.repeat(prev, np.diff(np.append(starts, row_off[-1])))
+            postings = pa.StructArray.from_arrays(
+                [pa.array(doc_ids), pa.array(tfs), pa.array(dls)],
+                names=["doc_id", "tf", "dl"],
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("term"),
+                    rb.column("df"),
+                    pa.ListArray.from_arrays(pa.array(row_off, pa.int32()), postings),
+                ],
+                names=["term", "df", "postings"],
+            )
+
+    cols = ["term", "df", "count", *enc_cols] + (off_cols if codec != "varint" else [])
+    return compressed.select(*cols).mapInArrow(
+        _decode,
+        "term string, df long, postings array<struct<doc_id: long, tf: long, dl: long>>",
     )
 
 

@@ -81,12 +81,14 @@ def delete_docs_compressed(
     """Compaction for a compressed index: decode -> delete -> re-encode.
 
     A full rewrite by design (same as a Lucene merge that drops deletes);
-    block-max metadata recomputes under the post-delete avgdl. Returns a
-    new :class:`CompressedIndex`.
+    the remaining postings re-encode through the build's own partial pack
+    and merge, so block-max metadata recomputes under the post-delete
+    avgdl. Returns a new :class:`CompressedIndex` with one row per term.
     """
     from fulltextsearch_spark.operators.compressed_index import (  # noqa: PLC0415
         CompressedIndex,
-        compress_postings,
+        _merge_partials,
+        _partial_rows,
         decompress_postings,
     )
 
@@ -101,7 +103,10 @@ def delete_docs_compressed(
     enc_cfg = EngineConfig(
         k1=cfg.k1, b=cfg.b, block_size=cfg.block_size, stem=cfg.stem
     )
-    compressed = compress_postings(remaining, enc_cfg)
+    flat = remaining.postings.select("term", F.explode("postings").alias("p")).select(
+        "p.doc_id", "term", "p.tf", "p.dl"
+    )
+    compressed = _merge_partials(_partial_rows(flat), remaining.avgdl, enc_cfg)
     return CompressedIndex(
         postings=compressed,
         doc_stats=remaining.doc_stats,

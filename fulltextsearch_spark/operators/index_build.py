@@ -1,16 +1,21 @@
-"""Inverted-index construction — Spark-first, skew-aware, scale-minded.
+"""Inverted-index construction: the logical index, derived from the
+compressed build.
 
 Replaces the reference's two-pass threaded hash-table build
 (``/root/reference/src/algorithms/inverted/inverted_index_engine.cpp:15-107``)
-with a single tokenize pass + shuffle aggregations:
+with the one partition-parallel posting build of
+:mod:`fulltextsearch_spark.operators.compressed_index`:
 
-* per-doc term frequencies are computed map-side inside the Arrow tokenizer
-  UDF (the reference's per-doc ``unordered_map``, ``:37-51``), so the big
-  term shuffle moves one row per distinct (doc, term), not per occurrence;
-* posting lists come from ``groupBy(term)`` — with an explicit **salted
-  two-stage aggregation** for head terms (Zipf head, e.g. "http"/"www" in
-  web text), which the reference has no answer to beyond spinlock contention
-  (``parallel_hash_table.hpp:134-148``);
+* each map task tokenizes its documents and packs per-doc term frequencies
+  (the reference's per-doc ``unordered_map``, ``:37-51``) into per-term
+  delta+varint partials before the term shuffle;
+* those per-task partials are the salted runs of a head term (Zipf head,
+  e.g. "http"/"www" in web text), which the reference has no answer to
+  beyond spinlock contention (``parallel_hash_table.hpp:134-148``): no task
+  ever collects a head term's postings row by row, the reduce only
+  concatenates byte streams;
+* :func:`build_index` decodes the merged rows once, vectorized, into
+  posting arrays;
 * corpus stats use the reference's exact semantics: N = max(doc_id)+1 and
   avgdl = sum(dl)/N — missing/empty docs count as dl=0
   (``inverted_index_engine.cpp:190-204``).
@@ -24,7 +29,7 @@ corpora.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +37,10 @@ from pyspark.storagelevel import StorageLevel
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.functions.tokenizer import term_counts_batch
+from fulltextsearch_spark.operators.compressed_index import (
+    build_compressed_index,
+    decompress_postings,
+)
 
 __all__ = ["IndexTables", "build_index", "doc_term_frequencies", "index_stats"]
 
@@ -62,7 +71,7 @@ class IndexTables:
 
 
 def _tokenized(docs: DataFrame, text_col: str, stem: bool) -> DataFrame:
-    """(doc_id, dl, terms, tfs) — the single tokenize pass over the corpus.
+    """(doc_id, dl, terms, tfs) — one tokenize pass over the corpus.
 
     ``mapInArrow`` over the vectorized
     :func:`~fulltextsearch_spark.functions.tokenizer.term_counts_batch`
@@ -112,52 +121,6 @@ def doc_term_frequencies(docs: DataFrame, text_col: str = "text", stem: bool = T
     return _explode_tf(_tokenized(docs, text_col, stem))
 
 
-def _salted_postings(doc_tf: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """term -> sorted posting array, two-stage for head terms.
-
-    Head terms (df above ``cfg.salt_df_threshold``) are first aggregated by
-    (term, salt) into partial sorted runs, then merged; tail terms take the
-    direct one-stage aggregation. This bounds any single task's collect_list
-    to ~df/salt_buckets entries — the explicit skew answer required at
-    10^12-doc scale where a head term can appear in most documents.
-    """
-    posting = F.struct(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("tf").cast("long").alias("tf"),
-        F.col("dl").cast("long").alias("dl"),
-    )
-
-    df_tbl = doc_tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-    if cfg.salt_df_threshold <= 0:
-        # salting disabled: single-stage aggregation
-        agg = doc_tf.groupBy("term").agg(
-            F.sort_array(F.collect_list(posting)).alias("postings")
-        )
-        return agg.join(df_tbl, "term")
-
-    head_terms = df_tbl.filter(F.col("df") > cfg.salt_df_threshold).select("term")
-    tagged = doc_tf.join(
-        F.broadcast(head_terms.withColumn("_head", F.lit(True))), "term", "left"
-    )
-
-    tail = tagged.filter(F.col("_head").isNull()).groupBy("term").agg(
-        F.sort_array(F.collect_list(posting)).alias("postings")
-    )
-
-    head_partial = (
-        tagged.filter(F.col("_head").isNotNull())
-        .withColumn("_salt", F.pmod(F.hash("doc_id"), F.lit(cfg.salt_buckets)))
-        .groupBy("term", "_salt")
-        .agg(F.sort_array(F.collect_list(posting)).alias("_run"))
-    )
-    head = head_partial.groupBy("term").agg(
-        F.sort_array(F.flatten(F.collect_list(F.col("_run")))).alias("postings")
-    )
-
-    return tail.unionByName(head).join(df_tbl, "term")
-
-
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -167,34 +130,26 @@ def build_index(
 ) -> IndexTables:
     """Build the logical inverted index from a (doc_id, text, ...) frame.
 
-    The corpus is tokenized exactly once: the tokenized intermediate is
-    persisted (MEMORY_AND_DISK) and both doc_stats and postings derive from
-    it. The resumable large-scale build
-    (:mod:`fulltextsearch_spark.plans.checkpoints`) materializes the same
-    intermediate to parquet instead.
+    :func:`~fulltextsearch_spark.operators.compressed_index.
+    build_compressed_index` (one fused tokenize+pack pass, one shuffle of
+    compressed partials) followed by one vectorized
+    :func:`~fulltextsearch_spark.operators.compressed_index.
+    decompress_postings`. The build runs without ``cfg.shard_postings`` so
+    every term is one row (``sharded=False``). ``doc_stats`` (dl=0 docs
+    kept), ``n_docs`` and ``avgdl`` come from the compressed build.
+    ``persist`` caches the decoded postings (MEMORY_AND_DISK) so query
+    batches do not decode again; the on-disk form is the compressed index
+    (``save_compressed_index``).
     """
-    with_tc = _tokenized(docs, text_col, cfg.stem)
+    cidx = build_compressed_index(
+        spark, docs, replace(cfg, shard_postings=None), text_col
+    )
+    postings = decompress_postings(cidx.postings, cidx.block_size)
     if persist:
-        with_tc = with_tc.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # doc_stats keeps dl=0 docs that the explode drops.
-    doc_stats = with_tc.select("doc_id", "dl")
-
-    # Corpus stats, reference semantics: N = max(doc_id)+1, avgdl = sum(dl)/N
-    # (inverted_index_engine.cpp:190-204). One tiny tree-aggregate.
-    stats_row = doc_stats.agg(
-        (F.max("doc_id") + F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
-    ).collect()[0]
-    n_docs = int(stats_row["n_docs"])
-    avgdl = float(stats_row["total_dl"]) / float(n_docs) if n_docs else 0.0
-
-    postings = _salted_postings(_explode_tf(with_tc), cfg)
-    if persist:
-        # The postings ARE the index — persist so query batches don't
-        # re-tokenize/re-aggregate. (The on-disk form is save_index /
-        # the checkpointed build.)
         postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-    return IndexTables(postings=postings, doc_stats=doc_stats, n_docs=n_docs, avgdl=avgdl)
+    return IndexTables(
+        postings=postings, doc_stats=cidx.doc_stats, n_docs=cidx.n_docs, avgdl=cidx.avgdl
+    )
 
 
 def index_stats(index: IndexTables) -> DataFrame:

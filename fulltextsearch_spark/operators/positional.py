@@ -111,8 +111,8 @@ def build_positional_index(
 
 def save_positional_index(index: PositionalIndex, root: str) -> None:
     """Term-clustered parquet (:func:`write_clustered`), like
-    io.save_index: a phrase probe reads O(phrase-terms) row groups via
-    footer min/max on ``term``."""
+    ``save_compressed_index``: a phrase probe reads O(phrase-terms) row
+    groups via footer min/max on ``term``."""
     write_clustered(index.postings, "term", f"{root}/postings", F.col("doc_id"))
     index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
     index.postings.sparkSession.createDataFrame(

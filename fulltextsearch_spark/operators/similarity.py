@@ -1042,12 +1042,15 @@ def ivfpq_topk_served(
     ``queries`` is collected ONCE and re-materialized as a local frame
     before being handed to the kernel — a nondeterministic queries plan
     (unseeded sample, unordered limit) must not be able to produce probe
-    lists that disagree with the outer IN-filter."""
+    lists that disagree with the outer IN-filter. Query ids keep their
+    type: the kernel sees each query by its position, and the caller's id
+    is joined back onto its hits."""
     idx = load_ivfpq_index(spark, root)
+    id_type = queries.schema[q_id_col].dataType.simpleString()
     raw = queries.select(q_id_col, q_vec_col).collect()  # single evaluation
     if not raw:
         return spark.createDataFrame(
-            [], "query_id LONG, rank LONG, vec_id LONG, sim DOUBLE"
+            [], f"query_id {id_type}, rank LONG, vec_id LONG, sim DOUBLE"
         )
     qm = np.array([r[1] for r in raw], dtype=np.float64)
     qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
@@ -1064,11 +1067,17 @@ def ivfpq_topk_served(
     # re-materialize the RAW vectors so the kernel normalizes/assigns from
     # byte-identical inputs (float64 survives the local round-trip exactly)
     stable_q = spark.createDataFrame(
-        [(int(r[0]), [float(v) for v in r[1]]) for r in raw],
-        f"{q_id_col} LONG, {q_vec_col} ARRAY<DOUBLE>",
+        [(i, [float(v) for v in r[1]]) for i, r in enumerate(raw)],
+        "query_id LONG, qvec ARRAY<DOUBLE>",
     )
-    return ivfpq_adc_topk(
-        pruned, stable_q, nprobe=nprobe, k=k, q_id_col=q_id_col, q_vec_col=q_vec_col
+    ids = spark.createDataFrame(
+        [(i, r[0]) for i, r in enumerate(raw)], f"_pos LONG, query_id {id_type}"
+    )
+    hits = ivfpq_adc_topk(pruned, stable_q, nprobe=nprobe, k=k)
+    return (
+        hits.withColumnRenamed("query_id", "_pos")
+        .join(F.broadcast(ids), "_pos")
+        .select("query_id", "rank", "vec_id", "sim")
     )
 
 

@@ -86,14 +86,15 @@ def test_corpus_stats_reference_semantics(spark, corpus):
     assert idx.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
 
 
-def test_salted_merge_identical_results(spark, corpus):
-    """Skew path: forcing two-stage salted aggregation for every term with
-    df > 5 must produce identical postings/df to the unsalted build."""
+def test_head_term_merged_across_map_tasks_identical_results(spark, corpus):
+    """Skew path: over 6 input partitions the head term's postings arrive
+    as several map tasks' partial runs; the merged index must still rank
+    identically to the oracle, with sorted postings and df == len."""
     docs, doc_rows = corpus
-    cfg_salted = EngineConfig(k1=1.2, b=0.75, k=K, salt_df_threshold=5, salt_buckets=8)
-    idx = build_index(spark, docs, cfg_salted)
+    cfg = EngineConfig(k1=1.2, b=0.75, k=K)
+    idx = build_index(spark, docs.repartition(6), cfg)
     qdf = spark.createDataFrame(QUERY_SET, ["query_id", "content"])
-    got = search(idx, qdf, cfg_salted).collect()
+    got = search(idx, qdf, cfg).collect()
     oracle = OracleIndex(doc_rows)
     by_q: dict[str, list] = {}
     for r in got:

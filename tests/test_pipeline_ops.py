@@ -373,6 +373,29 @@ def test_ivfpq_save_load_roundtrip(spark, emb_df, tmp_path):
     assert all(rec[f"{t}_bytes"] > 0 for t in ("codes", "centroids", "codebooks"))
 
 
+def test_ivfpq_served_keeps_query_id_type(spark, emb_df, tmp_path):
+    """ivfpq_topk_served takes non-integer query ids: string ids get the
+    same neighbours as integer ids, and the empty result keeps the id
+    type."""
+    root = str(tmp_path / "ivfpq_served")
+    sim.save_ivfpq_index(
+        sim.build_ivfpq(emb_df, n_centroids=8, m=4, n_codes=16, persist=False), root
+    )
+    q = emb_df.filter(emb_df.vec_id < 3).selectExpr(
+        "vec_id AS query_id", "transform(embedding, x -> cast(x AS double)) AS qvec"
+    )
+    qs = q.selectExpr("concat('q', cast(query_id AS string)) AS query_id", "qvec")
+    a = sorted(
+        (f"q{r['query_id']}", r["rank"], r["vec_id"], r["sim"])
+        for r in sim.ivfpq_topk_served(spark, root, q, nprobe=3, k=5).collect()
+    )
+    b = sorted(tuple(r) for r in sim.ivfpq_topk_served(spark, root, qs, nprobe=3, k=5).collect())
+    assert a == b and len(a) == 15
+    empty = sim.ivfpq_topk_served(spark, root, qs.limit(0), nprobe=3, k=5)
+    assert empty.schema["query_id"].dataType.simpleString() == "string"
+    assert empty.count() == 0
+
+
 def test_sq_cosine_topk_matches_numpy(spark, emb_df, emb_np):
     """SQ8: codes, reconstructions, and top-k match a numpy replay; the
     quantizer is lossy-bounded (per-dim error <= scale/2) and recall vs

@@ -106,6 +106,17 @@ def test_compressed_build_python_stages_are_arrow_only(spark, web_dir):
         assert "MapInPandas" not in plan, plan
 
 
+def test_build_index_postings_are_the_compressed_build_decoded(spark, web_dir):
+    """The logical index is the compressed build plus one mapInArrow
+    decode: no pandas stage, no per-row Arrow UDF, no collect_list
+    aggregation of postings."""
+    docs = assign_file_order_doc_ids(spark, web_dir, columns=["text"])
+    plan = _plan(build_index(spark, docs, EngineConfig(), persist=False).postings)
+    assert "MapInArrow" in plan, plan
+    for banned in ("MapInPandas", "ArrowEvalPython", "collect_list"):
+        assert banned not in plan, plan
+
+
 def test_vsm_query_plan_reuses_norms_and_joins_before_explode(spark, web_dir):
     """With build-time norms, the VSM query plan must not re-aggregate norms
     (their build-time explode may not reappear) and must unnest posting

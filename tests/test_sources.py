@@ -73,30 +73,21 @@ def test_dense_ids_bucket_partition_steering(spark):
     assert ids == list(range(4000))
 
 
-def test_io_seam_logical_index_round_trip(spark, tmp_path):
-    """save_index/load_index: the logical index as three tables (S6/S7
-    replacement for the reference's binary snapshot), parquet fallback when
-    no Iceberg runtime is present (this sandbox)."""
-    from fulltextsearch_spark.config import EngineConfig
-    from fulltextsearch_spark.operators.index_build import build_index
-    from fulltextsearch_spark.operators.query import search
-    from fulltextsearch_spark.sources.io import iceberg_available, load_index, save_index
+def test_io_seam_parquet_fallback_round_trip(spark, tmp_path):
+    """write_table/read_table fall back to parquet directories when no
+    Iceberg runtime is on the classpath and round-trip a table."""
+    from fulltextsearch_spark.sources.io import iceberg_available, read_table, write_table
 
     assert iceberg_available(spark) is False  # sandbox: parquet fallback path
-    docs = spark.createDataFrame(
+    df = spark.createDataFrame(
         [(0, "spark index search"), (1, "search engine spark"), (2, "unrelated words here")],
-        ["doc_id", "text"],
+        "doc_id LONG, text STRING",
     )
-    cfg = EngineConfig(k=3, stem=False)
-    idx = build_index(spark, docs, cfg, persist=False)
-    root = str(tmp_path / "idx")
-    save_index(idx, root)
-    loaded = load_index(spark, root)
-    assert loaded.n_docs == idx.n_docs and abs(loaded.avgdl - idx.avgdl) < 1e-12
-    q = spark.createDataFrame([("q", "spark search")], ["query_id", "content"])
-    a = sorted(tuple(r) for r in search(idx, q, cfg).collect())
-    b = sorted(tuple(r) for r in search(loaded, q, cfg).collect())
-    assert a == b and len(a) > 0
+    root = str(tmp_path / "tbl")
+    write_table(df, root)
+    back = read_table(spark, root)
+    assert back.schema == df.schema
+    assert sorted(tuple(r) for r in back.collect()) == sorted(tuple(r) for r in df.collect())
 
 
 def test_quality_metrics_script(tmp_path):

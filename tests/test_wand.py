@@ -4,6 +4,8 @@ pruning (rank-identical to exhaustive), and that pruning actually happens.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pytest
 
@@ -11,7 +13,6 @@ from fulltextsearch_spark.config import EngineConfig
 from fulltextsearch_spark.operators.compressed_index import (
     _encode_one,
     build_compressed_index,
-    compress_postings,
     decompress_postings,
     load_compressed_index,
     save_compressed_index,
@@ -21,6 +22,7 @@ from fulltextsearch_spark.operators.query import search
 from fulltextsearch_spark.operators.wand import maxscore_topk, search_wand
 from fulltextsearch_spark.sources.ingest import assign_dense_doc_ids
 from fulltextsearch_spark.sources.webpages import QUERY_SET, generate_webpages
+from tests.oracle import OracleIndex
 
 K = 10
 CFG = EngineConfig(k1=1.2, b=0.75, k=K, block_size=16)  # small blocks: many per term
@@ -46,19 +48,39 @@ def _result_map(rows):
     return by_q
 
 
-def test_compress_roundtrip(spark, corpus):
-    logical = build_index(spark, corpus, CFG)
-    compressed = compress_postings(logical, CFG)
-    back = decompress_postings(compressed, CFG.block_size)
-    orig = {
-        r["term"]: [(p["doc_id"], p["tf"], p["dl"]) for p in r["postings"]]
-        for r in logical.postings.collect()
+def test_decompress_matches_oracle_postings(spark, corpus, cindex, tmp_path):
+    """decompress_postings against an independent source: the index saved
+    under every codec (varint: one batch-wide decode; pfor/ef: per-row
+    decode) loads and decodes to OracleIndex's postings, dl and df, and a
+    shard_postings build's multi-row terms decode to the same postings."""
+    rows = corpus.select("doc_id", "text").collect()
+    oracle = OracleIndex([(r["doc_id"], r["text"]) for r in rows])
+    want = {
+        t: [(d, tf, oracle.dl[d]) for d, tf in sorted(p.items())]
+        for t, p in oracle.postings.items()
     }
-    got = {
-        r["term"]: [(p["doc_id"], p["tf"], p["dl"]) for p in r["postings"]]
-        for r in back.collect()
-    }
-    assert got == orig
+
+    def decoded(idx):
+        got: dict[str, list] = {}
+        dec = decompress_postings(idx.postings, idx.block_size, idx.codec).collect()
+        for r in sorted(dec, key=lambda r: (r["term"], r["postings"][0]["doc_id"])):
+            assert r["df"] == len(r["postings"])
+            got.setdefault(r["term"], []).extend(
+                (p["doc_id"], p["tf"], p["dl"]) for p in r["postings"]
+            )
+        return got, len(dec)
+
+    for codec in ("varint", "pfor", "ef"):
+        root = str(tmp_path / codec)
+        save_compressed_index(cindex, root, codec=codec)
+        loaded = load_compressed_index(spark, root)
+        assert loaded.codec == codec
+        assert decoded(loaded) == (want, len(want)), codec
+
+    sharded = build_compressed_index(spark, corpus, replace(CFG, shard_postings=50))
+    got, n_rows = decoded(sharded)
+    assert got == want
+    assert n_rows > len(want)  # some terms really span several rows
 
 
 def test_compression_actually_compresses(cindex):
