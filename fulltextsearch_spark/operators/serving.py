@@ -48,33 +48,16 @@ from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.functions.tokenizer import tokenize
-from fulltextsearch_spark.operators.wand import maxscore_topk, topk_from_joined
+from fulltextsearch_spark.operators.wand import (
+    _BLOCK_COLS,
+    _ENC_COLS,
+    _KERNEL_COLS,
+    kernel_entries,
+    maxscore_topk,
+    topk_from_joined,
+)
 
 __all__ = ["QueryServer"]
-
-# columns the MaxScore kernel needs from a compressed posting row
-_KERNEL_COLS = [
-    "term",
-    "count",
-    "doc_ids_enc",
-    "tfs_enc",
-    "dls_enc",
-    "block_first_doc",
-    "block_off_doc",
-    "block_off_tf",
-    "block_off_dl",
-    "block_max_tfpart",
-    "block_max_tfdl",
-]
-
-_BLOCK_META_KEYS = (
-    "block_first_doc",
-    "block_off_doc",
-    "block_off_tf",
-    "block_off_dl",
-    "block_max_tfpart",
-    "block_max_tfdl",
-)
 
 
 @dataclass
@@ -103,25 +86,24 @@ class QueryServer:
     _rg_manifest: list | None = field(default=None, repr=False)
     _pf_cache: dict = field(default_factory=dict, repr=False)
     # search_local fetch counters (read-only for callers): row groups read /
-    # skipped by the manifest, and compressed bytes of the columns read
-    # (footer column-chunk sizes)
+    # skipped by the manifest, compressed bytes of the columns read (footer
+    # column-chunk sizes), and fetches of terms too big to ever be cached
     counters: dict = field(
         init=False,
         repr=False,
         compare=False,
         default_factory=lambda: dict.fromkeys(
-            ("row_groups_read", "row_groups_pruned", "bytes_read"), 0
+            ("row_groups_read", "row_groups_pruned", "bytes_read", "row_cache_oversize"),
+            0,
         ),
     )
     _dec_cache: dict = field(default_factory=dict, repr=False)  # key -> (d,t,l,nbytes)
     _dec_seen: dict = field(default_factory=dict, repr=False)
     _dec_bytes: int = field(default=0, repr=False)
     # kernel-ready matched-rows cache for search_local: term -> list of
-    # per-shard base entry dicts (encoded bytes + numpy block metadata,
-    # qtf-free). Without it every WARM batch re-reads the term's row
-    # groups and re-converts arrow -> python (to_pylist / bytes / asarray)
-    # — that assembly, not decode or pruning, was the matched-size serving
-    # gap vs the reference's in-RAM loop. LRU-bounded like _dec_cache.
+    # per-shard base entry dicts (owned copies of qtf-free kernel_entries).
+    # Without it every WARM batch re-reads the term's row groups and
+    # rebuilds its entries. LRU-bounded like _dec_cache.
     row_cache_mb: int = 256
     _row_cache: dict = field(default_factory=dict, repr=False)  # term -> (rows, nbytes)
     _row_bytes: int = field(default=0, repr=False)
@@ -247,8 +229,8 @@ class QueryServer:
         by term; ``terms`` must be sorted. Warm terms come straight from the
         LRU row cache; only the misses pay a parquet pass — read ONLY the
         row groups whose [min, max] term range can contain a missing term,
-        filter to exact matches, convert once to (bytes, numpy) kernel
-        form, cache. Updates :attr:`counters`."""
+        filter to exact matches, build their entries with one
+        :func:`kernel_entries` call, cache. Updates :attr:`counters`."""
         import bisect  # noqa: PLC0415
 
         import pyarrow as pa  # noqa: PLC0415
@@ -268,7 +250,7 @@ class QueryServer:
 
         counters = self.counters
         term_set = pa.array(missing, type=pa.string())
-        fetched: dict[str, list[dict]] = {}
+        parts = []
         for path, rg, mn, mx, nbytes in self._rg_manifest:
             if mn is not None and mx is not None:
                 i = bisect.bisect_left(missing, mn)
@@ -278,47 +260,43 @@ class QueryServer:
             counters["row_groups_read"] += 1
             counters["bytes_read"] += nbytes
             tbl = self._pf_cache[path].read_row_group(rg, columns=_KERNEL_COLS)
-            tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=term_set))
-            for row in tbl.to_pylist():  # O(missing terms x shards) rows
-                fetched.setdefault(row["term"], []).append(row)
+            parts.append(tbl.filter(pc.is_in(tbl.column("term"), value_set=term_set)))
+        fetched: dict[str, list[dict]] = {}
+        if parts:
+            # one chunk: one batch of per-column conversions in kernel_entries
+            tbl = pa.concat_tables(parts).combine_chunks()
+            for t, ent in zip(
+                tbl.column("term").to_numpy(), kernel_entries(tbl, self.codec)
+            ):
+                fetched.setdefault(t, []).append(ent)
         budget = self.row_cache_mb * (1 << 20)
         for t in missing:
-            rows = []
-            trows = fetched.get(t, [])
-            df_t = sum(int(r["count"]) for r in trows)  # term-total df
-            # 512 B/entry floor: dict+key overhead, and it makes NEGATIVE
+            rows = fetched.get(t, [])
+            by_term[t] = rows
+            # 512 B/term floor: dict+key overhead, and it makes NEGATIVE
             # entries (queried-but-absent terms — the typo/rare heavy tail)
             # count toward the budget so the LRU eviction bounds them too
-            nb = 512
-            for r in trows:
-                ent = {
-                    "df": df_t,
-                    "codec": self.codec,
-                    "count": int(r["count"]),
-                    "doc_ids_enc": bytes(r["doc_ids_enc"]),
-                    "tfs_enc": bytes(r["tfs_enc"]),
-                    "dls_enc": bytes(r["dls_enc"]),
-                    "block_first_doc": np.asarray(r["block_first_doc"], dtype=np.int64),
-                    "block_off_doc": np.asarray(r["block_off_doc"], dtype=np.int64),
-                    "block_off_tf": np.asarray(r["block_off_tf"], dtype=np.int64),
-                    "block_off_dl": np.asarray(r["block_off_dl"], dtype=np.int64),
-                    "block_max_tfpart": np.asarray(
-                        r["block_max_tfpart"], dtype=np.float64
-                    ),
-                    "block_max_tfdl": np.asarray(r["block_max_tfdl"], dtype=np.float64),
+            nb = 512 + sum(
+                v.nbytes for ent in rows for v in ent.values() if isinstance(v, np.ndarray)
+            )
+            if nb > budget:
+                counters["row_cache_oversize"] += 1
+                continue
+            # cache owned copies (enc cells as bytes): a view pins the whole
+            # fetched Arrow buffer and costs more Python objects per entry
+            rows = [
+                {
+                    **ent,
+                    **{c: ent[c].tobytes() for c in _ENC_COLS},
+                    **{c: ent[c].copy() for c in _BLOCK_COLS},
                 }
-                nb += (
-                    len(ent["doc_ids_enc"]) + len(ent["tfs_enc"]) + len(ent["dls_enc"])
-                    + sum(ent[key].nbytes for key in _BLOCK_META_KEYS)
-                )
-                rows.append(ent)
-            by_term[t] = rows
-            if nb <= budget:
-                while self._row_bytes + nb > budget and self._row_cache:
-                    oldest = next(iter(self._row_cache))
-                    self._row_bytes -= self._row_cache.pop(oldest)[1]
-                self._row_cache[t] = (rows, nb)
-                self._row_bytes += nb
+                for ent in rows
+            ]
+            while self._row_bytes + nb > budget and self._row_cache:
+                oldest = next(iter(self._row_cache))
+                self._row_bytes -= self._row_cache.pop(oldest)[1]
+            self._row_cache[t] = (rows, nb)
+            self._row_bytes += nb
         return by_term
 
     def _attach_decoded(self, term: str, shard: int, ent: dict) -> None:

@@ -7,8 +7,9 @@ This module adds the safe-pruning query path the north_star requires at
 skip pointers, provably rank-identical to the exhaustive path.
 
 Dataflow: tokenized queries broadcast-join the compressed postings (only the
-needed term rows move), then one ``applyInPandas`` group per query runs the
-numpy kernel below. The kernel is Arrow-batched and vectorized — block decode
+needed term rows move), then one ``applyInArrow`` group per query runs the
+numpy kernel below on entries built by :func:`kernel_entries` (numpy views
+over the group's Arrow buffers). The kernel is vectorized — block decode
 (varint), scoring, and set merges are all numpy; the only Python-level loops
 are per-term (a handful) and per-needed-block (bounded by the candidate set).
 
@@ -47,12 +48,15 @@ Ties at the boundary keep ``>=`` (never pruned), so the deterministic
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
-from fulltextsearch_spark.operators.compressed_index import CompressedIndex
+from fulltextsearch_spark.operators.compressed_index import (
+    CompressedIndex,
+    _binary_parts,
+    _list_parts,
+)
 from fulltextsearch_spark.operators.compression import (
     _ef_decode_block,
     _pfor_decode_block,
@@ -63,6 +67,7 @@ from fulltextsearch_spark.operators.compression import (
 from fulltextsearch_spark.operators.query import query_terms
 
 __all__ = [
+    "kernel_entries",
     "maxscore_topk",
     "search_wand",
     "topk_from_joined",
@@ -591,6 +596,56 @@ def maxscore_topk(
     return cand_docs[order], cand_scores[order]
 
 
+# columns the MaxScore kernel needs from a compressed posting row
+_ENC_COLS = ("doc_ids_enc", "tfs_enc", "dls_enc")
+_BLOCK_COLS = (
+    "block_first_doc",
+    "block_off_doc",
+    "block_off_tf",
+    "block_off_dl",
+    "block_max_tfpart",
+    "block_max_tfdl",
+)
+_KERNEL_COLS = ["term", "count", *_ENC_COLS, *_BLOCK_COLS]
+
+
+def kernel_entries(tbl, codec: str) -> list[dict]:
+    """Compressed posting rows (an Arrow table holding :data:`_KERNEL_COLS`)
+    -> one qtf-free kernel entry per row, in row order: enc cells as uint8
+    views and block metadata as int64/float64 views over the table's own
+    buffers (no cell is copied; the entry dict is the only per-row object).
+    A doc-range-sharded head term (cfg.shard_postings) gives several
+    self-contained entries: every (term, doc) posting lives in one shard, so
+    partial scores sum and block-max bounds stay safe. Their ``df`` is the
+    TERM total, one ``count`` sum per dictionary-encoded term, so a term's
+    rows need not be adjacent."""
+    codes = tbl.column("term").combine_chunks().dictionary_encode().indices.to_numpy()
+    counts = tbl.column("count").to_numpy()
+    dfs = np.bincount(codes, weights=counts)[codes].astype(np.int64).tolist()
+    counts = counts.tolist()
+    entries: list[dict] = []
+    for rb in tbl.to_batches():
+        cols = [(c, *_binary_parts(rb.column(c))) for c in _ENC_COLS]
+        cols += [(c, *_list_parts(rb.column(c))) for c in _BLOCK_COLS]
+        cols = [(c, off.tolist(), vals) for c, off, vals in cols]
+        for i in range(rb.num_rows):
+            r = len(entries)
+            ent = {"codec": codec, "df": dfs[r], "count": counts[r]}
+            for c, off, vals in cols:
+                ent[c] = vals[off[i] : off[i + 1]]
+            entries.append(ent)
+    return entries
+
+
+def _query_entries(tbl, codec: str) -> list[dict]:
+    """One query's joined (qtf, <compressed posting row>) rows -> its
+    kernel entries."""
+    entries = kernel_entries(tbl, codec)
+    for ent, qtf in zip(entries, tbl.column("qtf").to_numpy().tolist()):
+        ent["qtf"] = qtf
+    return entries
+
+
 def search_wand(
     index: CompressedIndex,
     queries: DataFrame,
@@ -603,7 +658,7 @@ def search_wand(
 
     Plan shape: tiny query side tokenized and **broadcast** into the postings
     join (only matching term rows leave the scan — Parquet footer min/max on
-    the term-sorted files prunes most of the index), then one pandas group per
+    the term-sorted files prunes most of the index), then one Arrow group per
     query runs :func:`maxscore_topk`. No full-corpus shuffle at query time.
     """
     if scoring == "bm25" and (cfg.k1 != index.k1 or cfg.b != index.b):
@@ -621,32 +676,30 @@ def search_wand(
     )
 
 
-def _pdf_to_terms(pdf: pd.DataFrame, codec: str) -> list[dict]:
-    """One query's joined (qtf, <compressed posting row>) rows -> the kernel's
-    term-dict list. A doc-range-sharded head term contributes several
-    self-contained entries whose ``df`` is the TERM-total (sum of per-row
-    counts), never the row's slice."""
-    df_total = pdf.groupby("term")["count"].transform("sum")
-    terms = []
-    for row, df_t in zip(pdf.to_dict("records"), df_total):
-        terms.append(
-            {
-                "qtf": int(row["qtf"]),
-                "codec": codec,
-                "df": int(df_t),
-                "count": int(row["count"]),
-                "doc_ids_enc": bytes(row["doc_ids_enc"]),
-                "tfs_enc": bytes(row["tfs_enc"]),
-                "dls_enc": bytes(row["dls_enc"]),
-                "block_first_doc": np.asarray(row["block_first_doc"], dtype=np.int64),
-                "block_off_doc": np.asarray(row["block_off_doc"], dtype=np.int64),
-                "block_off_tf": np.asarray(row["block_off_tf"], dtype=np.int64),
-                "block_off_dl": np.asarray(row["block_off_dl"], dtype=np.int64),
-                "block_max_tfpart": np.asarray(row["block_max_tfpart"], dtype=np.float64),
-                "block_max_tfdl": np.asarray(row["block_max_tfdl"], dtype=np.float64),
-            }
-        )
-    return terms
+def _per_query(joined: DataFrame, codec: str, emit, fields: list) -> DataFrame:
+    """(query_id, qtf, <compressed posting row>) rows -> one Arrow group per
+    query; ``emit(entries)`` returns its output columns (equal-length, named
+    like ``fields``). The caller's query_id type is kept."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    def _group(tbl):
+        # useLargeVarTypes sends large var types: _binary_parts reads 32-bit
+        # offsets, and the output must match the declared string type
+        small = {pa.large_binary(): pa.binary(), pa.large_string(): pa.string()}
+        schema = pa.schema([f.with_type(small.get(f.type, f.type)) for f in tbl.schema])
+        tbl = tbl.cast(schema) if schema != tbl.schema else tbl
+        out = pa.table(emit(_query_entries(tbl, codec)))
+        return out.add_column(0, "query_id", pa.repeat(tbl.column("query_id")[0], out.num_rows))
+
+    schema = T.StructType(
+        [T.StructField("query_id", joined.schema["query_id"].dataType), *fields]
+    )
+    return (
+        joined.select("query_id", "qtf", *_KERNEL_COLS)
+        .groupBy("query_id")
+        .applyInArrow(_group, schema=schema)
+    )
 
 
 def wand_kernel_ab(
@@ -665,22 +718,17 @@ def wand_kernel_ab(
     the number a serving node pays per query — from the Spark job-dispatch
     floor that dominates a 10-query batch at bench scale."""
     import statistics  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
+    import time  # noqa: PLC0415
 
     kk = k if k is not None else cfg.k
     q_terms = query_terms(queries, stem=cfg.stem)
     joined = index.postings.join(F.broadcast(q_terms), "term", "inner")
-    rows = joined.collect()
-    by_q: dict = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
+    tbl = joined.select("query_id", "qtf", *_KERNEL_COLS).toArrow().sort_by("query_id")
+    codes = tbl.column("query_id").combine_chunks().dictionary_encode().indices.to_numpy()
+    starts = np.flatnonzero(np.diff(codes, prepend=-1))  # one per query
     out = {"prune_ms": 0.0, "full_ms": 0.0, "blocks_total": 0, "blocks_decoded": 0}
-    import time  # noqa: PLC0415
-
-    for rs in by_q.values():
-        pdf = pd.DataFrame([r.asDict() for r in rs])
-        terms = _pdf_to_terms(pdf, index.codec)
+    for s, e in zip(starts, np.append(starts[1:], codes.size)):
+        terms = _query_entries(tbl.slice(s, e - s), index.codec)
         args = (terms, index.n_docs, index.avgdl, kk)
         kw = dict(k1=index.k1, b=index.b, block_size=index.block_size)
         maxscore_topk(*args, **kw)  # warm
@@ -698,7 +746,7 @@ def wand_kernel_ab(
         if not (np.array_equal(d1, d2) and np.array_equal(s1, s2)):
             raise RuntimeError(
                 f"wand_kernel_ab: pruned and exhaustive top-k diverged for "
-                f"query {pdf['query_id'].iloc[0]!r}"
+                f"query {tbl.column('query_id')[s].as_py()!r}"
             )
         out["prune_ms"] += statistics.median(tp) * 1000.0
         out["full_ms"] += statistics.median(tf_) * 1000.0
@@ -722,45 +770,32 @@ def topk_from_joined(
     codec: str = "varint",
 ) -> DataFrame:
     """Shared kernel application: (query_id, qtf, <compressed posting row>)
-    rows -> per-query top-k via :func:`maxscore_topk` (one pandas group per
-    query). Used by :func:`search_wand` and the low-latency serving path
-    (:mod:`fulltextsearch_spark.operators.serving`)."""
-    # doc-range shards (cfg.shard_postings): a head term may span several
-    # self-contained rows. Each row becomes its own kernel entry (every
-    # (term, doc) posting lives in exactly one shard, so per-entry partial
-    # scores sum correctly and block-max bounds stay safe); idf must use
-    # the TERM-total df = sum of per-row counts, not the row's slice —
-    # see _pdf_to_terms.
-
-    def _score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["query_id"].iloc[0]
-        terms = _pdf_to_terms(pdf, codec)
-        doc_ids, scores = maxscore_topk(
-            terms, n_docs, avgdl, kk, scoring=scoring, k1=k1, b=b,
-            block_size=block_size, prune=prune,
-        )
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, doc_ids.size + 1, dtype=np.int64),
-                "doc_id": doc_ids,
-                "score": scores,
-            }
-        )
-
-    # inherit the caller's query_id type (string ids from the contract
-    # entries, but numeric ids must not crash the Arrow serializer)
+    rows -> per-query top-k via :func:`maxscore_topk` (one Arrow group per
+    query, entries from :func:`kernel_entries`). Used by :func:`search_wand`
+    and the Spark serving path (:mod:`fulltextsearch_spark.operators.serving`)."""
     from pyspark.sql import types as T  # noqa: PLC0415
 
-    schema = T.StructType(
+    def _topk(entries: list[dict]) -> dict:
+        doc_ids, scores = maxscore_topk(
+            entries, n_docs, avgdl, kk, scoring=scoring, k1=k1, b=b,
+            block_size=block_size, prune=prune,
+        )
+        return {
+            "rank": np.arange(1, doc_ids.size + 1, dtype=np.int64),
+            "doc_id": doc_ids,
+            "score": scores,
+        }
+
+    return _per_query(
+        joined,
+        codec,
+        _topk,
         [
-            T.StructField("query_id", joined.schema["query_id"].dataType),
             T.StructField("rank", T.LongType()),
             T.StructField("doc_id", T.LongType()),
             T.StructField("score", T.DoubleType()),
-        ]
+        ],
     )
-    return joined.groupBy("query_id").applyInPandas(_score_group, schema=schema)
 
 
 def wand_pruning_stats(
@@ -778,37 +813,23 @@ def wand_pruning_stats(
     (the evidence that pruning actually skips block decodes at scale; the
     reference has no analogue because it always decodes everything,
     inverted_index_engine.cpp:119-135)."""
+    from pyspark.sql import types as T  # noqa: PLC0415
+
     kk = k if k is not None else cfg.k
     q_terms = query_terms(queries, stem=cfg.stem)
     joined = index.postings.join(F.broadcast(q_terms), "term", "inner")
     n_docs, avgdl, block_size = index.n_docs, index.avgdl, index.block_size
-    k1, b, codec = index.k1, index.b, index.codec
+    k1, b = index.k1, index.b
+    counters = ("terms", "blocks_total", "blocks_decoded")
 
-    def _stats_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["query_id"].iloc[0]
-        terms = _pdf_to_terms(pdf, codec)
+    def _stats(entries: list[dict]) -> dict:
         stats: dict = {}
         maxscore_topk(
-            terms, n_docs, avgdl, kk, scoring=scoring, k1=k1, b=b,
+            entries, n_docs, avgdl, kk, scoring=scoring, k1=k1, b=b,
             block_size=block_size, stats=stats,
         )
-        return pd.DataFrame(
-            {
-                "query_id": [qid],
-                "terms": [int(stats["terms"])],
-                "blocks_total": [int(stats["blocks_total"])],
-                "blocks_decoded": [int(stats["blocks_decoded"])],
-            }
-        )
+        return {c: [int(stats[c])] for c in counters}
 
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", joined.schema["query_id"].dataType),
-            T.StructField("terms", T.LongType()),
-            T.StructField("blocks_total", T.LongType()),
-            T.StructField("blocks_decoded", T.LongType()),
-        ]
+    return _per_query(
+        joined, index.codec, _stats, [T.StructField(c, T.LongType()) for c in counters]
     )
-    return joined.groupBy("query_id").applyInPandas(_stats_group, schema=schema)

@@ -117,6 +117,28 @@ def test_build_index_postings_are_the_compressed_build_decoded(spark, web_dir):
         assert banned not in plan, plan
 
 
+def test_wand_scoring_is_one_arrow_group_per_query(spark, web_dir, tmp_path):
+    """Both Spark scoring paths (search_wand over a built index and
+    QueryServer.search over a saved one) hand each query's posting rows to
+    the kernel as one Arrow group, never through pandas."""
+    from fulltextsearch_spark.operators.compressed_index import save_compressed_index
+    from fulltextsearch_spark.operators.serving import QueryServer
+
+    docs = assign_file_order_doc_ids(spark, web_dir, columns=["text"])
+    cfg = EngineConfig(k=5)
+    cidx = build_compressed_index(spark, docs, cfg)
+    save_compressed_index(cidx, str(tmp_path / "idx"))
+    queries = [("q", "cat salmon"), ("r", "fish river")]
+    qdf = spark.createDataFrame(queries, ["query_id", "content"])
+    for df in (
+        search_wand(cidx, qdf, cfg),
+        QueryServer.load(spark, str(tmp_path / "idx")).search(queries, cfg),
+    ):
+        plan = _plan(df)
+        assert "FlatMapGroupsInArrow" in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+
+
 def test_vsm_query_plan_reuses_norms_and_joins_before_explode(spark, web_dir):
     """With build-time norms, the VSM query plan must not re-aggregate norms
     (their build-time explode may not reappear) and must unnest posting

@@ -393,6 +393,7 @@ def test_search_local_reads_one_row_group_per_term(spark, index_root):
         "row_groups_read": 1,
         "row_groups_pruned": len(groups) - 1,
         "bytes_read": want_bytes,
+        "row_cache_oversize": 0,
     }
     server.search_local([("k", known)], CFG)  # warm: row cache, no fetch
     assert server.counters["row_groups_read"] == 1
@@ -409,7 +410,26 @@ def test_search_local_reads_one_row_group_per_term(spark, index_root):
         "row_groups_read": 0,
         "row_groups_pruned": len(groups),
         "bytes_read": 0,
+        "row_cache_oversize": 0,
     }
+
+
+def test_search_local_counts_terms_too_big_for_row_cache(spark, index_root):
+    """A fetched term whose entries exceed the whole row-cache budget is
+    never cached; each such fetch is counted, and the next query of the
+    term reads its row group again."""
+    from fulltextsearch_spark.functions.tokenizer import tokenize
+
+    pf, rg, _, _ = _row_groups(index_root)[1]
+    terms = pf.read_row_group(rg, columns=["term"]).column("term").to_pylist()
+    known = next(t for t in terms if tokenize(t, CFG.stem) == [t])
+    server = QueryServer.load(spark, index_root)
+    server.row_cache_mb = 0
+    first = server.search_local([("k", known)], CFG)
+    assert first and server.search_local([("k", known)], CFG) == first
+    assert not server._row_cache
+    assert server.counters["row_cache_oversize"] == 2
+    assert server.counters["row_groups_read"] == 2
 
 
 @pytest.mark.parametrize("codec", [None, "pfor"])

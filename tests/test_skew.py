@@ -85,10 +85,13 @@ def test_sharded_head_term_rows_bounded(spark):
     assert got == list(range(N))
 
 
-def test_sharded_head_term_query_rank_identical(spark):
+def test_sharded_head_term_query_rank_identical(spark, tmp_path):
     """WAND over a sharded index and the exhaustive path over BOTH the
-    unsharded logical index and the decompressed sharded index agree."""
+    unsharded logical index and the decompressed sharded index agree, and
+    so do both QueryServer paths over the saved sharded index."""
+    from fulltextsearch_spark.operators.compressed_index import save_compressed_index
     from fulltextsearch_spark.operators.index_build import IndexTables
+    from fulltextsearch_spark.operators.serving import QueryServer
 
     docs = _skew_corpus(spark)
     cfg = EngineConfig(k=10, stem=False, block_size=4, shard_postings=256)
@@ -115,6 +118,15 @@ def test_sharded_head_term_query_rank_identical(spark):
     ex_sharded = key(search(sharded_logical, qdf, cfg).collect())
     assert wand == ex == ex_sharded
     assert len(wand) == 20
+    # served from disk: a head term's shard rows become several kernel
+    # entries whose df is the term total
+    root = str(tmp_path / "sharded")
+    save_compressed_index(cidx, root)
+    server = QueryServer.load(spark, root)
+    queries = [tuple(r) for r in qdf.collect()]
+    cols = ("query_id", "rank", "doc_id", "score")
+    assert key(dict(zip(cols, r)) for r in server.search_local(queries, cfg)) == wand
+    assert key(server.search(queries, cfg).collect()) == wand
 
 
 def test_sharded_trigram_key_rows_bounded(spark):

@@ -215,8 +215,8 @@ def test_maxscore_empty_terms():
 
 def test_query_id_type_inherited(spark, cindex):
     """The top-k output's query_id column follows the caller's type — a
-    numeric id must survive the Arrow pandas-group serializer, not crash
-    against a hardcoded string schema."""
+    numeric id must survive the Arrow group serializer, not crash against
+    a hardcoded string schema — also when Spark sends large Arrow types."""
     qs = spark.createDataFrame([(7, "cat salmon")], "query_id long, content string")
     res = search_wand(cindex, qs, CFG)
     assert res.schema["query_id"].dataType.simpleString() == "bigint"
@@ -225,6 +225,12 @@ def test_query_id_type_inherited(spark, cindex):
     qstr = spark.createDataFrame([("q7", "cat salmon")], "query_id string, content string")
     srows = search_wand(cindex, qstr, CFG).collect()
     assert [(r.rank, r.doc_id) for r in srows] == [(r.rank, r.doc_id) for r in rows]
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    spark.conf.set(key, "true")
+    try:
+        assert search_wand(cindex, qstr, CFG).collect() == srows
+    finally:
+        spark.conf.unset(key)
 
 
 def test_pfor_saved_index_queries_identically(spark, cindex, tmp_path):
@@ -316,12 +322,12 @@ def test_wand_pruning_stats_tfidf_scoring(spark, cindex):
     match a driver-side kernel run with scoring="tfidf" over the same
     joined rows (a silent bm25 fallback would diverge whenever the tf/dl
     block bounds skip differently), and the invariants hold."""
-    import pandas as pd
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     from fulltextsearch_spark.operators.query import query_terms
     from fulltextsearch_spark.operators.wand import (
-        _pdf_to_terms,
+        kernel_entries,
         wand_pruning_stats,
     )
 
@@ -333,14 +339,15 @@ def test_wand_pruning_stats_tfidf_scoring(spark, cindex):
     assert rows
     joined = cindex.postings.join(
         F.broadcast(query_terms(wq, stem=CFG.stem)), "term", "inner"
-    ).collect()
-    by_q: dict = {}
-    for r in joined:
-        by_q.setdefault(r["query_id"], []).append(r.asDict())
-    for qid, recs in by_q.items():
+    ).toArrow()
+    for qid in set(joined.column("query_id").to_pylist()):
+        grp = joined.filter(pc.equal(joined.column("query_id"), qid))
+        entries = kernel_entries(grp, cindex.codec)
+        for ent, qtf in zip(entries, grp.column("qtf").to_pylist()):
+            ent["qtf"] = qtf
         st: dict = {}
         maxscore_topk(
-            _pdf_to_terms(pd.DataFrame(recs), cindex.codec),
+            entries,
             cindex.n_docs,
             cindex.avgdl,
             CFG.k,
@@ -356,6 +363,63 @@ def test_wand_pruning_stats_tfidf_scoring(spark, cindex):
             st["blocks_total"],
             st["blocks_decoded"],
         )
+
+
+def test_kernel_entries_are_row_views_with_term_total_df():
+    """The Arrow -> kernel-entry builder over a two-chunk table whose first
+    chunk is sliced (offset 1) and whose sharded term 'a' has three rows
+    spread apart: every entry's enc bytes and block arrays equal its row's
+    values, with the kernel's dtypes, and df is the term total."""
+    import pyarrow as pa
+
+    from fulltextsearch_spark.operators.wand import kernel_entries
+
+    enc = ("doc_ids_enc", "tfs_enc", "dls_enc")
+    meta = {
+        "block_first_doc": np.int64,
+        "block_off_doc": np.int64,
+        "block_off_tf": np.int64,
+        "block_off_dl": np.int64,
+        "block_max_tfpart": np.float64,
+        "block_max_tfdl": np.float64,
+    }
+    schema = pa.schema(
+        [("term", pa.string()), ("count", pa.int64())]
+        + [(c, pa.binary()) for c in enc]
+        + [
+            (c, pa.list_(pa.int64() if dt is np.int64 else pa.float64()))
+            for c, dt in meta.items()
+        ]
+    )
+    rng = np.random.default_rng(5)
+    rows = []
+    for t in ["a", "b", "a", "c", "b", "a", "d"]:
+        nb = int(rng.integers(1, 5))
+        row = {"term": t, "count": int(rng.integers(1, 500))}
+        for c in enc:
+            row[c] = rng.integers(0, 256, int(rng.integers(1, 40)), dtype=np.uint8).tobytes()
+        for c, dt in meta.items():
+            row[c] = (
+                rng.integers(0, 10**9, nb).tolist() if dt is np.int64 else rng.random(nb).tolist()
+            )
+        rows.append(row)
+    head = pa.Table.from_pylist([rows[-1], *rows[:3]], schema=schema).slice(1)
+    tbl = pa.concat_tables([head, pa.Table.from_pylist(rows[3:], schema=schema)])
+    assert tbl.column("dls_enc").num_chunks == 2
+    assert tbl.column("dls_enc").chunk(0).offset == 1
+
+    totals: dict = {}
+    for r in rows:
+        totals[r["term"]] = totals.get(r["term"], 0) + r["count"]
+    entries = kernel_entries(tbl, "pfor")
+    assert len(entries) == len(rows)
+    for row, ent in zip(rows, entries):
+        assert "qtf" not in ent
+        assert (ent["codec"], ent["count"], ent["df"]) == ("pfor", row["count"], totals[row["term"]])
+        for c in enc:
+            assert ent[c].dtype == np.uint8 and ent[c].tobytes() == row[c]
+        for c, dt in meta.items():
+            assert ent[c].dtype == dt and ent[c].tolist() == row[c]
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3, 4, 5, 6, 7])
