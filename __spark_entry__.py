@@ -560,42 +560,41 @@ def q_bm25_topk_pfor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bm25_topk_ef(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Elias-Fano codec under the hard gate: build (varint) ->
-    save_compressed_index(codec="ef") re-encodes every skip-aligned block
-    as quasi-succinct EF (Vigna WSDM'13 — per-block running sums as
-    low-bit array + unary high-bit bitmap; ~2 + log2(u/n) bits/posting,
-    ~0.5x varint on dense head terms) -> load -> block-max WAND decoding
-    EF streams. Lossless and block-aligned, so block-max metadata carries
-    over and the result shares bm25_topk's oracle."""
+def q_bm25_topk_pfor_local(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PForDelta index on the in-process serving path under the hard gate:
+    build (varint) -> save_compressed_index(codec="pfor") -> QueryServer.load
+    -> search_local (pyarrow row-group reads + the numpy kernel decoding
+    pfor blocks, no Spark job), run cold and then again warm (the second
+    run serves from the row and decoded-postings caches). The two runs
+    must return identical rows. Rank-identical to the exhaustive path, so
+    it shares bm25_topk's oracle."""
     import hashlib as _hl
     import shutil as _sh
 
     from fulltextsearch_spark.config import EngineConfig
     from fulltextsearch_spark.operators.compressed_index import (
         build_compressed_index,
-        load_compressed_index,
         save_compressed_index,
     )
-    from fulltextsearch_spark.operators.wand import search_wand
+    from fulltextsearch_spark.operators.serving import QueryServer
 
     cfg = EngineConfig(k1=K1, b=B, k=TOPK, stem=False)
-    root = f"/tmp/fts_entry_ef_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}"
+    root = f"/tmp/fts_entry_pfor_local_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}"
     _sh.rmtree(root, ignore_errors=True)
     cidx = build_compressed_index(spark, _docs(spark, sf_dir), cfg)
-    save_compressed_index(cidx, root, codec="ef")
-    loaded = load_compressed_index(spark, root)
-    queries = spark.createDataFrame(
-        [(qid, " ".join(t for q, t in QUERY_TOKENS if q == qid)) for qid in
-         sorted({q for q, _ in QUERY_TOKENS})],
-        ["query_id", "content"],
-    )
-    return search_wand(loaded, queries, cfg).select(
-        "query_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.round("score", 4).alias("score"),
-    )
+    save_compressed_index(cidx, root, codec="pfor")
+    server = QueryServer.load(spark, root)
+    queries = [
+        (qid, " ".join(t for q, t in QUERY_TOKENS if q == qid))
+        for qid in sorted({q for q, _ in QUERY_TOKENS})
+    ]
+    cold = server.search_local(queries, cfg)
+    warm = server.search_local(queries, cfg)
+    if warm != cold:
+        raise AssertionError("search_local: warm rows differ from cold rows")
+    return spark.createDataFrame(
+        cold, "query_id STRING, rank LONG, doc_id LONG, score DOUBLE"
+    ).select("query_id", "rank", "doc_id", F.round("score", 4).alias("score"))
 
 
 def q_bm25_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5283,7 +5282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk_wand": q_bm25_topk_wand,
         "bm25_topk_serve": q_bm25_topk_serve,
         "bm25_topk_pfor": q_bm25_topk_pfor,
-        "bm25_topk_ef": q_bm25_topk_ef,
+        "bm25_topk_pfor_local": q_bm25_topk_pfor_local,
         "bm25_topk_incremental": q_bm25_topk_incremental,
         "bm25_topk_resumable": q_bm25_topk_resumable,
         "bm25_topk_merged": q_bm25_topk_merged,
@@ -8045,7 +8044,7 @@ FROM unioned WHERE rank <= {TOPK}
         "bm25_topk_wand": _scored_sql(bm25),
         "bm25_topk_serve": _scored_sql(bm25),
         "bm25_topk_pfor": _scored_sql(bm25),
-        "bm25_topk_ef": _scored_sql(bm25),
+        "bm25_topk_pfor_local": _scored_sql(bm25),
         "federated_topk": _scored_sql(bm25),
         "warc_parse": _WARC_SQL,
         "bm25_topk_upserted": _upserted_sql(),

@@ -42,13 +42,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.operators.compression import (
+    check_codec,
+    decode_stream,
+    encode_stream,
     varint_decode,
     varint_encode,
     varint_nbytes,
@@ -99,12 +101,7 @@ class CompressedIndex:
     block_size: int
     k1: float
     b: float
-    codec: str = "varint"  # stream codec of the enc columns ("varint"/"pfor"/"ef")
-
-
-def _offsets_from_nbytes(nbytes: np.ndarray, block_starts: np.ndarray) -> np.ndarray:
-    cum = np.concatenate(([0], np.cumsum(nbytes)))
-    return cum[block_starts]
+    codec: str = "varint"  # stream codec of the enc columns (one of compression.CODECS)
 
 
 def _encode_one(
@@ -132,18 +129,18 @@ def _encode_one(
     # in postings; guard anyway for tf/dl.
     tfdl = np.divide(tf_f, dl_f, out=np.zeros_like(tf_f), where=dl_f > 0)
 
-    nb_d = varint_nbytes(deltas)
-    nb_t = varint_nbytes(tfs)
-    nb_l = varint_nbytes(dls)
+    enc_d, off_d = encode_stream(deltas, block_size, "varint")
+    enc_t, off_t = encode_stream(tfs, block_size, "varint")
+    enc_l, off_l = encode_stream(dls, block_size, "varint")
     return {
         "count": int(n),
-        "doc_ids_enc": varint_encode(deltas, nb_d),
-        "tfs_enc": varint_encode(tfs, nb_t),
-        "dls_enc": varint_encode(dls, nb_l),
+        "doc_ids_enc": enc_d,
+        "tfs_enc": enc_t,
+        "dls_enc": enc_l,
         "block_first_doc": doc_ids[block_starts].tolist(),
-        "block_off_doc": _offsets_from_nbytes(nb_d, block_starts).tolist(),
-        "block_off_tf": _offsets_from_nbytes(nb_t, block_starts).tolist(),
-        "block_off_dl": _offsets_from_nbytes(nb_l, block_starts).tolist(),
+        "block_off_doc": off_d.tolist(),
+        "block_off_tf": off_t.tolist(),
+        "block_off_dl": off_l.tolist(),
         "block_max_tf": np.maximum.reduceat(tfs, block_starts).tolist(),
         "block_max_tfpart": np.maximum.reduceat(tfpart, block_starts).tolist(),
         "block_max_tfdl": np.maximum.reduceat(tfdl, block_starts).tolist(),
@@ -880,49 +877,55 @@ def compressed_rows_as_partials(postings: DataFrame, block_size: int) -> DataFra
     )
 
 
+_STREAM_COLS = (
+    ("doc_ids_enc", "block_off_doc"),
+    ("tfs_enc", "block_off_tf"),
+    ("dls_enc", "block_off_dl"),
+)
+
+
+def _batch_streams(rb, counts: np.ndarray, codec: str) -> list[np.ndarray]:
+    """A batch's doc-delta, tf and dl streams, each decoded into one int64
+    array holding its rows back to back. Varint cells are adjacent and
+    self-delimiting, so a column decodes in one ``varint_decode`` call;
+    pfor cells decode per row with their block offsets."""
+    if codec == "varint":
+        n = int(counts.sum())
+        return [
+            varint_decode(_binary_parts(rb.column(c))[1], n).astype(np.int64)
+            for c, _ in _STREAM_COLS
+        ]
+    out = []
+    for c, oc in _STREAM_COLS:
+        cell, buf = _binary_parts(rb.column(c))
+        boff, ball = _list_parts(rb.column(oc))
+        out.append(
+            np.concatenate(
+                [
+                    decode_stream(
+                        buf[cell[i] : cell[i + 1]],
+                        int(counts[i]),
+                        codec,
+                        ball[boff[i] : boff[i + 1]],
+                    )
+                    for i in range(rb.num_rows)
+                ]
+            )
+        )
+    return out
+
+
 def decompress_postings(
     compressed: DataFrame, block_size: int, codec: str = "varint"
 ) -> DataFrame:
     """Compressed rows -> (term, df, postings ARRAY<STRUCT<doc_id, tf, dl>>),
     one output row per input row (a sharded term keeps its rows).
 
-    Arrow in, Arrow out (``mapInArrow``), no per-posting Python object:
-    varint streams of a whole batch are read as one buffer view each and
-    decoded with one ``varint_decode`` call (varints are self-delimiting,
-    so the concatenated cells decode to the concatenated values); pfor/ef
-    cells decode per row with their block offsets. One segmented cumsum
-    then undoes the block-restarting doc-id deltas of every row at once.
+    Arrow in, Arrow out (``mapInArrow``), no per-posting Python object: the
+    streams of a whole batch decode as one array each
+    (:func:`_batch_streams`), and one segmented cumsum then undoes the
+    block-restarting doc-id deltas of every row at once.
     """
-    enc_cols = ["doc_ids_enc", "tfs_enc", "dls_enc"]
-    off_cols = ["block_off_doc", "block_off_tf", "block_off_dl"]
-
-    def _streams(rb, counts):
-        if codec == "varint":
-            n = int(counts.sum())
-            return [
-                varint_decode(_binary_parts(rb.column(c))[1], n).astype(np.int64)
-                for c in enc_cols
-            ]
-        from fulltextsearch_spark.operators.wand import _decode_all  # noqa: PLC0415
-
-        out = []
-        for c, oc in zip(enc_cols, off_cols):
-            cell, buf = _binary_parts(rb.column(c))
-            boff, ball = _list_parts(rb.column(oc))
-            out.append(
-                np.concatenate(
-                    [
-                        _decode_all(
-                            buf[cell[i] : cell[i + 1]],
-                            int(counts[i]),
-                            codec,
-                            ball[boff[i] : boff[i + 1]],
-                        )
-                        for i in range(rb.num_rows)
-                    ]
-                )
-            )
-        return out
 
     def _decode(batches):
         import pyarrow as pa  # noqa: PLC0415
@@ -932,7 +935,7 @@ def decompress_postings(
                 continue
             counts = rb.column("count").to_numpy(zero_copy_only=False).astype(np.int64)
             row_off = np.concatenate(([0], np.cumsum(counts)))
-            deltas, tfs, dls = _streams(rb, counts)
+            deltas, tfs, dls = _batch_streams(rb, counts, codec)
             # a block starts every block_size postings of each row; its
             # delta is absolute, so doc_id = cumsum - cumsum before the block
             within = np.arange(row_off[-1]) - np.repeat(row_off[:-1], counts)
@@ -954,8 +957,10 @@ def decompress_postings(
                 names=["term", "df", "postings"],
             )
 
-    cols = ["term", "df", "count", *enc_cols] + (off_cols if codec != "varint" else [])
-    return compressed.select(*cols).mapInArrow(
+    cols = [e for e, _ in _STREAM_COLS] + (
+        [o for _, o in _STREAM_COLS] if codec != "varint" else []
+    )
+    return compressed.select("term", "df", "count", *cols).mapInArrow(
         _decode,
         "term string, df long, postings array<struct<doc_id: long, tf: long, dl: long>>",
     )
@@ -1090,61 +1095,38 @@ def _index_from_partials(raw_partials: DataFrame, cfg: EngineConfig) -> Compress
     )
 
 
-def _reencode_postings(postings: DataFrame, block_size: int, codec: str) -> DataFrame:
-    """Re-encode varint posting rows in place — ``codec`` picks PForDelta
-    ("pfor", NewPFD bit-packing) or Elias-Fano ("ef", quasi-succinct).
+def _reencode_streams(postings: DataFrame, block_size: int, src: str, dst: str) -> DataFrame:
+    """Re-encode every row's three streams from codec ``src`` to ``dst``.
 
-    Blocks are aligned to the same ``block_size``, so ``block_first_doc``
-    and the block-max metadata carry over unchanged; only the three enc
-    streams and their per-block byte offsets are replaced. Save-time only —
-    the distributed build keeps varint because its self-delimiting partial
-    streams byte-concat across tasks (see compression.py).
+    Arrow in, Arrow out (``mapInArrow``), like the merge: a batch's
+    streams decode with :func:`_batch_streams`, each row's slice encodes
+    with ``dst``, and every other column passes through. Blocks stay
+    aligned to ``block_size``, so ``block_first_doc``, the block-max
+    metadata and the list offsets of the block columns carry over; only
+    the streams and their byte offsets are replaced.
     """
-    from pyspark.sql import types as T  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
 
-    from fulltextsearch_spark.operators.compression import (  # noqa: PLC0415
-        ef_encode,
-        pfor_encode,
-        varint_decode,
-    )
+    def _re(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            counts = rb.column("count").to_numpy(zero_copy_only=False).astype(np.int64)
+            row_off = np.concatenate(([0], np.cumsum(counts)))
+            cols = dict(zip(rb.schema.names, rb.columns))
+            for (enc_col, off_col), vals in zip(_STREAM_COLS, _batch_streams(rb, counts, src)):
+                pairs = [
+                    encode_stream(vals[a:b], block_size, dst)
+                    for a, b in zip(row_off[:-1], row_off[1:])
+                ]
+                cols[enc_col] = pa.array([p[0] for p in pairs], pa.binary())
+                cols[off_col] = pa.ListArray.from_arrays(
+                    pa.array(_list_parts(rb.column(off_col))[0], pa.int32()),
+                    pa.array(np.concatenate([p[1] for p in pairs]), pa.int64()),
+                )
+            yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
-    enc_fn = pfor_encode if codec == "pfor" else ef_encode
-
-    out_type = T.StructType(
-        [
-            T.StructField("doc_ids_enc", T.BinaryType()),
-            T.StructField("tfs_enc", T.BinaryType()),
-            T.StructField("dls_enc", T.BinaryType()),
-            T.StructField("block_off_doc", T.ArrayType(T.LongType())),
-            T.StructField("block_off_tf", T.ArrayType(T.LongType())),
-            T.StructField("block_off_dl", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    @pandas_udf(out_type)
-    def _re(count: pd.Series, ed: pd.Series, et: pd.Series, el: pd.Series) -> pd.DataFrame:
-        rows = []
-        for n, d, t, l in zip(count, ed, et, el):
-            n = int(n)
-            sd, od = enc_fn(varint_decode(bytes(d), n), block_size)
-            st, ot = enc_fn(varint_decode(bytes(t), n), block_size)
-            sl, ol = enc_fn(varint_decode(bytes(l), n), block_size)
-            rows.append((sd, st, sl, od.tolist(), ot.tolist(), ol.tolist()))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "doc_ids_enc", "tfs_enc", "dls_enc",
-                "block_off_doc", "block_off_tf", "block_off_dl",
-            ],
-        )
-
-    re_col = _re(F.col("count"), F.col("doc_ids_enc"), F.col("tfs_enc"), F.col("dls_enc"))
-    keep = [c for c in postings.columns if c not in out_type.fieldNames()]
-    return postings.withColumn("_re", re_col).select(
-        *keep, "_re.doc_ids_enc", "_re.tfs_enc", "_re.dls_enc",
-        "_re.block_off_doc", "_re.block_off_tf", "_re.block_off_dl",
-    )
+    return postings.mapInArrow(_re, schema=postings.schema)
 
 
 def save_compressed_index(index: CompressedIndex, root: str, codec: str | None = None) -> None:
@@ -1156,11 +1138,13 @@ def save_compressed_index(index: CompressedIndex, root: str, codec: str | None =
     search_local``'s footer pruning and the Spark scan's pushed ``term IN``
     filter read only the row group that can hold each query term.
 
-    ``codec`` re-encodes the posting streams at save time (``"pfor"`` for
-    bit-packing, ~0.85x varint bytes measured; ``"ef"`` for Elias-Fano,
-    whose cost tracks posting density — ~0.5x varint on dense head
-    terms); the
-    loaded index queries identically — the kernel dispatches per codec.
+    ``codec`` (one of ``compression.CODECS``) re-encodes the posting
+    streams at save time, from the index's codec to ``"pfor"``
+    (bit-packing) or back to ``"varint"``; the loaded index queries
+    identically — the kernel dispatches per codec. ``scripts/codec_probe.py``
+    measured pfor at 0.63x varint's stream bytes on a 50k-doc flat web
+    corpus but 1.01x on perfbench's bursty 20k-doc corpus, with
+    ``search_local`` 2.1-2.3x slower per query when nothing is cached.
 
     Also appends an index-footprint line (bytes on disk per table) to
     ``{root}/_lineage.jsonl`` — the reference's footprint metric
@@ -1171,12 +1155,10 @@ def save_compressed_index(index: CompressedIndex, root: str, codec: str | None =
         write_clustered,
     )
 
-    out_codec = codec or index.codec
+    out_codec = check_codec(codec or index.codec)
     postings = index.postings
     if out_codec != index.codec:
-        if index.codec != "varint" or out_codec not in ("pfor", "ef"):
-            raise ValueError(f"unsupported re-encode {index.codec!r} -> {out_codec!r}")
-        postings = _reencode_postings(postings, index.block_size, out_codec)
+        postings = _reencode_streams(postings, index.block_size, index.codec, out_codec)
     write_clustered(
         postings, "term", f"{root}/postings", F.get("block_first_doc", 0)
     )
@@ -1200,7 +1182,7 @@ def load_compressed_index(spark: SparkSession, root: str) -> CompressedIndex:
     stats_df = spark.read.parquet(f"{root}/corpus_stats")
     stats = stats_df.collect()[0]
     # indexes saved before the codec column existed are varint by definition
-    codec = str(stats["codec"]) if "codec" in stats_df.columns else "varint"
+    codec = check_codec(str(stats["codec"]) if "codec" in stats_df.columns else "varint")
     return CompressedIndex(
         postings=spark.read.parquet(f"{root}/postings"),
         doc_stats=spark.read.parquet(f"{root}/doc_stats"),

@@ -1,4 +1,4 @@
-"""Posting-list compression: delta + varint, block skip/max metadata.
+"""Posting-stream codecs: delta + varint (LEB128) and PForDelta (NewPFD).
 
 New work relative to the reference (its index holds raw
 ``vector<(uint32,uint32)>`` pairs and dumps them verbatim,
@@ -6,6 +6,13 @@ New work relative to the reference (its index holds raw
 the north_star for 10^12-doc scale: sorted docIDs -> deltas -> LEB128
 varints, fixed-size blocks with (first_doc_id, byte offsets, max tf,
 max BM25 tf-part) metadata enabling skip + block-max WAND.
+
+Every index row stores three streams (doc-id deltas restarting absolute at
+each block, tfs, dls) in one of :data:`CODECS`. This module is the only
+place that knows how a codec lays a stream out: :func:`encode_stream`,
+:func:`decode_stream` (whole stream) and :func:`decode_stream_block` (one
+skip block) are what the build, the save-time re-encode and the query
+kernel call.
 
 Encode and decode are numpy-vectorized (no per-value Python in the hot
 path): encode computes per-value byte lengths and scatters shifted 7-bit
@@ -15,22 +22,22 @@ group with ``np.bitwise_or.reduceat``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
 __all__ = [
+    "CODECS",
+    "check_codec",
+    "decode_stream",
+    "decode_stream_block",
+    "encode_stream",
     "varint_encode",
     "varint_decode",
     "pfor_encode",
     "pfor_decode",
-    "ef_encode",
-    "ef_decode",
-    "encode_postings",
-    "decode_postings",
-    "block_metadata",
-    "EncodedPostings",
 ]
+
+# "varint" is the build's wire format; "pfor" is a save-time re-encode
+CODECS = ("varint", "pfor")
 
 _MAX_BYTES = 10  # 64-bit values need at most 10 LEB128 bytes
 
@@ -136,22 +143,22 @@ def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
 #
 # varint stays the BUILD default: partial-combine merge byte-concats varint
 # streams from different tasks without re-framing (self-delimiting values);
-# PFor blocks would need re-blocking at merge boundaries. The codec seam is
-# encode_postings/decode_postings/decode_block(codec=...), measured
-# head-to-head in tests/test_compression.py.
+# PFor blocks would need re-blocking at merge boundaries. Callers reach
+# both codecs through encode_stream/decode_stream/decode_stream_block below.
 # --------------------------------------------------------------------------
 
 _PFOR_HDR = 5  # 1 byte width, 2 bytes n, 2 bytes n_exc
 
 
+_POW2 = np.uint64(1) << np.arange(64, dtype=np.uint64)
+
+
 def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Bit length per value (0 for 0), shift-loop — safe past 2^53."""
-    bl = np.zeros(v.shape, dtype=np.int64)
-    shifted = v.astype(np.uint64, copy=False)
-    while np.any(shifted > 0):
-        bl[shifted > 0] += 1
-        shifted = shifted >> np.uint64(1)
-    return bl
+    """Bit length per value (0 for 0): one searchsorted against the 64
+    powers of two, exact on uint64 and one C pass whatever the width."""
+    return np.searchsorted(_POW2, v.astype(np.uint64, copy=False), side="right").astype(
+        np.int64
+    )
 
 
 def _pack_low_bits(vals: np.ndarray, w: int) -> bytes:
@@ -232,135 +239,12 @@ def _pfor_decode_block(arr: np.ndarray, off: int) -> tuple[np.ndarray, int]:
     return vals, p
 
 
-
-
-# ---------------------------------------------------------------------------
-# Elias-Fano — the quasi-succinct monotone-sequence codec (Elias 1974;
-# Vigna, "Quasi-succinct indices", WSDM 2013) that modern engines (Lucene's
-# "indexed DISI", PISA, ClueWeb tooling) use for posting lists. Per value it
-# spends ~2 + ceil(log2(u/n)) bits — within a fraction of a bit of the
-# information-theoretic minimum for an n-subset of a u-universe — and, unlike
-# varint/PFor, its cost tracks DENSITY: the Zipf-head terms whose postings
-# cover most of the corpus compress toward 2 bits/doc, exactly the lists
-# that dominate a web-scale index's bytes.
-#
-# Stream layout mirrors the PFor section so the codec seam stays uniform:
-# independently decodable per-block units, byte offsets per block, and the
-# SAME input representation as the other codecs (block-restart deltas for
-# the doc stream, raw values for tf/dl). Internally each block stores the
-# block's running sum — for the doc stream that running sum IS the absolute
-# doc_id sequence (the textbook EF use-case); for tf/dl it is the in-block
-# prefix sum, strictly increasing since postings carry tf, dl >= 1. Decode
-# returns the input representation via a per-block diff, so every call site
-# treats "ef" exactly like "pfor".
-#
-# Block wire format (self-delimiting):
-#   [1B l][2B n LE][varint v0][varint u][n*l low bits][(u>>l)+n high bits]
-# with x_i = cumsum_i - v0, u = x_{n-1}, l = max(0, floor(log2(u/n))), low
-# bits little-endian packed (shared _pack_low_bits), high bits the unary
-# bitmap with bit (x_i >> l) + i set.
-# ---------------------------------------------------------------------------
-
-_EF_HDR = 3  # l byte + 2-byte count; v0/u varints follow
-
-
-def _ef_encode_block(vals: np.ndarray) -> bytes:
-    """EF-encode one block given in the stream's input representation
-    (first value absolute, i.e. cumsum starts at vals[0])."""
-    n = vals.size
-    if n > 0xFFFF:
-        raise ValueError("EF block larger than 65535 values")
-    cs = np.cumsum(vals.astype(np.uint64, copy=False), dtype=np.uint64)
-    v0 = int(cs[0])
-    x = cs - np.uint64(v0)
-    u = int(x[-1])
-    l = max(0, (u // n).bit_length() - 1) if u > 0 else 0
-    low = _pack_low_bits(x & np.uint64((1 << l) - 1), l)
-    nbits = (u >> l) + n
-    bitmap = np.zeros(nbits, dtype=np.uint8)
-    pos = (x >> np.uint64(l)).astype(np.int64) + np.arange(n, dtype=np.int64)
-    bitmap[pos] = 1
-    high = np.packbits(bitmap, bitorder="little").tobytes()
-    return (
-        bytes([l])
-        + int(n).to_bytes(2, "little")
-        + varint_encode(np.array([v0], dtype=np.uint64))
-        + varint_encode(np.array([u], dtype=np.uint64))
-        + low
-        + high
-    )
-
-
-def _ef_decode_block(arr: np.ndarray, off: int) -> tuple[np.ndarray, int]:
-    """Decode one block -> (values in input representation, end offset)."""
-    l = int(arr[off])
-    n = int.from_bytes(arr[off + 1 : off + 3].tobytes(), "little")
-    p = off + _EF_HDR
-    e = _varint_section_end(arr, p, 1)
-    v0 = int(varint_decode(arr[p:e].tobytes(), 1)[0])
-    p = e
-    e = _varint_section_end(arr, p, 1)
-    u = int(varint_decode(arr[p:e].tobytes(), 1)[0])
-    p = e
-    low_len = (n * l + 7) // 8
-    lows = _unpack_low_bits(arr[p : p + low_len].tobytes(), n, l)
-    p += low_len
-    nbits = (u >> l) + n
-    nb = (nbits + 7) // 8
-    bits = np.unpackbits(arr[p : p + nb], count=nbits, bitorder="little")
-    pos = np.flatnonzero(bits)
-    high = (pos - np.arange(n, dtype=np.int64)).astype(np.uint64)
-    cs = np.uint64(v0) + ((high << np.uint64(l)) | lows)
-    vals = np.diff(cs, prepend=np.uint64(0))
-    return vals, p + nb
-
-
-def ef_encode(values: np.ndarray, block_size: int = 128) -> tuple[bytes, np.ndarray]:
-    """Encode a stream in the shared codec representation (per-block cumsum
-    internally). Returns (bytes, int64 byte offset per block)."""
-    v = np.asarray(values, dtype=np.uint64)
-    parts: list[bytes] = []
-    offs: list[int] = []
-    pos = 0
-    for s in range(0, v.size, block_size):
-        blk = _ef_encode_block(v[s : s + block_size])
-        offs.append(pos)
-        parts.append(blk)
-        pos += len(blk)
-    return b"".join(parts), np.asarray(offs, dtype=np.int64)
-
-
-def ef_decode(
-    buf: bytes, count: int, offsets: np.ndarray | None = None
-) -> np.ndarray:
-    """Decode a whole stream back to the input representation. Blocks are
-    self-delimiting, so ``offsets`` is optional (sequential parse)."""
-    arr = np.frombuffer(buf, dtype=np.uint8)
-    out: list[np.ndarray] = []
-    got = 0
-    pos = 0
-    i = 0
-    while got < count:
-        if offsets is not None and i < len(offsets):
-            pos = int(offsets[i])
-        vals, pos = _ef_decode_block(arr, pos)
-        out.append(vals)
-        got += vals.size
-        i += 1
-    if not out:
-        return np.empty(0, dtype=np.uint64)
-    res = np.concatenate(out)
-    if res.size != count:
-        raise ValueError(f"EF stream decoded {res.size} values, expected {count}")
-    return res
-
-
 def pfor_encode(values: np.ndarray, block_size: int = 128) -> tuple[bytes, np.ndarray]:
     """PForDelta-encode; returns (stream, byte offset of each block).
 
     Blocks are self-contained and aligned to ``block_size`` so the offsets
     double as skip pointers, exactly like the varint path's
-    :func:`_block_byte_offsets`. Full blocks are encoded batched (one
+    (:func:`encode_stream`). Full blocks are encoded batched (one
     bit-pack per distinct width, one varint pass over every exception);
     only the short tail block goes through the scalar path.
     """
@@ -566,177 +450,39 @@ def pfor_decode(
     return out
 
 
-@dataclass
-class EncodedPostings:
-    """One term's compressed postings (sorted by doc_id ascending)."""
-
-    count: int
-    doc_ids_enc: bytes  # delta+varint over sorted doc_ids
-    tfs_enc: bytes  # varint tfs, parallel order
-    dls_enc: bytes  # varint dls, parallel order
-    block_first_doc: np.ndarray  # int64 per block
-    block_off_doc: np.ndarray  # byte offset of each block in doc_ids_enc
-    block_off_tf: np.ndarray
-    block_off_dl: np.ndarray
-    block_max_tf: np.ndarray  # int64 per block
-    block_max_tfpart: np.ndarray  # float64: max tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl))
-    codec: str = "varint"  # "varint" (LEB128, build default), "pfor" (NewPFD), or "ef" (Elias-Fano)
+def check_codec(codec: str) -> str:
+    """``codec`` if this engine can read it, else ``ValueError`` naming it
+    (an unknown codec's streams would otherwise be misread as varint)."""
+    if codec not in CODECS:
+        raise ValueError(f"unknown posting codec {codec!r}; supported: {CODECS}")
+    return codec
 
 
-def _block_byte_offsets(values: np.ndarray, block_size: int) -> np.ndarray:
-    """Byte offset of each block boundary in the varint encoding of values."""
-    v = values.astype(np.uint64, copy=False)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    shifted = v >> np.uint64(7)
-    while np.any(shifted > 0):
-        nbytes[shifted > 0] += 1
-        shifted >>= np.uint64(7)
-    cum = np.concatenate(([0], np.cumsum(nbytes)))
-    return cum[::block_size][: (len(values) + block_size - 1) // block_size].copy()
-
-
-def encode_postings(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    block_size: int = 128,
-    k1: float = 1.2,
-    b: float = 0.75,
-    avgdl: float = 1.0,
-    codec: str = "varint",
-) -> EncodedPostings:
-    """Compress one term's (sorted) postings; deltas restart at each block
-    boundary so blocks decode independently (skip support). ``codec``
-    selects LEB128 varint (default; what the distributed build shuffles)
-    or PForDelta bit-packing (see the NewPFD section above)."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    order_ok = doc_ids[:-1] < doc_ids[1:]
-    if doc_ids.size > 1 and not bool(order_ok.all()):
-        raise ValueError("doc_ids must be strictly ascending")
-    tfs = np.asarray(tfs, dtype=np.int64)
-    dls = np.asarray(dls, dtype=np.int64)
-    n = doc_ids.size
-
-    # block-restarting deltas: first value of each block is stored absolute
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0:] = doc_ids
-    deltas[1:] = doc_ids[1:] - doc_ids[:-1]
-    block_starts = np.arange(0, n, block_size)
-    deltas[block_starts] = doc_ids[block_starts]
-
+def encode_stream(
+    values: np.ndarray, block_size: int, codec: str
+) -> tuple[bytes, np.ndarray]:
+    """One stream in its stored representation -> (bytes, int64 byte offset
+    of each ``block_size`` block)."""
     if codec == "pfor":
-        enc_doc, off_doc = pfor_encode(deltas, block_size)
-        enc_tf, off_tf = pfor_encode(tfs, block_size)
-        enc_dl, off_dl = pfor_encode(dls, block_size)
-    elif codec == "ef":
-        enc_doc, off_doc = ef_encode(deltas, block_size)
-        enc_tf, off_tf = ef_encode(tfs, block_size)
-        enc_dl, off_dl = ef_encode(dls, block_size)
-    elif codec == "varint":
-        enc_doc = varint_encode(deltas)
-        enc_tf = varint_encode(tfs)
-        enc_dl = varint_encode(dls)
-        off_doc = _block_byte_offsets(deltas, block_size)
-        off_tf = _block_byte_offsets(tfs, block_size)
-        off_dl = _block_byte_offsets(dls, block_size)
-    else:
-        raise ValueError(f"unknown codec {codec!r}")
-
-    nblocks = len(block_starts)
-    block_first = doc_ids[block_starts]
-    max_tf = np.maximum.reduceat(tfs, block_starts) if n else np.empty(0, dtype=np.int64)
-    # BM25 tf-dependent part (idf multiplies in at query time)
-    tf_f = tfs.astype(np.float64)
-    tfpart = tf_f * (k1 + 1.0) / (tf_f + k1 * (1.0 - b + b * (dls.astype(np.float64) / float(avgdl))))
-    max_tfpart = np.maximum.reduceat(tfpart, block_starts) if n else np.empty(0, dtype=np.float64)
-
-    return EncodedPostings(
-        count=n,
-        doc_ids_enc=enc_doc,
-        tfs_enc=enc_tf,
-        dls_enc=enc_dl,
-        block_first_doc=block_first,
-        block_off_doc=off_doc,
-        block_off_tf=off_tf,
-        block_off_dl=off_dl,
-        block_max_tf=max_tf,
-        block_max_tfpart=max_tfpart,
-        codec=codec,
-    )
+        return pfor_encode(values, block_size)
+    nb = varint_nbytes(values)
+    cum = np.concatenate(([0], np.cumsum(nb)))
+    return varint_encode(values, nb), cum[: values.size : block_size]
 
 
-def decode_postings(enc: EncodedPostings, block_size: int = 128) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Full decode -> (doc_ids, tfs, dls). Blocks can also be decoded
-    individually via the byte-offset arrays (see wand.py)."""
-    if enc.codec in ("pfor", "ef"):
-        if enc.codec == "pfor":
-            def dec(buf, cnt, _offs=None):
-                return pfor_decode(buf, cnt, offsets=_offs)
-        else:
-            def dec(buf, cnt, _offs=None):
-                return ef_decode(buf, cnt, offsets=_offs)
-
-        deltas = dec(enc.doc_ids_enc, enc.count, enc.block_off_doc).astype(np.int64)
-        tfs = dec(enc.tfs_enc, enc.count, enc.block_off_tf).astype(np.int64)
-        dls = dec(enc.dls_enc, enc.count, enc.block_off_dl).astype(np.int64)
-        doc_ids = deltas.copy()
-        starts = np.arange(0, enc.count, block_size)
-        for s in starts:
-            e = min(s + block_size, enc.count)
-            doc_ids[s:e] = np.cumsum(deltas[s:e])
-        return doc_ids, tfs, dls
-    dec = varint_decode
-    deltas = dec(enc.doc_ids_enc, enc.count).astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    # undo cumsum crossing block boundaries: block starts are absolute
-    starts = np.arange(0, enc.count, block_size)
-    if starts.size > 1:
-        # recompute per block: cumsum within blocks only
-        doc_ids = deltas.copy()
-        for i, s in enumerate(starts):
-            e = min(s + block_size, enc.count)
-            doc_ids[s:e] = np.cumsum(deltas[s:e])
-    tfs = dec(enc.tfs_enc, enc.count).astype(np.int64)
-    dls = dec(enc.dls_enc, enc.count).astype(np.int64)
-    return doc_ids, tfs, dls
+def decode_stream(
+    enc, n: int, codec: str = "varint", offsets: np.ndarray | None = None
+) -> np.ndarray:
+    """A whole stream of ``n`` values -> int64 array (``offsets`` are the
+    per-block byte offsets; pfor decodes same-width blocks batched)."""
+    if codec == "pfor":
+        return pfor_decode(bytes(enc), n, offsets=offsets).astype(np.int64)
+    return varint_decode(bytes(enc), n).astype(np.int64)
 
 
-def decode_block(
-    enc: EncodedPostings, block_idx: int, block_size: int = 128
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a single block without touching the rest of the stream."""
-    s = block_idx * block_size
-    e = min(s + block_size, enc.count)
-    n = e - s
-    do = enc.block_off_doc
-    to = enc.block_off_tf
-    dlo = enc.block_off_dl
-    if enc.codec in ("pfor", "ef"):
-        blk = _pfor_decode_block if enc.codec == "pfor" else _ef_decode_block
-        deltas = blk(
-            np.frombuffer(enc.doc_ids_enc, dtype=np.uint8), int(do[block_idx])
-        )[0].astype(np.int64)
-        doc_ids = np.cumsum(deltas)
-        tfs = blk(
-            np.frombuffer(enc.tfs_enc, dtype=np.uint8), int(to[block_idx])
-        )[0].astype(np.int64)
-        dls = blk(
-            np.frombuffer(enc.dls_enc, dtype=np.uint8), int(dlo[block_idx])
-        )[0].astype(np.int64)
-        return doc_ids, tfs, dls
-    end_do = do[block_idx + 1] if block_idx + 1 < len(do) else len(enc.doc_ids_enc)
-    end_to = to[block_idx + 1] if block_idx + 1 < len(to) else len(enc.tfs_enc)
-    end_dlo = dlo[block_idx + 1] if block_idx + 1 < len(dlo) else len(enc.dls_enc)
-    deltas = varint_decode(enc.doc_ids_enc[do[block_idx]: end_do], n).astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    tfs = varint_decode(enc.tfs_enc[to[block_idx]: end_to], n).astype(np.int64)
-    dls = varint_decode(enc.dls_enc[dlo[block_idx]: end_dlo], n).astype(np.int64)
-    return doc_ids, tfs, dls
-
-
-def block_metadata(enc: EncodedPostings) -> dict:
-    return {
-        "n_blocks": len(enc.block_first_doc),
-        "count": enc.count,
-        "bytes": len(enc.doc_ids_enc) + len(enc.tfs_enc) + len(enc.dls_enc),
-    }
+def decode_stream_block(enc, n: int, codec: str = "varint") -> np.ndarray:
+    """One block's bytes (its slice of the stream) -> its ``n`` values as
+    int64."""
+    if codec == "pfor":
+        return _pfor_decode_block(np.frombuffer(enc, dtype=np.uint8), 0)[0].astype(np.int64)
+    return varint_decode(enc, n).astype(np.int64)

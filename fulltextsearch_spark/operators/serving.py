@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.functions.tokenizer import tokenize
+from fulltextsearch_spark.operators.compression import check_codec
 from fulltextsearch_spark.operators.wand import (
     _BLOCK_COLS,
     _ENC_COLS,
@@ -120,7 +121,9 @@ class QueryServer:
             block_size=int(stats["block_size"]),
             k1=float(stats["k1"]),
             b=float(stats["b"]),
-            codec=str(stats["codec"]) if "codec" in stats_df.columns else "varint",
+            codec=check_codec(
+                str(stats["codec"]) if "codec" in stats_df.columns else "varint"
+            ),
         )
 
     def search(

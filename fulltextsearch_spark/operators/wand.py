@@ -57,13 +57,7 @@ from fulltextsearch_spark.operators.compressed_index import (
     _binary_parts,
     _list_parts,
 )
-from fulltextsearch_spark.operators.compression import (
-    _ef_decode_block,
-    _pfor_decode_block,
-    ef_decode,
-    pfor_decode,
-    varint_decode,
-)
+from fulltextsearch_spark.operators.compression import decode_stream, decode_stream_block
 from fulltextsearch_spark.operators.query import query_terms
 
 __all__ = [
@@ -76,14 +70,20 @@ __all__ = [
 ]
 
 
-def _decode_all(
-    enc: bytes, n: int, codec: str = "varint", offsets: np.ndarray | None = None
-) -> np.ndarray:
-    if codec == "pfor":
-        return pfor_decode(bytes(enc), n, offsets=offsets).astype(np.int64)
-    if codec == "ef":
-        return ef_decode(bytes(enc), n, offsets=offsets).astype(np.int64)
-    return varint_decode(bytes(enc), n).astype(np.int64)
+def _term_streams(
+    term: dict, block_size: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Full (docs, tfs, dls) of one kernel term: its attached decoded arrays
+    when a serving cache put them there, else a whole-stream decode."""
+    if term.get("docs") is not None:
+        return term["docs"], term["tfs"], term["dls"]
+    cdc, n = term.get("codec", "varint"), term["count"]
+    deltas = decode_stream(term["doc_ids_enc"], n, cdc, term["block_off_doc"])
+    return (
+        _docids_from_deltas(deltas, block_size),
+        decode_stream(term["tfs_enc"], n, cdc, term["block_off_tf"]),
+        decode_stream(term["dls_enc"], n, cdc, term["block_off_dl"]),
+    )
 
 
 def decode_term_streams(
@@ -92,14 +92,9 @@ def decode_term_streams(
     """Full (docs, tfs, dls) decode of one compressed term entry — the
     population step of a serving node's decoded-postings cache (attach the
     result as ``docs``/``tfs``/``dls`` on the kernel term dict and both
-    decode paths become slicing)."""
-    cdc = term.get("codec", "varint")
-    deltas = _decode_all(term["doc_ids_enc"], term["count"], cdc, term["block_off_doc"])
-    return (
-        _docids_from_deltas(deltas, block_size),
-        _decode_all(term["tfs_enc"], term["count"], cdc, term["block_off_tf"]),
-        _decode_all(term["dls_enc"], term["count"], cdc, term["block_off_dl"]),
-    )
+    decode paths become slicing). The kernel itself calls
+    :func:`_term_streams`, so wrapping this name times cache fills only."""
+    return _term_streams(term, block_size)
 
 
 def _docids_from_deltas(deltas: np.ndarray, block_size: int) -> np.ndarray:
@@ -141,33 +136,18 @@ def _decode_blocks(
             np.concatenate([term["tfs"][s] for s in sl]),
             np.concatenate([term["dls"][s] for s in sl]),
         )
-    off_d, off_t, off_l = term["block_off_doc"], term["block_off_tf"], term["block_off_dl"]
-    docs_parts, tf_parts, dl_parts = [], [], []
     cdc = term.get("codec", "varint")
-    if cdc in ("pfor", "ef"):
-        blk = _pfor_decode_block if cdc == "pfor" else _ef_decode_block
-        arr_d = np.frombuffer(term["doc_ids_enc"], dtype=np.uint8)
-        arr_t = np.frombuffer(term["tfs_enc"], dtype=np.uint8)
-        arr_l = np.frombuffer(term["dls_enc"], dtype=np.uint8)
-        for j in blocks:
-            deltas = blk(arr_d, int(off_d[j]))[0].astype(np.int64)
-            docs_parts.append(np.cumsum(deltas))
-            tf_parts.append(blk(arr_t, int(off_t[j]))[0].astype(np.int64))
-            dl_parts.append(blk(arr_l, int(off_l[j]))[0].astype(np.int64))
-        if not docs_parts:
-            z = np.empty(0, dtype=np.int64)
-            return z, z.copy(), z.copy()
-        return np.concatenate(docs_parts), np.concatenate(tf_parts), np.concatenate(dl_parts)
-    end_d = np.append(off_d[1:], len(term["doc_ids_enc"]))
-    end_t = np.append(off_t[1:], len(term["tfs_enc"]))
-    end_l = np.append(off_l[1:], len(term["dls_enc"]))
+    enc_d, enc_t, enc_l = term["doc_ids_enc"], term["tfs_enc"], term["dls_enc"]
+    off_d, off_t, off_l = term["block_off_doc"], term["block_off_tf"], term["block_off_dl"]
+    end_d = np.append(off_d[1:], len(enc_d))
+    end_t = np.append(off_t[1:], len(enc_t))
+    end_l = np.append(off_l[1:], len(enc_l))
+    docs_parts, tf_parts, dl_parts = [], [], []
     for j in blocks:
-        s = j * block_size
-        cnt = min(block_size, n - s)
-        deltas = varint_decode(term["doc_ids_enc"][off_d[j]: end_d[j]], cnt).astype(np.int64)
-        docs_parts.append(np.cumsum(deltas))
-        tf_parts.append(varint_decode(term["tfs_enc"][off_t[j]: end_t[j]], cnt).astype(np.int64))
-        dl_parts.append(varint_decode(term["dls_enc"][off_l[j]: end_l[j]], cnt).astype(np.int64))
+        cnt = min(block_size, n - j * block_size)
+        docs_parts.append(np.cumsum(decode_stream_block(enc_d[off_d[j]: end_d[j]], cnt, cdc)))
+        tf_parts.append(decode_stream_block(enc_t[off_t[j]: end_t[j]], cnt, cdc))
+        dl_parts.append(decode_stream_block(enc_l[off_l[j]: end_l[j]], cnt, cdc))
     if not docs_parts:
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
@@ -244,16 +224,6 @@ def maxscore_topk(
     cand_scores = np.empty(0, dtype=np.float64)
     theta = -np.inf
 
-    def _decode_term_full(t):
-        if t.get("docs") is not None:
-            return t["docs"], t["tfs"], t["dls"]
-        cdc = t.get("codec", "varint")
-        deltas = _decode_all(t["doc_ids_enc"], t["count"], cdc, t["block_off_doc"])
-        t_docs = _docids_from_deltas(deltas, block_size)
-        t_tfs = _decode_all(t["tfs_enc"], t["count"], cdc, t["block_off_tf"])
-        t_dls = _decode_all(t["dls_enc"], t["count"], cdc, t["block_off_dl"])
-        return t_docs, t_tfs, t_dls
-
     def _part_full(t):
         """Query-independent tf component of the FULL stream, if a serving
         cache attached it (``tfpart``, computed with this index's k1/b/avgdl
@@ -284,7 +254,7 @@ def maxscore_topk(
                 # full-stream probe instead. Safe: decoding MORE than the
                 # needed blocks never changes results, only skips the skip.
                 stats["blocks_decoded"] += nblocks
-                t_docs, t_tfs, t_dls = _decode_term_full(t)
+                t_docs, t_tfs, t_dls = _term_streams(t, block_size)
                 if (
                     t_docs.size
                     and cand_docs.size + t_docs.size > n_docs // 16
@@ -370,7 +340,7 @@ def maxscore_topk(
                 # in one vectorized pass
                 if n_surv > (2 * nblocks) // 5:
                     stats["blocks_decoded"] += int(nblocks - done_blocks.sum())
-                    t_docs, t_tfs, t_dls = _decode_term_full(t)
+                    t_docs, t_tfs, t_dls = _term_streams(t, block_size)
                     # pos over the kept cand_docs was computed at branch
                     # entry and cand_docs has not changed since — reuse it.
                     # "fresh" = candidates not already updated per-block.
@@ -467,7 +437,7 @@ def maxscore_topk(
                 # the per-block loop for zero skips
                 if theta != -np.inf and bub_sorted[-1] + rest_after >= theta:
                     stats["blocks_decoded"] += int(nblocks - j)
-                    t_docs, t_tfs, t_dls = _decode_term_full(t)
+                    t_docs, t_tfs, t_dls = _term_streams(t, block_size)
                     part = _part_full(t)
                     if parts_docs:
                         done = np.sort(np.concatenate([np.asarray(x) for x in parts_docs]))
@@ -545,7 +515,7 @@ def maxscore_topk(
             if surv is None or surv.size > nblocks // 2:
                 # nothing (or too little) skippable: stream decode
                 stats["blocks_decoded"] += nblocks
-                t_docs, t_tfs, t_dls = _decode_term_full(t)
+                t_docs, t_tfs, t_dls = _term_streams(t, block_size)
                 part = _part_full(t)
             else:
                 stats["blocks_decoded"] += int(surv.size)

@@ -1,18 +1,15 @@
-"""Property tests: varint/delta round-trip identity and per-block decode."""
+"""Property tests: varint/delta round-trip identity and per-block decode,
+over the streams the engine writes (``tests/postings.py``) and the decoders
+the query kernel runs."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from fulltextsearch_spark.operators.compression import (
-    block_metadata,
-    decode_block,
-    decode_postings,
-    encode_postings,
-    varint_decode,
-    varint_encode,
-)
+from fulltextsearch_spark.operators.compression import varint_decode, varint_encode
+from fulltextsearch_spark.operators.wand import _decode_blocks, decode_term_streams
+from tests.postings import stream_bytes, term_entry
 
 
 def test_varint_edge_values():
@@ -33,13 +30,13 @@ def test_roundtrip_random(seed, block_size):
     doc_ids = np.sort(rng.choice(10**9, size=n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 1000, n).astype(np.int64)
     dls = rng.integers(1, 100000, n).astype(np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, block_size=block_size, avgdl=500.0)
-    d, t, dl = decode_postings(enc, block_size=block_size)
+    enc = term_entry(doc_ids, tfs, dls, block_size=block_size, avgdl=500.0)
+    d, t, dl = decode_term_streams(enc, block_size)
     assert np.array_equal(d, doc_ids)
     assert np.array_equal(t, tfs)
     assert np.array_equal(dl, dls)
-    for bi in range(len(enc.block_first_doc)):
-        bd, bt, bdl = decode_block(enc, bi, block_size=block_size)
+    for bi in range(len(enc["block_first_doc"])):
+        bd, bt, bdl = _decode_blocks(enc, np.array([bi]), block_size)
         s, e = bi * block_size, min((bi + 1) * block_size, n)
         assert np.array_equal(bd, doc_ids[s:e])
         assert np.array_equal(bt, tfs[s:e])
@@ -53,19 +50,14 @@ def test_block_max_is_safe_upper_bound():
     tfs = rng.integers(1, 50, n).astype(np.int64)
     dls = rng.integers(10, 500, n).astype(np.int64)
     k1, b, avgdl = 1.2, 0.75, 120.0
-    enc = encode_postings(doc_ids, tfs, dls, block_size=128, k1=k1, b=b, avgdl=avgdl)
+    enc = term_entry(doc_ids, tfs, dls, block_size=128, k1=k1, b=b, avgdl=avgdl)
     tf_f = tfs.astype(np.float64)
     tfpart = tf_f * (k1 + 1.0) / (tf_f + k1 * (1.0 - b + b * dls / avgdl))
-    for bi in range(len(enc.block_first_doc)):
+    for bi in range(len(enc["block_first_doc"])):
         s, e = bi * 128, min((bi + 1) * 128, n)
-        assert enc.block_max_tfpart[bi] >= tfpart[s:e].max() - 1e-300
-        assert enc.block_max_tf[bi] == tfs[s:e].max()
-        assert enc.block_first_doc[bi] == doc_ids[s]
-
-
-def test_unsorted_rejected():
-    with pytest.raises(ValueError):
-        encode_postings(np.array([5, 3]), np.array([1, 1]), np.array([1, 1]))
+        assert enc["block_max_tfpart"][bi] >= tfpart[s:e].max() - 1e-300
+        assert enc["block_max_tf"][bi] == tfs[s:e].max()
+        assert enc["block_first_doc"][bi] == doc_ids[s]
 
 
 def test_compression_ratio_dense():
@@ -73,9 +65,9 @@ def test_compression_ratio_dense():
     doc_ids = np.sort(rng.choice(10**6, size=200_000, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 5, doc_ids.size).astype(np.int64)
     dls = rng.integers(20, 150, doc_ids.size).astype(np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, avgdl=80.0)
+    enc = term_entry(doc_ids, tfs, dls, avgdl=80.0)
     raw = doc_ids.size * 24
-    assert block_metadata(enc)["bytes"] * 4 < raw  # >4x smaller than raw int64 triples
+    assert stream_bytes(enc) * 4 < raw  # >4x smaller than raw int64 triples
 
 
 # ---------------------------------------------------------------------------
@@ -119,53 +111,44 @@ def test_pfor_roundtrip_value_styles(seed):
             assert np.array_equal(pfor_decode(stream, n), v)
 
 
-@pytest.mark.parametrize("codec", ["varint", "pfor", "ef"])
+@pytest.mark.parametrize("codec", ["varint", "pfor"])
 def test_postings_codec_dispatch(codec):
-    """encode_postings/decode_postings/decode_block agree across codecs,
+    """The kernel's whole-term and per-block decoders agree across codecs,
     and the skip/block-max metadata is codec-independent."""
-    from fulltextsearch_spark.operators.compression import (
-        decode_block,
-        decode_postings,
-        encode_postings,
-    )
-
     rng = np.random.default_rng(7)
     n = 5000
     doc_ids = np.sort(rng.choice(500_000, n, replace=False)).astype(np.int64)
     tfs = rng.zipf(1.5, n).clip(1, 1000).astype(np.int64)
     dls = rng.integers(20, 3000, n).astype(np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, avgdl=500.0, codec=codec)
-    assert enc.codec == codec
-    d, t, l = decode_postings(enc)
+    enc = term_entry(doc_ids, tfs, dls, avgdl=500.0, codec=codec)
+    assert enc["codec"] == codec
+    d, t, l = decode_term_streams(enc, 128)
     assert np.array_equal(d, doc_ids)
     assert np.array_equal(t, tfs)
     assert np.array_equal(l, dls)
     for blk in (0, 3, (n - 1) // 128):
         s, e = blk * 128, min(blk * 128 + 128, n)
-        d0, t0, l0 = decode_block(enc, blk)
+        d0, t0, l0 = _decode_blocks(enc, np.array([blk]), 128)
         assert np.array_equal(d0, doc_ids[s:e])
         assert np.array_equal(t0, tfs[s:e])
         assert np.array_equal(l0, dls[s:e])
-    ref = encode_postings(doc_ids, tfs, dls, avgdl=500.0)
-    assert np.array_equal(enc.block_first_doc, ref.block_first_doc)
-    assert np.array_equal(enc.block_max_tfpart, ref.block_max_tfpart)
+    ref = term_entry(doc_ids, tfs, dls, avgdl=500.0)
+    assert np.array_equal(enc["block_first_doc"], ref["block_first_doc"])
+    assert np.array_equal(enc["block_max_tfpart"], ref["block_max_tfpart"])
 
 
 def test_pfor_smaller_on_posting_deltas():
     """On realistic posting streams (uniform-gap deltas + Zipf tfs) the
-    bit-packed codec beats varint — the reason it exists. Measured in this
-    repo: ~0.85x the varint bytes at 16-17 Mvals/s batched decode."""
-    from fulltextsearch_spark.operators.compression import encode_postings
-
+    bit-packed codec beats varint — the reason it exists (for measured
+    ratios on real corpora, run scripts/codec_probe.py)."""
     rng = np.random.default_rng(3)
     n = 20_000
     doc_ids = np.sort(rng.choice(1_000_000, n, replace=False)).astype(np.int64)
     tfs = rng.zipf(1.5, n).clip(1, 1000).astype(np.int64)
     dls = rng.integers(20, 3000, n).astype(np.int64)
-    ev = encode_postings(doc_ids, tfs, dls, avgdl=500.0)
-    ep = encode_postings(doc_ids, tfs, dls, avgdl=500.0, codec="pfor")
-    size = lambda e: len(e.doc_ids_enc) + len(e.tfs_enc) + len(e.dls_enc)  # noqa: E731
-    assert size(ep) < size(ev)
+    ev = term_entry(doc_ids, tfs, dls, avgdl=500.0)
+    ep = term_entry(doc_ids, tfs, dls, avgdl=500.0, codec="pfor")
+    assert stream_bytes(ep) < stream_bytes(ev)
 
 
 def test_pfor_oversize_block_raises_on_both_paths():
@@ -180,84 +163,6 @@ def test_pfor_oversize_block_raises_on_both_paths():
         pfor_encode(np.arange(big, dtype=np.uint64) % 50, block_size=big)  # scalar
     with _pytest.raises(ValueError, match="65535"):
         pfor_encode(np.arange(3 * big, dtype=np.uint64) % 50, block_size=big)  # batched
-
-
-@pytest.mark.parametrize("seed", [0, 3])
-def test_ef_roundtrip_value_styles(seed):
-    """Batched encode == per-block scalar encode byte-for-byte; both decode
-    paths (offsets and sequential) invert it — uniform, Zipf, all-zero, and
-    sorted-doc-delta styles. (EF stores per-block running sums, so the one
-    documented constraint vs PFor is that a block's sum must fit uint64 —
-    always true for doc_ids and token counts.)"""
-    from fulltextsearch_spark.operators.compression import (
-        _ef_encode_block,
-        ef_decode,
-        ef_encode,
-    )
-
-    rng = np.random.default_rng(seed)
-
-    def doc_deltas(n):
-        if n == 0:
-            return np.empty(0, np.uint64)
-        ids = np.sort(rng.choice(1 << 30, n, replace=False)).astype(np.int64)
-        d = np.diff(ids, prepend=0)
-        starts = np.arange(0, n, 128)
-        d[starts] = ids[starts]
-        return d.astype(np.uint64)
-
-    styles = [
-        lambda n: rng.integers(0, 1 << 40, n).astype(np.uint64),
-        lambda n: rng.zipf(1.2, n).astype(np.uint64),
-        lambda n: np.zeros(n, np.uint64),
-        doc_deltas,
-    ]
-    for style in styles:
-        for n in (0, 1, 127, 128, 129, 1000):
-            v = style(n)
-            stream, offs = ef_encode(v)
-            chunks, soffs = [], [0]
-            for s in range(0, n, 128):
-                chunks.append(_ef_encode_block(v[s : s + 128]))
-                soffs.append(soffs[-1] + len(chunks[-1]))
-            assert stream == b"".join(chunks)
-            assert np.array_equal(offs, np.asarray(soffs[: (n + 127) // 128], dtype=np.int64))
-            assert np.array_equal(ef_decode(stream, n, offsets=offs), v)
-            assert np.array_equal(ef_decode(stream, n), v)
-
-
-def test_ef_cost_tracks_density():
-    """EF's bytes track DENSITY, not gap width: on a dense head-term list it
-    sits near the ~2 + log2(u/n) bits/posting bound (~0.5x varint, whose
-    floor is 8 bits/value), and on CLUSTERED doc_ids (runs of gap-1 docs
-    broken by rare huge jumps) it stays within its worst-case bits/value
-    bound — the guarantee PFor does not offer."""
-    from fulltextsearch_spark.operators.compression import ef_encode, varint_encode
-
-    def deltas_of(ids):
-        d = np.diff(ids, prepend=0)
-        starts = np.arange(0, ids.size, 128)
-        d[starts] = ids[starts]
-        return d.astype(np.uint64)
-
-    # dense uniform-ish list: every 3rd doc
-    d = deltas_of(np.arange(0, 1_500_000, 3, dtype=np.int64))
-    ef_b, _ = ef_encode(d)
-    assert len(ef_b) < 0.55 * len(varint_encode(d))
-    assert 8.0 * len(ef_b) / d.size < 2 + np.log2(3) + 1.5  # near the EF bound
-
-    # sparse list: the same guarantee holds RELATIVE to its own bound
-    # (EF never exceeds ~2 + log2(u/n) + header bits/value, for ANY gap
-    # distribution; PFor has no such worst-case bound but its exception
-    # machinery can undercut EF on clustered gaps — both are available and
-    # the save-time codec flag picks per deployment)
-    rng = np.random.default_rng(11)
-    gaps = rng.zipf(1.3, 200_000).clip(1, 1 << 30)
-    ids = np.cumsum(gaps).astype(np.int64)
-    d2 = deltas_of(ids)
-    ef2, _ = ef_encode(d2)
-    u_over_n = ids[-1] / ids.size
-    assert 8.0 * len(ef2) / ids.size < 2 + np.log2(max(u_over_n, 1.0)) + 1.5
 
 
 def test_partial_accumulator_emit_paths_equivalent():

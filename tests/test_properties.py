@@ -12,18 +12,16 @@ tests miss.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fulltextsearch_spark.operators.compression import (
-    block_metadata,
-    decode_block,
-    decode_postings,
-    encode_postings,
+    CODECS,
     varint_decode,
     varint_encode,
 )
+from fulltextsearch_spark.operators.wand import _decode_blocks, decode_term_streams
+from tests.postings import term_entry
 
 # u64 edge cases the shift-loop length scan must survive: 0, 7-bit
 # boundaries, and the top of the int64 range (doc_ids/tfs are int64).
@@ -50,37 +48,38 @@ _POSTING_LISTS = st.lists(
     max_size=300,
 )
 _BLOCK_SIZES = st.sampled_from([1, 2, 3, 7, 128])
+_CODECS = st.sampled_from(CODECS)
 
 
 @settings(max_examples=100, deadline=None)
-@given(_POSTING_LISTS, _BLOCK_SIZES)
-def test_postings_roundtrip(rows, block_size):
+@given(_POSTING_LISTS, _BLOCK_SIZES, _CODECS)
+def test_postings_roundtrip(rows, block_size, codec):
     deltas = np.array([r[0] for r in rows], dtype=np.int64)
     doc_ids = np.cumsum(deltas)
     tfs = np.array([r[1] for r in rows], dtype=np.int64)
     dls = np.array([r[2] for r in rows], dtype=np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, block_size=block_size, avgdl=50.0)
-    out_doc, out_tf, out_dl = decode_postings(enc, block_size)
+    enc = term_entry(doc_ids, tfs, dls, block_size=block_size, avgdl=50.0, codec=codec)
+    out_doc, out_tf, out_dl = decode_term_streams(enc, block_size)
     np.testing.assert_array_equal(out_doc, doc_ids)
     np.testing.assert_array_equal(out_tf, tfs)
     np.testing.assert_array_equal(out_dl, dls)
 
 
 @settings(max_examples=100, deadline=None)
-@given(_POSTING_LISTS, _BLOCK_SIZES)
-def test_block_decode_matches_full_decode(rows, block_size):
+@given(_POSTING_LISTS, _BLOCK_SIZES, _CODECS)
+def test_block_decode_matches_full_decode(rows, block_size, codec):
     """Every block decoded independently == the slice of the full decode
     (the skip path WAND takes must agree with the exhaustive path)."""
     deltas = np.array([r[0] for r in rows], dtype=np.int64)
     doc_ids = np.cumsum(deltas)
     tfs = np.array([r[1] for r in rows], dtype=np.int64)
     dls = np.array([r[2] for r in rows], dtype=np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, block_size=block_size, avgdl=50.0)
-    nblocks = len(enc.block_first_doc)
+    enc = term_entry(doc_ids, tfs, dls, block_size=block_size, avgdl=50.0, codec=codec)
+    nblocks = len(enc["block_first_doc"])
     assert nblocks == -(-len(rows) // block_size)
     for bi in range(nblocks):
         s, e = bi * block_size, min((bi + 1) * block_size, len(rows))
-        bd, bt, bl = decode_block(enc, bi, block_size)
+        bd, bt, bl = _decode_blocks(enc, np.array([bi]), block_size)
         np.testing.assert_array_equal(bd, doc_ids[s:e])
         np.testing.assert_array_equal(bt, tfs[s:e])
         np.testing.assert_array_equal(bl, dls[s:e])
@@ -97,36 +96,28 @@ def test_block_max_bounds_are_tight_and_safe(rows, block_size):
     doc_ids = np.cumsum(deltas)
     tfs = np.array([r[1] for r in rows], dtype=np.int64)
     dls = np.array([r[2] for r in rows], dtype=np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, block_size=block_size, k1=k1, b=b, avgdl=avgdl)
+    enc = term_entry(doc_ids, tfs, dls, block_size=block_size, k1=k1, b=b, avgdl=avgdl)
     tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
-    for bi in range(len(enc.block_first_doc)):
+    for bi in range(len(enc["block_first_doc"])):
         s, e = bi * block_size, min((bi + 1) * block_size, len(rows))
-        assert enc.block_max_tf[bi] == tfs[s:e].max()
-        assert enc.block_first_doc[bi] == doc_ids[s]
-        assert enc.block_max_tfpart[bi] >= tfpart[s:e].max() - 1e-12
-        assert enc.block_max_tfpart[bi] <= tfpart[s:e].max() + 1e-12
+        assert enc["block_max_tf"][bi] == tfs[s:e].max()
+        assert enc["block_first_doc"][bi] == doc_ids[s]
+        assert enc["block_max_tfpart"][bi] >= tfpart[s:e].max() - 1e-12
+        assert enc["block_max_tfpart"][bi] <= tfpart[s:e].max() + 1e-12
 
 
 @settings(max_examples=50, deadline=None)
 @given(_POSTING_LISTS)
-def test_block_metadata_consistent(rows):
+def test_block_columns_consistent(rows):
     deltas = np.array([r[0] for r in rows], dtype=np.int64)
     doc_ids = np.cumsum(deltas)
     tfs = np.array([r[1] for r in rows], dtype=np.int64)
     dls = np.array([r[2] for r in rows], dtype=np.int64)
-    enc = encode_postings(doc_ids, tfs, dls, block_size=128, avgdl=50.0)
-    meta = block_metadata(enc)
-    assert meta["count"] == len(rows)
-    assert meta["n_blocks"] == len(enc.block_first_doc)
-
-
-def test_encode_rejects_unsorted():
-    with pytest.raises(ValueError):
-        encode_postings(
-            np.array([5, 3], dtype=np.int64),
-            np.array([1, 1], dtype=np.int64),
-            np.array([1, 1], dtype=np.int64),
-        )
+    enc = term_entry(doc_ids, tfs, dls, block_size=128, avgdl=50.0)
+    assert enc["count"] == len(rows)
+    n_blocks = len(enc["block_first_doc"])
+    for name in ("block_off_doc", "block_off_tf", "block_off_dl", "block_max_tfpart"):
+        assert len(enc[name]) == n_blocks
 
 
 def test_spread_for_python_kernel(spark):
@@ -267,22 +258,8 @@ def test_maxscore_rank_identical_to_exhaustive(instance):
             tf + k1 * (1.0 - b + b * (dl.astype(np.float64) / avgdl))
         )
         exhaustive[doc_ids] += qtf * idf * tfpart
-        enc = encode_postings(doc_ids, tf, dl, block_size=block_size, k1=k1, b=b, avgdl=avgdl)
-        kernel_terms.append(
-            {
-                "qtf": qtf,
-                "df": df,
-                "count": enc.count,
-                "doc_ids_enc": enc.doc_ids_enc,
-                "tfs_enc": enc.tfs_enc,
-                "dls_enc": enc.dls_enc,
-                "block_first_doc": enc.block_first_doc,
-                "block_off_doc": enc.block_off_doc,
-                "block_off_tf": enc.block_off_tf,
-                "block_off_dl": enc.block_off_dl,
-                "block_max_tfpart": enc.block_max_tfpart,
-            }
-        )
+        enc = term_entry(doc_ids, tf, dl, block_size=block_size, k1=k1, b=b, avgdl=avgdl)
+        kernel_terms.append({**enc, "qtf": qtf, "df": df})
 
     scored = np.flatnonzero(exhaustive > 0)
     order = np.lexsort((scored, -exhaustive[scored]))

@@ -87,12 +87,22 @@ def test_merge_rejects_param_mismatch(spark, corpus, segments):
         merge_segments(segments, cfg=EngineConfig(k1=9.9, b=CFG.b, block_size=CFG.block_size))
 
 
-def test_merge_rejects_pfor_segments(spark, segments, tmp_path):
+def test_merge_rejects_pfor_segments(spark, corpus, segments, tmp_path):
+    """A pfor segment is rejected; following the error's advice (re-save it
+    with codec='varint') makes it mergeable, with the batch build's answers."""
     root = str(tmp_path / "pfor_seg")
     save_compressed_index(segments[0], root, codec="pfor")
     loaded = load_compressed_index(spark, root)
     with pytest.raises(ValueError, match="varint"):
         merge_segments([loaded, segments[1]])
+    vroot = str(tmp_path / "pfor_seg_varint")
+    save_compressed_index(loaded, vroot, codec="varint")
+    resaved = load_compressed_index(spark, vroot)
+    assert resaved.codec == "varint"
+    merged = merge_segments([resaved, *segments[1:]])
+    batch = build_compressed_index(spark, corpus, CFG)
+    assert _postings_set(merged) == _postings_set(batch)
+    assert _results(spark, merged) == _results(spark, batch)
 
 
 def test_merge_saved_roundtrip(spark, corpus, segments, tmp_path):

@@ -372,7 +372,7 @@ def test_saved_postings_are_term_range_clustered(index_root):
 def test_search_local_reads_one_row_group_per_term(spark, index_root):
     """Cold lookups read exactly the row group whose range holds the term
     (counted by QueryServer.counters), and none for an unknown term that
-    falls between two ranges."""
+    falls outside every range."""
     from fulltextsearch_spark.functions.tokenizer import tokenize
     from fulltextsearch_spark.operators.serving import _KERNEL_COLS
 
@@ -398,11 +398,15 @@ def test_search_local_reads_one_row_group_per_term(spark, index_root):
     server.search_local([("k", known)], CFG)  # warm: row cache, no fetch
     assert server.counters["row_groups_read"] == 1
 
+    # between two adjacent ranges when one admits a single-token term (a
+    # boundary like marker33 | marker330 does not), else above the last
+    bounds = [(a, b) for (_, _, _, a), (_, _, b, _) in zip(groups, groups[1:])]
+    bounds.append((groups[-1][3], None))
     gap = next(
         c
-        for (_, _, _, a), (_, _, b, _) in zip(groups, groups[1:])
+        for a, b in bounds
         for c in (a + ch for ch in "abcdefghijklmnopqrstuvwxyz")
-        if a < c < b and tokenize(c, CFG.stem) == [c]
+        if a < c and (b is None or c < b) and tokenize(c, CFG.stem) == [c]
     )
     cold = QueryServer.load(spark, index_root)
     assert cold.search_local([("u", gap)], CFG) == []

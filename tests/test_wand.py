@@ -50,7 +50,7 @@ def _result_map(rows):
 
 def test_decompress_matches_oracle_postings(spark, corpus, cindex, tmp_path):
     """decompress_postings against an independent source: the index saved
-    under every codec (varint: one batch-wide decode; pfor/ef: per-row
+    under every codec (varint: one batch-wide decode; pfor: per-row
     decode) loads and decodes to OracleIndex's postings, dl and df, and a
     shard_postings build's multi-row terms decode to the same postings."""
     rows = corpus.select("doc_id", "text").collect()
@@ -70,7 +70,7 @@ def test_decompress_matches_oracle_postings(spark, corpus, cindex, tmp_path):
             )
         return got, len(dec)
 
-    for codec in ("varint", "pfor", "ef"):
+    for codec in ("varint", "pfor"):
         root = str(tmp_path / codec)
         save_compressed_index(cindex, root, codec=codec)
         loaded = load_compressed_index(spark, root)
@@ -270,6 +270,32 @@ def test_pfor_saved_index_queries_identically(spark, cindex, tmp_path):
         assert sp.search_local([(qid, content)], CFG) == sv.search_local(
             [(qid, content)], CFG
         )
+
+
+def test_codec_resaves_round_trip_to_the_build(spark, cindex, tmp_path):
+    """varint -> pfor -> varint re-saves: the pfor index really holds other
+    streams, and re-saving it as varint gives back the build's rows byte
+    for byte (same enc cells, same block offsets), so both re-saves answer
+    like the build."""
+    cols = ["term", "count", "doc_ids_enc", "tfs_enc", "dls_enc",
+            "block_off_doc", "block_off_tf", "block_off_dl", "block_max_tfpart"]
+
+    def rows(idx):
+        return sorted(tuple(r) for r in idx.postings.select(*cols).collect())
+
+    save_compressed_index(cindex, str(tmp_path / "p"), codec="pfor")
+    ip = load_compressed_index(spark, str(tmp_path / "p"))
+    save_compressed_index(ip, str(tmp_path / "v"), codec="varint")
+    iv = load_compressed_index(spark, str(tmp_path / "v"))
+    assert (ip.codec, iv.codec) == ("pfor", "varint")
+    build = rows(cindex)
+    assert rows(iv) == build
+    assert rows(ip) != build
+
+    qdf = spark.createDataFrame(QUERY_SET, ["query_id", "content"])
+    want = sorted(tuple(r) for r in search_wand(cindex, qdf, CFG).collect())
+    for idx in (ip, iv):
+        assert sorted(tuple(r) for r in search_wand(idx, qdf, CFG).collect()) == want
 
 
 def test_wand_pruning_stats_surface(spark, cindex):
