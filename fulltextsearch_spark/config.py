@@ -33,8 +33,8 @@ class EngineConfig:
     # Readers treat each shard as an independent posting slice with idf from
     # the term-total df (sum of per-row counts). None disables (sandbox
     # corpora never need it); a production cluster would set ~128M
-    # (~0.5 GB encoded at ~3-4 bytes/posting). The logical build_index
-    # ignores it (one row per term). Head-term skew in the build's shuffle
+    # (~0.5 GB encoded at ~3-4 bytes/posting). The logical index ignores it
+    # (build_index and logical_index give one row per term). Head-term skew in the build's shuffle
     # needs no knob: each map task packs its own partial run of every term.
     shard_postings: int | None = None
 

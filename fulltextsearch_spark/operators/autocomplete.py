@@ -8,8 +8,8 @@ the suggester needs NO extra artifact beyond the index), tie-broken by
 term ASC for determinism.
 
 Scale shape: the candidate source is the skinny ``(term, df)`` projection
-of the postings — column pruning keeps posting arrays out of the scan and
-a doc-range-sharded index re-aggregates per-slice df to term totals. The
+of the postings — column pruning keeps posting arrays out of the scan, and
+each term is one row, so its ``df`` is the term total as stored. The
 prefix table is tiny and **broadcast**; ``startswith`` is a non-equi
 predicate, so the join is a broadcast nested-loop over the dictionary —
 one map-side pass, nothing shuffles but the (prefix, candidate) survivors
@@ -35,10 +35,7 @@ def autocomplete(index: IndexTables, prefixes: DataFrame, k: int = 5) -> DataFra
     the engine's case folding should pre-tokenize the prefix); a prefix
     with no matching vocabulary yields no rows.
     """
-    df_tbl = index.postings.select("term", "df")
-    if index.sharded:
-        df_tbl = df_tbl.groupBy("term").agg(F.sum("df").alias("df"))
-    cand = df_tbl.join(
+    cand = index.postings.select("term", "df").join(
         F.broadcast(prefixes), F.col("term").startswith(F.col("prefix")), "inner"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))

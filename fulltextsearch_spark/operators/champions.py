@@ -59,18 +59,11 @@ def build_champions(
     per-term score contribution, doc_ids sorted ascending.
 
     A build artifact (persist next to the index, like VSM norms and IVF
-    centroids): selection order is (impact DESC, doc_id ASC). On a
-    doc-range-sharded index the per-row ``df`` is first aggregated to the
-    term total (one vocabulary-keyed aggregate — build-time cost), since
-    impact needs the real idf.
+    centroids): selection order is (impact DESC, doc_id ASC).
     """
     if m < 1:
         raise ValueError("m must be >= 1")
-    post = index.postings
-    if index.sharded:
-        tot = post.groupBy("term").agg(F.sum("df").alias("_df_tot"))
-        post = post.drop("df").join(tot, "term").withColumnRenamed("_df_tot", "df")
-    flat = post.select("term", "df", F.explode("postings").alias("p")).select(
+    flat = index.postings.select("term", "df", F.explode("postings").alias("p")).select(
         "term",
         "df",
         F.col("p.doc_id").alias("doc_id"),

@@ -1178,18 +1178,27 @@ def save_compressed_index(index: CompressedIndex, root: str, codec: str | None =
     )
 
 
-def load_compressed_index(spark: SparkSession, root: str) -> CompressedIndex:
+def _read_corpus_stats(spark: SparkSession, root: str) -> dict:
+    """The saved corpus scalars of ``root`` as keyword arguments (n_docs,
+    avgdl, block_size, k1, b, codec); an unknown codec fails loudly."""
     stats_df = spark.read.parquet(f"{root}/corpus_stats")
     stats = stats_df.collect()[0]
-    # indexes saved before the codec column existed are varint by definition
-    codec = check_codec(str(stats["codec"]) if "codec" in stats_df.columns else "varint")
+    return {
+        "n_docs": int(stats["n_docs"]),
+        "avgdl": float(stats["avgdl"]),
+        "block_size": int(stats["block_size"]),
+        "k1": float(stats["k1"]),
+        "b": float(stats["b"]),
+        # indexes saved before the codec column existed are varint by definition
+        "codec": check_codec(
+            str(stats["codec"]) if "codec" in stats_df.columns else "varint"
+        ),
+    }
+
+
+def load_compressed_index(spark: SparkSession, root: str) -> CompressedIndex:
     return CompressedIndex(
         postings=spark.read.parquet(f"{root}/postings"),
         doc_stats=spark.read.parquet(f"{root}/doc_stats"),
-        n_docs=int(stats["n_docs"]),
-        avgdl=float(stats["avgdl"]),
-        block_size=int(stats["block_size"]),
-        k1=float(stats["k1"]),
-        b=float(stats["b"]),
-        codec=codec,
+        **_read_corpus_stats(spark, root),
     )

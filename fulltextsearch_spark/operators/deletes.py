@@ -7,9 +7,11 @@ standard design is Lucene's: deletions are cheap tombstones until a
 compaction physically rewrites the affected postings. This module is the
 compaction step:
 
-* only terms that actually CONTAIN a deleted doc are rewritten — found by
-  one skinny (term, doc_id) explode semi-joined against the broadcast
-  tombstone set; every other posting row carries over untouched;
+* on a logical index only terms that actually CONTAIN a deleted doc are
+  rewritten — found by one skinny (term, doc_id) explode semi-joined
+  against the broadcast tombstone set; every other posting row carries
+  over untouched. A compressed index is rewritten whole (decode, drop,
+  re-encode), which also refreshes its block-max metadata;
 * the result is value-identical to building the index over the remaining
   (doc_id, text) rows with their ORIGINAL ids (ids are never reassigned —
   reassignment would invalidate every stored doc_id downstream): N =
@@ -34,6 +36,22 @@ from fulltextsearch_spark.operators.index_build import IndexTables
 __all__ = ["delete_docs", "delete_docs_compressed", "upsert_docs_compressed"]
 
 
+def _surviving_stats(doc_stats: DataFrame, d: DataFrame):
+    """(doc_stats, n_docs, avgdl) over the docs whose id is not in
+    ``d._del``."""
+    kept = (
+        doc_stats.withColumnRenamed("doc_id", "_del")
+        .join(F.broadcast(d), "_del", "left_anti")
+        .withColumnRenamed("_del", "doc_id")
+    )
+    stats = kept.agg(
+        (F.max("doc_id") + 1).alias("n"), F.sum("dl").alias("total")
+    ).collect()[0]
+    n_docs = int(stats["n"] or 0)
+    avgdl = float(stats["total"] or 0) / n_docs if n_docs else 0.0
+    return kept, n_docs, avgdl
+
+
 def delete_docs(index: IndexTables, deleted: DataFrame) -> IndexTables:
     """Physically remove ``deleted.doc_id`` docs from a logical index."""
     d = deleted.select(F.col("doc_id").alias("_del")).distinct()
@@ -56,34 +74,27 @@ def delete_docs(index: IndexTables, deleted: DataFrame) -> IndexTables:
         .filter(F.col("df") > 0)
         .select("term", "df", "postings")
     )
-    doc_stats = (
-        index.doc_stats.withColumnRenamed("doc_id", "_del")
-        .join(F.broadcast(d), "_del", "left_anti")
-        .withColumnRenamed("_del", "doc_id")
-    )
-    stats = doc_stats.agg(
-        (F.max("doc_id") + 1).alias("n"), F.sum("dl").alias("total")
-    ).collect()[0]
-    n_docs = int(stats["n"] or 0)
-    avgdl = float(stats["total"] or 0) / n_docs if n_docs else 0.0
+    doc_stats, n_docs, avgdl = _surviving_stats(index.doc_stats, d)
     return IndexTables(
         postings=carried.unionByName(rebuilt),
         doc_stats=doc_stats,
         n_docs=n_docs,
         avgdl=avgdl,
-        sharded=index.sharded,
     )
 
 
 def delete_docs_compressed(
     cidx, deleted: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
 ):
-    """Compaction for a compressed index: decode -> delete -> re-encode.
+    """Compaction for a compressed index: decode -> drop -> re-encode.
 
-    A full rewrite by design (same as a Lucene merge that drops deletes);
-    the remaining postings re-encode through the build's own partial pack
-    and merge, so block-max metadata recomputes under the post-delete
-    avgdl. Returns a new :class:`CompressedIndex` with one row per term.
+    A full rewrite by design (same as a Lucene merge that drops deletes):
+    the decoded postings explode to (doc_id, term, tf, dl), the tombstoned
+    docs drop out through one broadcast anti-join, and the rest re-encode
+    through the build's own partial pack and merge, so block-max metadata
+    recomputes under the post-delete avgdl. The several rows of a sharded
+    term need no regroup: the pack and merge order each term's postings by
+    doc_id. Returns a new :class:`CompressedIndex` with one row per term.
     """
     from fulltextsearch_spark.operators.compressed_index import (  # noqa: PLC0415
         CompressedIndex,
@@ -92,26 +103,22 @@ def delete_docs_compressed(
         decompress_postings,
     )
 
-    logical = IndexTables(
-        postings=decompress_postings(cidx.postings, cidx.block_size, codec=cidx.codec),
-        doc_stats=cidx.doc_stats,
-        n_docs=cidx.n_docs,
-        avgdl=cidx.avgdl,
-        sharded=True,  # compressed rows may be doc-range sharded
+    d = deleted.select(F.col("doc_id").alias("_del")).distinct()
+    flat = (
+        decompress_postings(cidx.postings, cidx.block_size, codec=cidx.codec)
+        .select("term", F.explode("postings").alias("p"))
+        .select("p.doc_id", "term", "p.tf", "p.dl")
+        .join(F.broadcast(d), F.col("doc_id") == F.col("_del"), "left_anti")
     )
-    remaining = delete_docs(logical, deleted)
+    doc_stats, n_docs, avgdl = _surviving_stats(cidx.doc_stats, d)
     enc_cfg = EngineConfig(
         k1=cfg.k1, b=cfg.b, block_size=cfg.block_size, stem=cfg.stem
     )
-    flat = remaining.postings.select("term", F.explode("postings").alias("p")).select(
-        "p.doc_id", "term", "p.tf", "p.dl"
-    )
-    compressed = _merge_partials(_partial_rows(flat), remaining.avgdl, enc_cfg)
     return CompressedIndex(
-        postings=compressed,
-        doc_stats=remaining.doc_stats,
-        n_docs=remaining.n_docs,
-        avgdl=remaining.avgdl,
+        postings=_merge_partials(_partial_rows(flat), avgdl, enc_cfg),
+        doc_stats=doc_stats,
+        n_docs=n_docs,
+        avgdl=avgdl,
         block_size=enc_cfg.block_size,
         k1=enc_cfg.k1,
         b=enc_cfg.b,

@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.operators.index_build import IndexTables
 from fulltextsearch_spark.operators.query import (
+    _flat_postings,
     _per_term_score,
-    _postings_with_df,
     query_terms,
     topk,
 )
@@ -49,18 +49,7 @@ def search_dismax(
     if not (0.0 <= tie_breaker <= 1.0):
         raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
     q_terms = query_terms(queries, stem=cfg.stem)
-    flat = (
-        _postings_with_df(index, q_terms)
-        .select("query_id", "qtf", "df", F.explode("postings").alias("p"))
-        .select(
-            "query_id",
-            "qtf",
-            "df",
-            F.col("p.doc_id").alias("doc_id"),
-            F.col("p.tf").alias("tf"),
-            F.col("p.dl").alias("dl"),
-        )
-    )
+    flat = _flat_postings(index, q_terms)
     per_clause = _per_term_score(scoring, index, cfg)
     agg = (
         flat.withColumn("_s", per_clause)

@@ -19,8 +19,8 @@ Shard contract: shards carry GLOBAL doc_ids over disjoint ranges (the
 doc-partitioned deployment; ids overlap nothing), so
 ``N = max_i(n_docs_i)`` and ``sum_dl = sum_i(avgdl_i * n_docs_i)`` are
 exact under the engine's N = max_id + 1 semantics. Per-term df sums over
-shards (and over doc-range-sharded rows WITHIN a shard — a row's df is
-its slice count, so the plain sum is the term total either way).
+shards (each shard holds a term in one row whose df is that shard's
+count, so the plain sum is the global total).
 
 Scale shape: each shard contributes one broadcast-probed, column-pruned
 postings scan; nothing shuffles except the final per-(query, doc)
@@ -58,8 +58,7 @@ def search_federated(
     q_terms = query_terms(queries, stem=cfg.stem)
     qsel = q_terms.select("term").distinct()
 
-    # global df: skinny (term, df) projections, summed across shards (and
-    # across doc-range shard rows within a shard — both are slice counts)
+    # global df: skinny (term, df) projections, summed across shards
     df_parts = [
         ix.postings.select("term", "df").join(F.broadcast(qsel), "term")
         for ix in indexes

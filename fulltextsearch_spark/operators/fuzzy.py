@@ -37,13 +37,6 @@ __all__ = ["expand_fuzzy", "search_fuzzy", "autocorrect_terms", "search_autocorr
 ]
 
 
-def _dictionary(index: IndexTables) -> DataFrame:
-    d = index.postings.select("term", "df")
-    if index.sharded:
-        d = d.groupBy("term").agg(F.sum("df").alias("df"))
-    return d
-
-
 def expand_fuzzy(
     index: IndexTables,
     fuzzy_terms: DataFrame,
@@ -71,7 +64,7 @@ def expand_fuzzy(
         cond = (
             F.substring("term", 1, prefix_len) == F.substring("qterm", 1, prefix_len)
         ) & cond
-    cand = _dictionary(index).join(F.broadcast(q), on=cond, how="inner")
+    cand = index.postings.select("term", "df").join(F.broadcast(q), on=cond, how="inner")
     cand = cand.withColumn(
         "_edits", F.levenshtein(F.col("term"), F.col("qterm"))
     ).withColumn(
@@ -127,7 +120,7 @@ def autocorrect_terms(
     :func:`expand_fuzzy` (length band + broadcast query side — the skinny
     dictionary is probed, never shuffled).
     """
-    d = _dictionary(index)
+    d = index.postings.select("term", "df")
     in_dict = slots.join(
         d.select(F.col("term"), F.lit(1).alias("_hit")), "term", "left"
     )

@@ -38,11 +38,18 @@ from pyspark.storagelevel import StorageLevel
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.functions.tokenizer import term_counts_batch
 from fulltextsearch_spark.operators.compressed_index import (
+    CompressedIndex,
     build_compressed_index,
     decompress_postings,
 )
 
-__all__ = ["IndexTables", "build_index", "doc_term_frequencies", "index_stats"]
+__all__ = [
+    "IndexTables",
+    "build_index",
+    "doc_term_frequencies",
+    "index_stats",
+    "logical_index",
+]
 
 
 @dataclass
@@ -51,23 +58,19 @@ class IndexTables:
 
     postings: (term STRING, df BIGINT,
                postings ARRAY<STRUCT<doc_id BIGINT, tf BIGINT, dl BIGINT>>)
-              sorted by doc_id ascending; dl denormalized into the posting so
-              the query path needs no doc_stats join.
+              exactly one row per term, sorted by doc_id ascending, ``df``
+              the term total; dl denormalized into the posting so the query
+              path needs no doc_stats join.
     doc_stats: (doc_id BIGINT, dl BIGINT) — one row per document, dl=0 kept.
 
-    ``sharded`` marks postings that may carry one term across several
-    doc-range rows (``cfg.shard_postings``, e.g. a decompressed compressed
-    index): each row's ``df`` is then the per-slice count and scoring must
-    aggregate the term total. :func:`build_index` always produces one row per
-    term, so the query path skips that aggregation unless the constructor
-    says otherwise.
+    Built by :func:`build_index` or, from an existing compressed index, by
+    :func:`logical_index`.
     """
 
     postings: DataFrame
     doc_stats: DataFrame
     n_docs: int
     avgdl: float
-    sharded: bool = False
 
 
 def _tokenized(docs: DataFrame, text_col: str, stem: bool) -> DataFrame:
@@ -135,8 +138,8 @@ def build_index(
     compressed partials) followed by one vectorized
     :func:`~fulltextsearch_spark.operators.compressed_index.
     decompress_postings`. The build runs without ``cfg.shard_postings`` so
-    every term is one row (``sharded=False``). ``doc_stats`` (dl=0 docs
-    kept), ``n_docs`` and ``avgdl`` come from the compressed build.
+    every term is one row and the decode needs no regroup. ``doc_stats``
+    (dl=0 docs kept), ``n_docs`` and ``avgdl`` come from the compressed build.
     ``persist`` caches the decoded postings (MEMORY_AND_DISK) so query
     batches do not decode again; the on-disk form is the compressed index
     (``save_compressed_index``).
@@ -152,6 +155,26 @@ def build_index(
     )
 
 
+def logical_index(cidx: CompressedIndex) -> IndexTables:
+    """The logical index of a compressed index (built or loaded).
+
+    The one place that knows a compressed term may span several rows
+    (``cfg.shard_postings``): the decoded rows regroup per term, ``df``
+    sums the per-row counts and the postings merge into one doc_id-sorted
+    array. A term's rows hold disjoint doc sets, but not disjoint doc
+    ranges (each row is a run of map-side partials), hence the sort.
+    Corpus stats and ``doc_stats`` carry over from ``cidx``.
+    """
+    rows = decompress_postings(cidx.postings, cidx.block_size, cidx.codec)
+    postings = rows.groupBy("term").agg(
+        F.sum("df").alias("df"),
+        F.sort_array(F.flatten(F.collect_list("postings"))).alias("postings"),
+    )
+    return IndexTables(
+        postings=postings, doc_stats=cidx.doc_stats, n_docs=cidx.n_docs, avgdl=cidx.avgdl
+    )
+
+
 def index_stats(index: IndexTables) -> DataFrame:
     """One-row index shape/footprint summary (the queryable analogue of the
     reference's footprint API, fts_engine.hpp:50-60 — byte sizes on disk are
@@ -159,16 +182,10 @@ def index_stats(index: IndexTables) -> DataFrame:
     vocabulary size, total postings, head-term df, corpus scalars. One
     skinny aggregate over (term, df) — posting arrays are pruned away.
     """
-    # aggregate per term first: a doc-range-sharded index carries a head term
-    # as several rows whose df is the per-slice count — term totals need the
-    # sum, and max_df must be the max of totals, not of slices
-    per_term = (
-        index.postings.select("term", "df").groupBy("term").agg(F.sum("df").alias("_df"))
-    )
-    agg = per_term.agg(
+    agg = index.postings.agg(
         F.count("*").cast("long").alias("n_terms"),
-        F.sum("_df").cast("long").alias("total_postings"),
-        F.max("_df").cast("long").alias("max_df"),
+        F.sum("df").cast("long").alias("total_postings"),
+        F.max("df").cast("long").alias("max_df"),
     )
     return agg.select(
         "n_terms",

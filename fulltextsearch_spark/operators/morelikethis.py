@@ -63,12 +63,7 @@ def seed_query_terms(
     seed_docs = corpus.filter(F.col("doc_id").isin(ids))  # pushed-down IN filter
     seed_tf = doc_term_frequencies(seed_docs, stem=stem)  # (doc_id, term, tf)
 
-    df_tbl = index.postings.select("term", "df")
-    if index.sharded:
-        # doc-range-sharded head terms carry per-slice df per row; weights
-        # need the term total (same fix as vsm._term_total_postings)
-        df_tbl = df_tbl.groupBy("term").agg(F.sum("df").alias("df"))
-    with_df = df_tbl.join(F.broadcast(seed_tf), "term")
+    with_df = index.postings.select("term", "df").join(F.broadcast(seed_tf), "term")
 
     dl = F.sum("tf").over(Window.partitionBy("doc_id")).cast("double")
     w = (F.col("tf").cast("double") / dl) * idf_col(

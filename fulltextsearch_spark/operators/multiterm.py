@@ -22,7 +22,7 @@ Pattern languages:
 
 Scale shape: expansion touches only the skinny ``(term, df)`` projection of
 the postings — column pruning keeps posting arrays out of the dictionary
-scan, and a doc-range-sharded index collapses to distinct terms first. The
+scan, and each term is one row, so the dictionary is the projection. The
 pattern table is tiny and **broadcast**; LIKE/RLIKE against a column
 pattern is a non-equi predicate, so the join is a broadcast nested-loop
 over the dictionary — one map-side pass (a 10^12-doc corpus's dictionary is
@@ -58,14 +58,6 @@ def wildcard_to_like(pattern_col) -> F.Column:
     return F.translate(esc, "*?", "%_")
 
 
-def _dictionary(index: IndexTables) -> DataFrame:
-    """Distinct vocabulary with term-total df — skinny projection only."""
-    d = index.postings.select("term", "df")
-    if index.sharded:
-        d = d.groupBy("term").agg(F.sum("df").alias("df"))
-    return d
-
-
 def expand_patterns(
     index: IndexTables,
     patterns: DataFrame,
@@ -90,7 +82,7 @@ def expand_patterns(
         )
     else:
         raise ValueError(f"unknown syntax {syntax!r} (use 'wildcard' or 'regexp')")
-    cand = _dictionary(index).join(F.broadcast(pats), cond, "inner")
+    cand = index.postings.select("term", "df").join(F.broadcast(pats), cond, "inner")
     if max_expansions is not None:
         w = Window.partitionBy("query_id", "pattern").orderBy(
             F.desc("df"), F.asc("term")
@@ -188,7 +180,7 @@ def build_term_trigrams(index: IndexTables) -> DataFrame:
     """(tri, term) — character-trigram posting map over the vocabulary, the
     build artifact of trigram-accelerated regex search (persist next to
     the index like champions/VSM norms). ~(len-2) rows per term."""
-    d = _dictionary(index).select("term")
+    d = index.postings.select("term")
     idxs = F.sequence(F.lit(1), F.greatest(F.length("term") - 2, F.lit(0)))
     return (
         d.where(F.length("term") >= 3)
@@ -248,14 +240,14 @@ def search_regexp_trigram(
             .join(F.broadcast(n_req), ["query_id", "pattern"])
             .where(F.col("_hit") == F.col("_n"))
             .where(F.expr("term RLIKE concat('^(?:', pattern, ')$')"))
-            .join(_dictionary(index), "term")
+            .join(index.postings.select("term", "df"), "term")
             .select("query_id", "pattern", "term", "df")
         )
         parts.append(cand)
     if fallback:
         fb_pats = spark.createDataFrame(fallback, ["query_id", "pattern"])
         cond = F.expr("term RLIKE _re")
-        fb = _dictionary(index).join(
+        fb = index.postings.select("term", "df").join(
             F.broadcast(
                 fb_pats.withColumn(
                     "_re", F.concat(F.lit("^(?:"), F.col("pattern"), F.lit(")$"))

@@ -54,34 +54,6 @@ def query_terms(queries: DataFrame, stem: bool = True) -> DataFrame:
     )
 
 
-def _postings_with_df(index: IndexTables, q_terms: DataFrame) -> DataFrame:
-    """Postings ⋈ broadcast query terms, with a CORRECT ``df`` column.
-
-    Shard-aware: a doc-range-sharded index (``index.sharded``, produced via
-    ``cfg.shard_postings`` + :func:`decompress_postings`) carries a head term
-    as several rows whose ``df`` is the per-row slice; idf needs the term
-    total. The totals come from a skinny (term, df) projection (column
-    pruning keeps the postings arrays out of this scan) aggregated only over
-    the broadcast query terms — never a window over rows carrying posting
-    arrays. On the common unsharded index (``build_index`` output) the row's
-    ``df`` IS the term total, so the extra scan + join are skipped entirely.
-    """
-    joined = index.postings.join(F.broadcast(q_terms), "term", "inner")
-    if index.sharded:
-        df_tot = (
-            index.postings.select("term", "df")
-            .join(F.broadcast(q_terms.select("term").distinct()), "term")
-            .groupBy("term")
-            .agg(F.sum("df").alias("_df_tot"))
-        )
-        joined = (
-            joined.drop("df")
-            .join(F.broadcast(df_tot), "term", "inner")
-            .withColumnRenamed("_df_tot", "df")
-        )
-    return joined
-
-
 def _per_term_score(scoring: str, index: IndexTables, cfg: EngineConfig):
     """Per-(term, doc) score Column over (tf, df, dl) — shared dispatch so
     the ranked path and explain() can never disagree on the arithmetic."""
@@ -102,10 +74,10 @@ def _per_term_score(scoring: str, index: IndexTables, cfg: EngineConfig):
 
 def _flat_postings(index: IndexTables, q_terms: DataFrame) -> DataFrame:
     """(query_id, qtf, df, doc_id, tf, dl) — the broadcast query probe
-    exploded to per-posting rows, df already shard-corrected. The single
-    source of the probe projection, shared by the exhaustive scorer, the
-    champion-list path, and the tuning sweep."""
-    return _postings_with_df(index, q_terms).select(
+    exploded to per-posting rows. The single source of the probe
+    projection, shared by the exhaustive scorer, the champion-list path,
+    and the tuning sweep."""
+    return index.postings.join(F.broadcast(q_terms), "term").select(
         "query_id",
         "qtf",
         "df",
@@ -129,18 +101,16 @@ def _scored_candidates(
 ) -> DataFrame:
     """(query_id, doc_id, score) — per-(query, doc) accumulated scores.
 
-    df resolution (incl. the sharded-index total) via
-    :func:`_postings_with_df`; scoring arithmetic via
-    :func:`_per_term_score` — both shared with :func:`explain_scores`.
+    The broadcast probe via :func:`_flat_postings`; scoring arithmetic via
+    :func:`_per_term_score`, shared with :func:`explain_scores`.
     """
     flat = _flat_postings(index, q_terms)
     per_term = _per_term_score(scoring, index, cfg)
     aggs = [F.sum("_s").alias("score")]
     if with_matches:
         # one flat row per matched (query term, doc) — postings carry each
-        # (term, doc) exactly once, and on a doc-range-sharded index a doc
-        # falls in exactly one shard of its term — so count(*) IS the number
-        # of distinct query terms the doc matched.
+        # (term, doc) exactly once — so count(*) IS the number of distinct
+        # query terms the doc matched.
         aggs.append(F.count(F.lit(1)).alias("n_matched"))
     return (
         flat.withColumn("_s", per_term * F.col("qtf").cast("double"))
@@ -190,11 +160,10 @@ def search_lm_dirichlet(
 
     Needs one statistic BM25 does not: the collection term frequency
     ``cf(t) = sum of tf over t's postings``. It is computed only for the
-    broadcast query terms — the semi-narrowed postings scan touches the
-    matched terms' rows alone (parquet row-group pruning on ``term``), the
-    per-row sum is an ``F.aggregate`` over the posting array (no explode),
-    and the groupBy collapses doc-range shards to the term total with
-    map-side combine. Corpus token count = ``avgdl * n_docs`` exactly (the
+    broadcast query terms — the probe touches the matched terms' rows alone
+    (parquet row-group pruning on ``term``) and the sum is an
+    ``F.aggregate`` over each term's one posting array (no explode, no
+    extra aggregate). Corpus token count = ``avgdl * n_docs`` exactly (the
     build defines avgdl = sum(dl)/N with N = max(doc_id)+1).
 
     Query-token multiplicity scales per-term scores exactly as the BM25 path
@@ -214,24 +183,11 @@ def search_lm_dirichlet(
 def _flat_with_cf(index: IndexTables, q_terms: DataFrame) -> DataFrame:
     """Exploded (query_id, qtf, cf, doc_id, tf, dl) rows for the language-
     model scorers: the BM25 probe plus the collection term frequency
-    ``cf(t)``, computed only for the broadcast query terms (semi-narrowed
-    postings scan, per-row F.aggregate over the array — no explode — and a
-    map-side-combined groupBy that collapses doc-range shards)."""
-    cf = (
-        index.postings.join(F.broadcast(q_terms.select("term").distinct()), "term")
-        .select(
-            "term",
-            F.aggregate(
-                "postings", F.lit(0).cast("long"), lambda acc, p: acc + p["tf"]
-            ).alias("_cf_row"),
-        )
-        .groupBy("term")
-        .agg(F.sum("_cf_row").alias("cf"))
-    )
+    ``cf(t)``, an F.aggregate over each matched term's posting array."""
+    cf = F.aggregate("postings", F.lit(0).cast("long"), lambda acc, p: acc + p["tf"])
     return (
         index.postings.join(F.broadcast(q_terms), "term")
-        .join(F.broadcast(cf), "term")
-        .select("query_id", "qtf", "cf", F.explode("postings").alias("p"))
+        .select("query_id", "qtf", cf.alias("cf"), F.explode("postings").alias("p"))
         .select(
             "query_id",
             "qtf",
@@ -326,7 +282,7 @@ def explain_scores(
     q_terms = query_terms(queries, stem=cfg.stem)
     top = search(index, queries, cfg, scoring=scoring, k=k)
     flat = (
-        _postings_with_df(index, q_terms)
+        index.postings.join(F.broadcast(q_terms), "term")
         .select(
             "query_id", "term", "qtf", "df", F.explode("postings").alias("p")
         )

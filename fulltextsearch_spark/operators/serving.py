@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
 from fulltextsearch_spark.functions.tokenizer import tokenize
-from fulltextsearch_spark.operators.compression import check_codec
+from fulltextsearch_spark.operators.compressed_index import _read_corpus_stats
 from fulltextsearch_spark.operators.wand import (
     _BLOCK_COLS,
     _ENC_COLS,
@@ -111,20 +111,7 @@ class QueryServer:
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "QueryServer":
-        stats_df = spark.read.parquet(f"{root}/corpus_stats")
-        stats = stats_df.collect()[0]
-        return cls(
-            spark=spark,
-            root=root,
-            n_docs=int(stats["n_docs"]),
-            avgdl=float(stats["avgdl"]),
-            block_size=int(stats["block_size"]),
-            k1=float(stats["k1"]),
-            b=float(stats["b"]),
-            codec=check_codec(
-                str(stats["codec"]) if "codec" in stats_df.columns else "varint"
-            ),
-        )
+        return cls(spark=spark, root=root, **_read_corpus_stats(spark, root))
 
     def search(
         self,

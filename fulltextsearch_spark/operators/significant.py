@@ -18,8 +18,8 @@ Scale shape: the foreground is ``|queries| x n_fg`` doc ids — tiny, always
 corpus — the analogue of ES reading the fg docs' term vectors), never from
 exploding the inverted index. Background ``df`` comes from the skinny
 ``(term, df)`` dictionary projection probed with the broadcast candidate
-terms (column pruning keeps posting arrays out of the scan; a doc-range-
-sharded index collapses per-row slices to term totals first). Total work is
+terms (column pruning keeps posting arrays out of the scan; each term is
+one row, so its ``df`` is the corpus total). Total work is
 O(foreground docs) + one dictionary probe — independent of corpus size
 beyond the probe, exactly what a 10^12-doc corpus needs.
 """
@@ -35,14 +35,6 @@ from fulltextsearch_spark.operators.index_build import IndexTables
 from fulltextsearch_spark.operators.query import search
 
 __all__ = ["significant_terms"]
-
-
-def _dictionary_df(index: IndexTables) -> DataFrame:
-    """(term, df) with term-total df on a sharded index."""
-    d = index.postings.select("term", "df")
-    if index.sharded:
-        d = d.groupBy("term").agg(F.sum("df").alias("df"))
-    return d
 
 
 def significant_terms(
@@ -78,7 +70,7 @@ def significant_terms(
     )
 
     cand_terms = fg_counts.select("term").distinct()
-    bg = _dictionary_df(index).join(F.broadcast(cand_terms), "term")
+    bg = index.postings.select("term", "df").join(F.broadcast(cand_terms), "term")
 
     n_docs = float(index.n_docs)
     scored = (

@@ -12,9 +12,8 @@ O(requested docs), not an index scan. Corpus statistics come from the
 posting table probed with the broadcast candidate-term set: ``df`` from the
 skinny ``(term, df)`` projection and ``ttf`` via ``F.aggregate`` over the
 posting array WITHOUT exploding it (the same semi-narrowed probe the
-LM-Dirichlet scorer uses, query.py:188-198) — parquet row-group pruning on
-``term`` touches only matched row groups, and doc-range shards collapse to
-term totals with map-side combine.
+LM-Dirichlet scorer uses) — parquet row-group pruning on ``term`` touches
+only matched row groups, and each term is one row, so nothing regroups.
 """
 
 from __future__ import annotations
@@ -51,17 +50,12 @@ def term_vectors(
     tf = toks.groupBy("doc_id", "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
 
     cand = tf.select("term").distinct()
-    stats = (
-        index.postings.join(F.broadcast(cand), "term")
-        .select(
-            "term",
-            "df",
-            F.aggregate(
-                "postings", F.lit(0).cast("long"), lambda acc, p: acc + p["tf"]
-            ).alias("_ttf_row"),
-        )
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("_ttf_row").alias("ttf"))
+    stats = index.postings.join(F.broadcast(cand), "term").select(
+        "term",
+        "df",
+        F.aggregate(
+            "postings", F.lit(0).cast("long"), lambda acc, p: acc + p["tf"]
+        ).alias("ttf"),
     )
     return tf.join(F.broadcast(stats), "term").select(
         "doc_id", "term", "tf", "dl", "df", "ttf"

@@ -45,25 +45,9 @@ def _idf(df_col, n_docs: int):
     return F.log((F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5) + 1.0)
 
 
-def _term_total_postings(index: IndexTables) -> DataFrame:
-    """Postings with ``df`` guaranteed to be the TERM total.
-
-    A doc-range-sharded index (``index.sharded``) carries a head term across
-    several rows whose ``df`` is the per-slice count; idf needs the total, so
-    re-aggregate from a skinny (term, df) projection and join it back. The
-    common unsharded index passes through untouched.
-    """
-    if not index.sharded:
-        return index.postings
-    df_tot = (
-        index.postings.select("term", "df").groupBy("term").agg(F.sum("df").alias("df"))
-    )
-    return index.postings.drop("df").join(df_tot, "term")
-
-
 def _flat_weights(index: IndexTables) -> DataFrame:
     """(term, df, doc_id, w) — tf-idf weight per posting."""
-    flat = _term_total_postings(index).select(
+    flat = index.postings.select(
         "term", "df", F.explode("postings").alias("p")
     ).select(
         "term",
@@ -119,10 +103,7 @@ def search_vsm(
         norms = doc_norms(index)
 
     q_terms = query_terms(queries, cfg.stem)
-    dft = index.postings.select("term", "df")
-    if index.sharded:
-        dft = dft.groupBy("term").agg(F.sum("df").alias("df"))
-    qw = q_terms.join(dft, "term").select(
+    qw = q_terms.join(index.postings.select("term", "df"), "term").select(
         "query_id",
         "term",
         F.col("df").alias("df_term"),
@@ -146,8 +127,6 @@ def _rank_weighted(
     # join BEFORE exploding: only the matched terms' posting arrays unnest
     # (a Generate never sees the unmatched corpus rows); the per-posting
     # weight math is identical to _flat_weights.
-    # df_term rides in on the broadcast query side, so sharded per-row df
-    # never reaches the weight math.
     matched = index.postings.join(F.broadcast(qw), "term").select(
         "query_id",
         "qw",
@@ -219,9 +198,6 @@ def search_rocchio(
         raise ValueError("fb_docs and fb_terms must be >= 1")
 
     dft = index.postings.select("term", "df")
-    if index.sharded:
-        dft = dft.groupBy("term").agg(F.sum("df").alias("df"))
-
     q_terms = query_terms(queries, cfg.stem)
     qw0 = q_terms.join(dft, "term").select(
         "query_id",

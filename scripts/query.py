@@ -34,11 +34,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from fulltextsearch_spark.config import EngineConfig
-    from fulltextsearch_spark.operators.compressed_index import (
-        decompress_postings,
-        load_compressed_index,
-    )
-    from fulltextsearch_spark.operators.index_build import IndexTables
+    from fulltextsearch_spark.operators.compressed_index import load_compressed_index
+    from fulltextsearch_spark.operators.index_build import logical_index
     from fulltextsearch_spark.operators.query import search
     from fulltextsearch_spark.operators.wand import search_wand
     from fulltextsearch_spark.session import get_spark
@@ -59,14 +56,7 @@ def main() -> None:
     if args.path == "wand":
         results = search_wand(cidx, queries, cfg, scoring=args.scoring)
     else:
-        logical = IndexTables(
-            postings=decompress_postings(cidx.postings, cidx.block_size, cidx.codec),
-            doc_stats=cidx.doc_stats,
-            n_docs=cidx.n_docs,
-            avgdl=cidx.avgdl,
-            sharded=True,
-        )
-        results = search(logical, queries, cfg, scoring=args.scoring)
+        results = search(logical_index(cidx), queries, cfg, scoring=args.scoring)
     rows = results.orderBy("query_id", "rank").collect()
     elapsed = time.perf_counter() - t0
 

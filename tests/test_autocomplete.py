@@ -1,4 +1,4 @@
-"""Prefix autocomplete: popularity ranking, determinism, sharded-df totals."""
+"""Prefix autocomplete: popularity ranking and determinism."""
 
 from __future__ import annotations
 

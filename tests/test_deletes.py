@@ -4,6 +4,8 @@ over the remaining (doc_id, text) rows with their original ids.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,23 +72,29 @@ def test_delete_noop_on_unknown_ids(spark, corpus):
 
 
 def test_delete_compressed_compaction(spark, corpus):
-    deleted = corpus.select("doc_id").filter(F.col("doc_id") % 5 == 0)
-    cidx = build_compressed_index(spark, corpus, CFG)
-    after = delete_docs_compressed(cidx, deleted, CFG)
-    rebuilt = build_compressed_index(
-        spark, corpus.filter(F.col("doc_id") % 5 != 0), CFG
-    )
-    assert after.n_docs == rebuilt.n_docs
-    assert after.avgdl == pytest.approx(rebuilt.avgdl, rel=1e-12)
-    qdf = spark.createDataFrame(QUERY_SET, ["query_id", "content"])
-    assert _rows(search_wand(after, qdf, CFG)) == _rows(search_wand(rebuilt, qdf, CFG))
-    # deleted docs truly gone from the compressed payload
+    """Holds for an unsharded build and for one whose head terms span
+    several rows (``shard_postings``)."""
     from fulltextsearch_spark.operators.compressed_index import decompress_postings
 
-    flat = decompress_postings(after.postings, after.block_size).select(
-        F.explode("postings.doc_id").alias("doc_id")
-    )
-    assert flat.filter(F.col("doc_id") % 5 == 0).count() == 0
+    deleted = corpus.select("doc_id").filter(F.col("doc_id") % 5 == 0)
+    qdf = spark.createDataFrame(QUERY_SET, ["query_id", "content"])
+    for cfg in (CFG, replace(CFG, shard_postings=40)):
+        cidx = build_compressed_index(spark, corpus, cfg)
+        if cfg.shard_postings:
+            per_term = cidx.postings.groupBy("term").count()
+            assert per_term.filter(F.col("count") > 1).count() > 0  # actually sharded
+        after = delete_docs_compressed(cidx, deleted, cfg)
+        rebuilt = build_compressed_index(
+            spark, corpus.filter(F.col("doc_id") % 5 != 0), cfg
+        )
+        assert after.n_docs == rebuilt.n_docs
+        assert after.avgdl == pytest.approx(rebuilt.avgdl, rel=1e-12)
+        assert _rows(search_wand(after, qdf, cfg)) == _rows(search_wand(rebuilt, qdf, cfg))
+        # deleted docs truly gone from the compressed payload
+        flat = decompress_postings(after.postings, after.block_size).select(
+            F.explode("postings.doc_id").alias("doc_id")
+        )
+        assert flat.filter(F.col("doc_id") % 5 == 0).count() == 0
 
 
 def test_upsert_equals_fresh_build_over_updated_corpus(spark):

@@ -117,6 +117,30 @@ def test_build_index_postings_are_the_compressed_build_decoded(spark, web_dir):
         assert banned not in plan, plan
 
 
+def test_compressed_delete_is_one_arrow_decode_and_repack(spark, web_dir, tmp_path):
+    """Compacting a compressed index decodes, drops and re-packs through
+    mapInArrow only: no pandas or row-Python stage and no collect_list
+    regroup of postings."""
+    import re
+
+    from fulltextsearch_spark.operators.compressed_index import (
+        load_compressed_index,
+        save_compressed_index,
+    )
+    from fulltextsearch_spark.operators.deletes import delete_docs_compressed
+
+    docs = assign_file_order_doc_ids(spark, web_dir, columns=["text"])
+    cfg = EngineConfig()
+    save_compressed_index(build_compressed_index(spark, docs, cfg), str(tmp_path / "idx"))
+    cidx = load_compressed_index(spark, str(tmp_path / "idx"))
+    deleted = spark.range(0, 200, 7).withColumnRenamed("id", "doc_id")
+    plan = _plan(delete_docs_compressed(cidx, deleted, cfg).postings)
+    python_stages = set(re.findall(r"\b\w*(?:Python|Pandas|InArrow)\w*\b", plan))
+    assert python_stages and python_stages <= {"MapInArrow", "PythonMapInArrow"}, plan
+    for banned in ("collect_list", "ObjectHashAggregate"):
+        assert banned not in plan, plan
+
+
 def test_wand_scoring_is_one_arrow_group_per_query(spark, web_dir, tmp_path):
     """Both Spark scoring paths (search_wand over a built index and
     QueryServer.search over a saved one) hand each query's posting rows to

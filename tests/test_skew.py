@@ -87,10 +87,10 @@ def test_sharded_head_term_rows_bounded(spark):
 
 def test_sharded_head_term_query_rank_identical(spark, tmp_path):
     """WAND over a sharded index and the exhaustive path over BOTH the
-    unsharded logical index and the decompressed sharded index agree, and
-    so do both QueryServer paths over the saved sharded index."""
+    unsharded logical index and the logical index of the sharded build
+    agree, and so do both QueryServer paths over the saved sharded index."""
     from fulltextsearch_spark.operators.compressed_index import save_compressed_index
-    from fulltextsearch_spark.operators.index_build import IndexTables
+    from fulltextsearch_spark.operators.index_build import logical_index
     from fulltextsearch_spark.operators.serving import QueryServer
 
     docs = _skew_corpus(spark)
@@ -107,15 +107,8 @@ def test_sharded_head_term_query_rank_identical(spark, tmp_path):
     wand = key(search_wand(cidx, qdf, cfg).collect())
     idx = build_index(spark, docs, cfg)
     ex = key(search(idx, qdf, cfg).collect())
-    # exhaustive over the SHARDED rows (multi-row terms, per-slice df)
-    sharded_logical = IndexTables(
-        postings=decompress_postings(cidx.postings, cidx.block_size),
-        doc_stats=cidx.doc_stats,
-        n_docs=cidx.n_docs,
-        avgdl=cidx.avgdl,
-        sharded=True,
-    )
-    ex_sharded = key(search(sharded_logical, qdf, cfg).collect())
+    # exhaustive over the sharded rows, regrouped to one row per term
+    ex_sharded = key(search(logical_index(cidx), qdf, cfg).collect())
     assert wand == ex == ex_sharded
     assert len(wand) == 20
     # served from disk: a head term's shard rows become several kernel
@@ -127,6 +120,52 @@ def test_sharded_head_term_query_rank_identical(spark, tmp_path):
     cols = ("query_id", "rank", "doc_id", "score")
     assert key(dict(zip(cols, r)) for r in server.search_local(queries, cfg)) == wand
     assert key(server.search(queries, cfg).collect()) == wand
+
+
+def test_logical_index_of_sharded_build_equals_build_index(spark, tmp_path):
+    """logical_index over a sharded compressed index, saved as
+    pfor and reloaded, is build_index's postings row for row, and the
+    operators that read df/postings off IndexTables (VSM, autocomplete,
+    champions) give the same rows over both."""
+    from fulltextsearch_spark.operators.autocomplete import autocomplete
+    from fulltextsearch_spark.operators.champions import build_champions
+    from fulltextsearch_spark.operators.compressed_index import (
+        load_compressed_index,
+        save_compressed_index,
+    )
+    from fulltextsearch_spark.operators.index_build import logical_index
+    from fulltextsearch_spark.operators.vsm import search_vsm
+
+    docs = _skew_corpus(spark)
+    cfg = EngineConfig(k=10, stem=False, block_size=4, shard_postings=256)
+    cidx = build_compressed_index(spark, docs, cfg)
+    assert cidx.postings.filter(F.col("term") == "common").count() > 1  # sharded
+    root = str(tmp_path / "pfor")
+    save_compressed_index(cidx, root, codec="pfor")
+    logical = logical_index(load_compressed_index(spark, root))
+    built = build_index(spark, docs, cfg)
+    assert (logical.n_docs, logical.avgdl) == (built.n_docs, built.avgdl)
+
+    def rows(df):
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in df.collect()
+        )
+
+    cols = ["term", "df", "postings"]
+    assert rows(logical.postings.select(cols)) == rows(built.postings.select(cols))
+    qdf = spark.createDataFrame(
+        [("q", "common tail5"), ("q2", "common common word3")],
+        ["query_id", "content"],
+    )
+    prefixes = spark.createDataFrame(
+        [("p", "c"), ("p2", "tail"), ("p3", "w")], ["query_id", "prefix"]
+    )
+    for op in (
+        lambda ix: search_vsm(ix, qdf, cfg),
+        lambda ix: autocomplete(ix, prefixes, k=3),
+        lambda ix: build_champions(ix, m=8, cfg=cfg),
+    ):
+        assert rows(op(logical)) == rows(op(built))
 
 
 def test_sharded_trigram_key_rows_bounded(spark):

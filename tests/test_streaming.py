@@ -12,11 +12,8 @@ import os
 import pytest
 
 from fulltextsearch_spark.config import EngineConfig
-from fulltextsearch_spark.operators.compressed_index import (
-    build_compressed_index,
-    decompress_postings,
-)
-from fulltextsearch_spark.operators.index_build import IndexTables
+from fulltextsearch_spark.operators.compressed_index import build_compressed_index
+from fulltextsearch_spark.operators.index_build import logical_index
 from fulltextsearch_spark.operators.query import search
 from fulltextsearch_spark.operators.wand import search_wand
 from fulltextsearch_spark.sources.webpages import QUERY_SET, WEBPAGES_SCHEMA, generate_webpages
@@ -112,12 +109,7 @@ def test_incremental_stream_and_merge(spark, setup):
     assert idx1.avgdl > idx0.avgdl  # stats moved -> carried bounds were scaled
 
     # WAND over v1 (carried + rebuilt rows) == exhaustive over the SAME index
-    logical = IndexTables(
-        postings=decompress_postings(idx1.postings, idx1.block_size),
-        doc_stats=idx1.doc_stats,
-        n_docs=idx1.n_docs,
-        avgdl=idx1.avgdl,
-    )
+    logical = logical_index(idx1)
     qdf = spark.createDataFrame(QUERY_SET, ["query_id", "content"])
     exhaustive = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
@@ -255,12 +247,7 @@ def test_refresh_with_changed_k1_forces_full_rebuild(spark, tmp_path):
     idx = load_current_index(spark, root)
     assert idx.k1 == 2.0 and idx.n_docs == 70
     # rank-identical vs exhaustive under the new parameters
-    logical = IndexTables(
-        postings=decompress_postings(idx.postings, idx.block_size),
-        doc_stats=idx.doc_stats,
-        n_docs=idx.n_docs,
-        avgdl=idx.avgdl,
-    )
+    logical = logical_index(idx)
     qdf = spark.createDataFrame(QUERY_SET[:4], ["query_id", "content"])
     exhaustive = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
@@ -308,12 +295,7 @@ def test_refresh_over_pfor_version_forces_full_rebuild(spark, tmp_path):
     idx = load_current_index(spark, root)
     assert idx.codec == "varint" and idx.n_docs == 70
     # rank-identical vs exhaustive scoring over the decompressed index
-    logical = IndexTables(
-        postings=decompress_postings(idx.postings, idx.block_size),
-        doc_stats=idx.doc_stats,
-        n_docs=idx.n_docs,
-        avgdl=idx.avgdl,
-    )
+    logical = logical_index(idx)
     qdf = spark.createDataFrame(QUERY_SET[:4], ["query_id", "content"])
     exhaustive = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
