@@ -109,9 +109,7 @@ def tokenize(text: str, do_stem: bool = True, memo: dict | None = None) -> list[
         if do_stem:
             cached = memo.get(tok)
             if cached is None:
-                cached = stem(tok)
-                memo[cached] = cached
-                memo[tok] = cached
+                cached = memo[tok] = stem(tok)
             out.append(cached)
         else:
             out.append(tok)
@@ -342,9 +340,7 @@ def term_counts_flat(
         if do_stem:
             s = memo.get(t)
             if s is None:
-                s = stem(t)
-                memo[t] = s
-                memo[s] = s
+                s = memo[t] = stem(t)
         else:
             s = t
         j = tid.get(s)

@@ -47,8 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fulltextsearch_spark.config import DEFAULT_CONFIG, EngineConfig
-from fulltextsearch_spark.functions.tokenizer import tokenize
-from fulltextsearch_spark.operators.compressed_index import _read_corpus_stats
+from fulltextsearch_spark.functions.tokenizer import _shared_memo, tokenize
+from fulltextsearch_spark.operators.compressed_index import _binary_parts, _read_corpus_stats
 from fulltextsearch_spark.operators.wand import (
     _BLOCK_COLS,
     _ENC_COLS,
@@ -59,6 +59,78 @@ from fulltextsearch_spark.operators.wand import (
 )
 
 __all__ = ["QueryServer"]
+
+# a row-cache entry is one tuple of these fields, in this order: codec, df,
+# count, then every enc cell and block array as owned bytes (block arrays
+# as _BLOCK_DTYPES). _entry() builds the kernel's entry dict from it on use.
+# Cold traffic leaves every fetched term cached, so entry size sets RSS
+# growth: a 12-key dict costs 464 B, and a 1-element array about three
+# times its bytes.
+_PLAIN_KEYS = ("codec", "df", "count", *_ENC_COLS)  # dict values as stored
+_ENTRY_KEYS = (*_PLAIN_KEYS, *_BLOCK_COLS)
+_BLOCK_DTYPES = tuple(np.float64 if c.startswith("block_max") else np.int64 for c in _BLOCK_COLS)
+
+
+def _cached(ent: dict) -> tuple:
+    """A :func:`kernel_entries` dict -> its row-cache tuple. Every cell is
+    copied out: a view would pin the whole fetched row group."""
+    return (
+        ent["codec"],
+        ent["df"],
+        ent["count"],
+        *(ent[c].tobytes() for c in _ENC_COLS),
+        *(ent[c].astype(dt, copy=False).tobytes() for c, dt in zip(_BLOCK_COLS, _BLOCK_DTYPES)),
+    )
+
+
+def _entry(base: tuple) -> dict:
+    """A row-cache tuple -> a fresh qtf-free kernel entry dict; the block
+    arrays are read-only views over the cached bytes."""
+    ent = dict(zip(_PLAIN_KEYS, base))
+    for c, dt, cell in zip(_BLOCK_COLS, _BLOCK_DTYPES, base[len(_PLAIN_KEYS) :]):
+        ent[c] = np.frombuffer(cell, dt)
+    return ent
+
+
+def _sorted_term_column(col) -> bool:
+    """True when a row group's term column is a null-free string column in
+    ascending UTF-8 byte order (Arrow compares strings bytewise), so that
+    :func:`_term_slices` may bisect it."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    if not pa.types.is_string(col.type) or col.null_count:
+        return False
+    return len(col) < 2 or pc.all(pc.less_equal(col[:-1], col[1:])).as_py()
+
+
+def _term_slices(tbl, terms: list[str]) -> list:
+    """Row slices of ``tbl``, whose term column is sorted (see
+    :func:`_sorted_term_column`), holding exactly the rows of ``terms``
+    (sorted), in row order. Bisects the column's UTF-8 bytes through its
+    offsets: Unicode code-point order is UTF-8 byte order, so Python's
+    ``str`` order agrees with the writer's sort."""
+    import bisect  # noqa: PLC0415
+
+    col = tbl.column("term")
+    off, data = _binary_parts(col.chunk(0) if col.num_chunks == 1 else col.combine_chunks())
+    off = memoryview(off)  # Python ints per index, no per-row conversion
+    data = data.tobytes()
+    rows = range(len(tbl))
+
+    def key(i: int) -> bytes:
+        return data[off[i] : off[i + 1]]
+
+    out = []
+    lo = 0
+    for t in terms:
+        tb = t.encode()
+        lo = bisect.bisect_left(rows, tb, lo, key=key)
+        hi = bisect.bisect_right(rows, tb, lo, key=key)
+        if hi > lo:
+            out.append(tbl.slice(lo, hi - lo))
+        lo = hi
+    return out
 
 
 @dataclass
@@ -81,9 +153,10 @@ class QueryServer:
     # never pay a full decode) and attached to the kernel entries, where
     # block "decode" becomes slicing so block-max pruning keeps skipping.
     decoded_cache_mb: int = 256
-    # lazy fast-path state: per-row-group (path, rg, term_min, term_max,
-    # kernel-column bytes) manifest from the parquet footers + open file
-    # handles
+    # lazy fast-path state: per-row-group [path, rg, term_min, term_max,
+    # kernel-column bytes, term column sorted] manifest from the parquet
+    # footers (sortedness is None until the row group's first read) +
+    # memory-mapped file handles
     _rg_manifest: list | None = field(default=None, repr=False)
     _pf_cache: dict = field(default_factory=dict, repr=False)
     # search_local fetch counters (read-only for callers): row groups read /
@@ -102,9 +175,11 @@ class QueryServer:
     _dec_seen: dict = field(default_factory=dict, repr=False)
     _dec_bytes: int = field(default=0, repr=False)
     # kernel-ready matched-rows cache for search_local: term -> list of
-    # per-shard base entry dicts (owned copies of qtf-free kernel_entries).
-    # Without it every WARM batch re-reads the term's row groups and
-    # rebuilds its entries. LRU-bounded like _dec_cache.
+    # per-shard base entries, each one compact _ENTRY_KEYS tuple of owned
+    # bytes (see _cached; [] for a term the index lacks). Without it every
+    # WARM batch re-reads the term's row groups and rebuilds its entries.
+    # LRU-bounded like _dec_cache; the ledger counts a 512 B floor plus the
+    # entries' array bytes per term, about a quarter of a cached term's RSS.
     row_cache_mb: int = 256
     _row_cache: dict = field(default_factory=dict, repr=False)  # term -> (rows, nbytes)
     _row_bytes: int = field(default=0, repr=False)
@@ -130,8 +205,9 @@ class QueryServer:
                 f"has (k1={cfg.k1}, b={cfg.b}) — rebuild or re-encode"
             )
         rows = []
+        memo = _shared_memo()
         for qid, content in queries:
-            for term, qtf in Counter(tokenize(content, cfg.stem)).items():
+            for term, qtf in Counter(tokenize(content, cfg.stem, memo)).items():
                 rows.append((qid, term, qtf))
         terms = sorted({t for _, t, _ in rows})
         q_df = self.spark.createDataFrame(
@@ -171,14 +247,15 @@ class QueryServer:
         return root.removeprefix("file://") + "/postings"
 
     def _ensure_manifest(self) -> None:
-        """One footer-metadata pass over the postings files: per row group,
-        record the term column's min/max statistics and the compressed
-        bytes of the kernel columns. The writer sorts the whole table by
-        term in small row groups, so the ranges are disjoint and each term
-        falls in one of them (or two, when a sharded term's rows straddle a
-        boundary); they prune exactly like the Spark scan's PushedFilters
-        do. A hash-partitioned index (older writers) still serves
-        correctly, its overlapping ranges just prune little. O(row groups)
+        """One footer-metadata pass over the postings files, opened
+        memory-mapped so a row-group read decodes straight from the page
+        cache. Per row group, record the term column's min/max statistics
+        and the compressed bytes of the kernel columns. The writer sorts
+        the whole table by term in small row groups, so the ranges are
+        disjoint and each term falls in one of them (or two, when a sharded
+        term's rows straddle a boundary); they prune exactly like the Spark
+        scan's PushedFilters do. A hash-partitioned index (older writers) still
+        serves correctly, its overlapping ranges just prune little. O(row groups)
         driver memory — a few dozen bytes per ~512 KB of index."""
         if self._rg_manifest is not None:
             return
@@ -188,12 +265,12 @@ class QueryServer:
 
         pdir = self._local_postings_dir()
         kernel_cols = set(_KERNEL_COLS)
-        manifest: list[tuple[str, int, str | None, str | None, int]] = []
+        manifest: list[list] = []
         for fn in sorted(os.listdir(pdir)):
             if not fn.endswith(".parquet"):
                 continue
             path = os.path.join(pdir, fn)
-            pf = pq.ParquetFile(path)
+            pf = pq.ParquetFile(path, memory_map=True)
             self._pf_cache[path] = pf
             # physical (leaf) column index of 'term' — list columns flatten
             # into multiple leaves, so match on the dotted path
@@ -211,22 +288,27 @@ class QueryServer:
                     for c in range(md.num_columns)
                     if md.column(c).path_in_schema.split(".")[0] in kernel_cols
                 )
-                manifest.append((path, rg, mn, mx, nbytes))
+                manifest.append([path, rg, mn, mx, nbytes, None])
         self._rg_manifest = manifest
 
-    def _matched_rows(self, terms: list[str]) -> dict[str, list[dict]]:
-        """Kernel-ready base entries (qtf-free) for the given terms, grouped
-        by term; ``terms`` must be sorted. Warm terms come straight from the
-        LRU row cache; only the misses pay a parquet pass — read ONLY the
-        row groups whose [min, max] term range can contain a missing term,
-        filter to exact matches, build their entries with one
-        :func:`kernel_entries` call, cache. Updates :attr:`counters`."""
+    def _matched_rows(self, terms: list[str]) -> dict[str, list[tuple]]:
+        """Kernel-ready base entries (qtf-free :data:`_ENTRY_KEYS` tuples)
+        for the given terms, grouped by term; ``terms`` must be sorted. Warm
+        terms come straight from the LRU row cache; only the misses pay a
+        parquet pass — read ONLY the row groups whose [min, max] term range
+        can contain a missing term, cut each term's rows out of them, build
+        their entries with one :func:`kernel_entries` call, cache. A row
+        group whose term column is sorted (checked on its first read, every
+        ``save_compressed_index`` row group is) gives each term's rows as
+        one bisected ``Table.slice``, with no pass over its other rows; any
+        other row group is hash-filtered (``pc.is_in``). Updates
+        :attr:`counters`."""
         import bisect  # noqa: PLC0415
 
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.compute as pc  # noqa: PLC0415
 
-        by_term: dict[str, list[dict]] = {}
+        by_term: dict[str, list[tuple]] = {}
         missing: list[str] = []
         for t in terms:
             hit = self._row_cache.get(t)
@@ -239,21 +321,34 @@ class QueryServer:
             return by_term
 
         counters = self.counters
-        term_set = pa.array(missing, type=pa.string())
         parts = []
-        for path, rg, mn, mx, nbytes in self._rg_manifest:
+        for entry in self._rg_manifest:
+            path, rg, mn, mx, nbytes, is_sorted = entry
+            in_range = missing
             if mn is not None and mx is not None:
                 i = bisect.bisect_left(missing, mn)
-                if i >= len(missing) or missing[i] > mx:
+                j = bisect.bisect_right(missing, mx, i)
+                if i == j:
                     counters["row_groups_pruned"] += 1
                     continue  # no missing term inside this row group's range
+                in_range = missing[i:j]
             counters["row_groups_read"] += 1
             counters["bytes_read"] += nbytes
             tbl = self._pf_cache[path].read_row_group(rg, columns=_KERNEL_COLS)
-            parts.append(tbl.filter(pc.is_in(tbl.column("term"), value_set=term_set)))
+            if is_sorted is None:
+                is_sorted = entry[5] = _sorted_term_column(tbl.column("term"))
+            if is_sorted:
+                # several slices: one copy now, so that a call fetching many
+                # row groups (prewarm) does not hold every one of them
+                if slices := _term_slices(tbl, in_range):
+                    parts.append(pa.concat_tables(slices).combine_chunks())
+            else:
+                keep = pc.is_in(tbl.column("term"), value_set=pa.array(in_range, pa.string()))
+                parts.append(tbl.filter(keep))
         fetched: dict[str, list[dict]] = {}
         if parts:
-            # one chunk: one batch of per-column conversions in kernel_entries
+            # one chunk: kernel_entries' per-batch setup costs more than
+            # copying a few small slices (measured 2.4x on 4-slice calls)
             tbl = pa.concat_tables(parts).combine_chunks()
             for t, ent in zip(
                 tbl.column("term").to_numpy(), kernel_entries(tbl, self.codec)
@@ -261,27 +356,17 @@ class QueryServer:
                 fetched.setdefault(t, []).append(ent)
         budget = self.row_cache_mb * (1 << 20)
         for t in missing:
-            rows = fetched.get(t, [])
-            by_term[t] = rows
+            ents = fetched.get(t, [])
             # 512 B/term floor: dict+key overhead, and it makes NEGATIVE
             # entries (queried-but-absent terms — the typo/rare heavy tail)
             # count toward the budget so the LRU eviction bounds them too
             nb = 512 + sum(
-                v.nbytes for ent in rows for v in ent.values() if isinstance(v, np.ndarray)
+                v.nbytes for ent in ents for v in ent.values() if isinstance(v, np.ndarray)
             )
+            rows = by_term[t] = [_cached(ent) for ent in ents]
             if nb > budget:
                 counters["row_cache_oversize"] += 1
                 continue
-            # cache owned copies (enc cells as bytes): a view pins the whole
-            # fetched Arrow buffer and costs more Python objects per entry
-            rows = [
-                {
-                    **ent,
-                    **{c: ent[c].tobytes() for c in _ENC_COLS},
-                    **{c: ent[c].copy() for c in _BLOCK_COLS},
-                }
-                for ent in rows
-            ]
             while self._row_bytes + nb > budget and self._row_cache:
                 oldest = next(iter(self._row_cache))
                 self._row_bytes -= self._row_cache.pop(oldest)[1]
@@ -350,12 +435,9 @@ class QueryServer:
         LRU-bounded by the same byte budgets."""
         self._ensure_manifest()
         if queries_or_terms and isinstance(queries_or_terms[0], tuple):
+            memo = _shared_memo()
             terms = sorted(
-                {
-                    t
-                    for _, content in queries_or_terms
-                    for t in tokenize(content, cfg.stem)
-                }
+                {t for _, content in queries_or_terms for t in tokenize(content, cfg.stem, memo)}
             )
         else:
             terms = sorted(set(queries_or_terms))
@@ -365,7 +447,7 @@ class QueryServer:
         for term, trows in by_term.items():
             for ri, base in enumerate(trows):
                 self._dec_seen[(term, ri)] = 1  # next sight is "second"
-                self._attach_decoded(term, ri, dict(base))
+                self._attach_decoded(term, ri, _entry(base))
         return sum(1 for t in terms if t in self._row_cache)
 
     def search_local(
@@ -396,8 +478,9 @@ class QueryServer:
                 f"has (k1={cfg.k1}, b={cfg.b}) — rebuild or re-encode"
             )
         self._ensure_manifest()
+        memo = _shared_memo()
         parsed = [
-            (qid, Counter(tokenize(content, cfg.stem))) for qid, content in queries
+            (qid, Counter(tokenize(content, cfg.stem, memo))) for qid, content in queries
         ]
         terms = sorted({t for _, c in parsed for t in c})
         if not terms:
@@ -414,10 +497,10 @@ class QueryServer:
                 if not trows:
                     continue  # find() miss — term drops out
                 for ri, base in enumerate(trows):  # one entry per shard row
-                    # shallow copy of the cached kernel-ready base: the
+                    # a fresh dict over the cached kernel-ready base: the
                     # encoded bytes / block arrays are shared (read-only in
                     # the kernel), only qtf and the attached decode differ
-                    ent = dict(base)
+                    ent = _entry(base)
                     ent["qtf"] = int(qtf)
                     entries.append(ent)
                     self._attach_decoded(term, ri, ent)

@@ -481,3 +481,95 @@ def test_search_local_overlapping_ranges_still_identical(spark, index_root, tmp_
     server = QueryServer.load(spark, old)
     assert server.search_local(QUERY_SET, CFG) == want and want
     assert server.counters["row_groups_read"] > 0
+
+
+def _postings_rewritten(index_root, root, tables):
+    """A copy of ``index_root`` whose postings are one parquet file holding
+    the Arrow ``tables`` in order, one row group each."""
+    import shutil
+
+    for table in ("doc_stats", "corpus_stats"):
+        shutil.copytree(os.path.join(index_root, table), os.path.join(root, table))
+    os.makedirs(os.path.join(root, "postings"))
+    with pq.ParquetWriter(os.path.join(root, "postings", "part-0.parquet"), tables[0].schema) as w:
+        for tbl in tables:
+            w.write_table(tbl, row_group_size=len(tbl))
+    return root
+
+
+def _sorted_flags(server):
+    """Per row group: was its term column found sorted on its first read
+    (None: never read)."""
+    return [entry[5] for entry in server._rg_manifest]
+
+
+def test_search_local_shard_rows_straddling_row_groups(spark, tmp_path):
+    """A sharded head term whose rows straddle a row-group boundary comes
+    back from both row groups: search_local equals search_wand, and both
+    row groups are read (and only they)."""
+    from tests.test_skew import _skew_corpus
+
+    cfg = EngineConfig(k=10, stem=False, block_size=4, shard_postings=256)
+    cidx = build_compressed_index(spark, _skew_corpus(spark), cfg)
+    saved = str(tmp_path / "sharded")
+    save_compressed_index(cidx, saved)
+    tbl = pq.read_table(os.path.join(saved, "postings")).sort_by("term")
+    terms = tbl.column("term").to_pylist()
+    first, last = terms.index("common"), len(terms) - terms[::-1].index("common")
+    assert last - first > 2  # sharded into several rows
+    cut = (first + last) // 2  # between two of the head term's rows
+    root = _postings_rewritten(
+        saved,
+        str(tmp_path / "straddle"),
+        [tbl.slice(0, cut), tbl.slice(cut, last + 3 - cut), tbl.slice(last + 3)],
+    )
+
+    queries = [("q", "common tail5"), ("q2", "common common word3"), ("q3", "common")]
+    qdf = spark.createDataFrame(queries, ["query_id", "content"])
+    want = _key(search_wand(cidx, qdf, cfg).collect())
+    server = QueryServer.load(spark, root)
+    got = sorted((q, r, d, round(s, 9)) for q, r, d, s in server.search_local(queries, cfg))
+    assert got == want and want
+
+    head = QueryServer.load(spark, root)
+    assert sorted(head.search_local([("q3", "common")], cfg)) == sorted(
+        r for r in server.search_local(queries, cfg) if r[0] == "q3"
+    )
+    assert head.counters["row_groups_read"] == 2
+    assert head.counters["row_groups_pruned"] == 1
+    assert _sorted_flags(head) == [True, True, None]  # both sliced
+
+
+def test_search_local_unsorted_row_group_is_filtered(spark, index_root, tmp_path):
+    """A row group whose term column is not sorted (a hand-written or old
+    layout) is hash-filtered instead of bisected, and answers QUERY_SET
+    exactly as the sorted index does."""
+    import numpy as np
+
+    tbl = pq.read_table(os.path.join(index_root, "postings"))
+    shuffled = tbl.take(np.random.default_rng(7).permutation(len(tbl)))
+    root = _postings_rewritten(index_root, str(tmp_path / "shuffled"), [shuffled])
+
+    want = QueryServer.load(spark, index_root).search_local(QUERY_SET, CFG)
+    server = QueryServer.load(spark, root)
+    assert server.search_local(QUERY_SET, CFG) == want and want
+    assert server.counters["row_groups_read"] == 1
+    assert _sorted_flags(server) == [False]
+
+
+def test_row_cache_entries_own_their_bytes(spark, index_root):
+    """Cached row entries hold owned copies: every enc cell and block array
+    is ``bytes``, and the kernel entries built from them view those bytes.
+    A view into the fetched row group would pin all of it."""
+    from fulltextsearch_spark.operators.serving import _ENTRY_KEYS, _entry
+    from fulltextsearch_spark.operators.wand import _BLOCK_COLS, _ENC_COLS
+
+    server = QueryServer.load(spark, index_root)
+    assert server.search_local(QUERY_SET, CFG)
+    cached = [base for rows, _ in server._row_cache.values() for base in rows]
+    assert cached
+    for base in cached:
+        cells = dict(zip(_ENTRY_KEYS, base, strict=True))
+        assert all(isinstance(cells[c], bytes) for c in (*_ENC_COLS, *_BLOCK_COLS))
+        ent = _entry(base)
+        assert all(ent[c].base is cells[c] for c in _BLOCK_COLS)

@@ -226,6 +226,46 @@ def test_term_counts_flat_order_term_equivalent():
             assert ud_b[i] > ud_b[i - 1]
 
 
+def test_stemming_is_per_token_not_idempotent():
+    """Porter2 is not idempotent: stem("significant") is "signific", whose
+    own stem is "signif". Each token is stemmed on its own, as the reference
+    does, so a stem seen earlier never stands in for a raw token."""
+    from fulltextsearch_spark.functions.porter2 import stem
+
+    assert stem("significant") == "signific" and stem("signific") == "signif"
+    assert tokenize("significant signific") == ["signific", "signif"]
+    assert tokenize("signific") == ["signif"]
+
+
+def test_tokenize_with_warm_memo_equals_fresh():
+    """A memo that has already seen other text changes no answer."""
+    text = "signific significant generalization general organ organization"
+    memo: dict = {}
+    tokenize("significant generalization organization the cats", memo=memo)
+    assert tokenize(text, memo=memo) == tokenize(text, memo={})
+    for tok, stemmed in memo.items():
+        assert tokenize(tok, memo={}) == [stemmed]
+
+
+def test_term_counts_flat_independent_of_batch_order():
+    """Two batches through one stem memo give the same terms whichever
+    goes first."""
+    from fulltextsearch_spark.functions.tokenizer import term_counts_flat
+
+    a, b = ["significant results"], ["signific result"]
+
+    def terms(first, second):
+        memo: dict = {}
+        t1 = term_counts_flat(first, True, memo)[1].to_pylist()
+        t2 = term_counts_flat(second, True, memo)[1].to_pylist()
+        return t1, t2
+
+    a_first, b_second = terms(a, b)
+    b_first, a_second = terms(b, a)
+    assert a_first == a_second == ["result", "signific"]
+    assert b_first == b_second == ["result", "signif"]
+
+
 def test_varint_nbytes_thresholds():
     """Exact LEB128 widths at every 2^(7k) boundary (the searchsorted bins)."""
     import numpy as np
